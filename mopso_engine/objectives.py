@@ -41,7 +41,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from mopso_engine.assign import _distances
+from mopso_engine.assign import _dist_from_product, _distances
 
 #: cap on the scratch distance-matrix cells per block for the BLAS/gemm
 #: path (262_144 cells = 2 MB of float64): sized to stay CACHE-resident
@@ -50,9 +50,12 @@ from mopso_engine.assign import _distances
 #: workers the aggregate traffic saturated memory bandwidth — measured on
 #: the 600k-row lineitem fit layout (64 partitions × 9.4k rows, d=4):
 #: 32 MB blocks → 22.7s wall / 558 task-core-s; 2 MB → 6.8s / 155; the
-#: same kernel single-task isolated runs 2.0s either way, so the delta
-#: is pure concurrent cache/bandwidth contention, and block size does not
-#: change any value (per-row distances and top-L are row-independent).
+#: same kernel single-task isolated runs 2.0s either way. NOTE the
+#: row-block rule is part of the neighbor table's BYTES, as
+#: ``_REDUCE_BLOCK_ROWS`` is part of the fitness sums: OpenBLAS rounds the
+#: ``2x·y`` product differently for different operand shapes (a 1-row
+#: block goes through gemv; at d ≥ 8 any other row subset can differ
+#: too), and a changed distance can change a rank at a tie.
 _BLOCK_CELLS = 262_144
 #: block cap for the exact Σ(x−y)² path (dist_fn given): that formula
 #: materializes a (block, n_ref, d) DIFFERENCE tensor, so cells here are
@@ -61,6 +64,94 @@ _BLOCK_CELLS = 262_144
 #: wide-d reference sets; the tensor is touched once, so the bandwidth
 #: argument above does not apply to it.
 _BLOCK_CELLS_EXACT = 4_000_000
+_EPS = np.finfo(np.float64).eps
+_TINY = np.finfo(np.float64).tiny
+
+
+def _mask_self(d: np.ndarray, self_pos: np.ndarray) -> np.ndarray:
+    """Full-width (rows × |ref|) ``d`` with each row's own column (its
+    ref position, −1 when foreign to ref) set to inf."""
+    hit = self_pos >= 0
+    d[np.flatnonzero(hit), self_pos[hit]] = np.inf
+    return d
+
+
+def _select_topl(d: np.ndarray, col_ids: np.ndarray, l_eff: int):
+    """Columns of the l_eff smallest entries of each row of ``d`` by
+    (dist, id) — ``col_ids`` is the id of each cell — in that order,
+    with their distances. ``argpartition`` at ranks l_eff−1 and l_eff
+    finds the rows whose L-th and (L+1)-th distances tie; only those
+    rows pay for a full (dist, id) sort, so the neighbor SET at a
+    boundary tie is the one ``knn_pairs_crossjoin``'s row_number picks,
+    not argpartition's internal order. Needs l_eff < d.shape[1]."""
+    part = np.argpartition(d, (l_eff - 1, l_eff), axis=1)
+    kth = np.take_along_axis(d, part[:, l_eff - 1 : l_eff + 1], axis=1)
+    part = part[:, :l_eff]
+    tied = np.flatnonzero(kth[:, 0] == kth[:, 1])
+    if len(tied):
+        part[tied] = np.lexsort((col_ids[tied], d[tied]), axis=1)[:, :l_eff]
+    pd_d = np.take_along_axis(d, part, axis=1)
+    order = np.lexsort((np.take_along_axis(col_ids, part, axis=1), pd_d), axis=1)
+    return np.take_along_axis(part, order, axis=1), np.take_along_axis(pd_d, order, axis=1)
+
+
+class _ProjectionWindows:
+    """Exact candidate windows for the gemm path of ``_topl_blocked``.
+
+    ``ref`` is sorted once on its highest-variance coordinate c. As
+    |x_c − y_c| ≤ ‖x − y‖, the only points that can rank in a row's top-L
+    lie within r of x_c in that order, where r is any upper bound on the
+    row's L-th distance — here the L-th among its 2(L+1) projection
+    neighbors. The computed distances carry rounding error, bounded by
+    m = √(K·eps·(‖x‖² + max‖y‖²)) (K = 64 + 4d, several times the
+    gemm/norm error bound), so the window's half-width is r + 2m: every
+    point outside it has a computed distance above r, hence above the
+    row's L-th, ties included. Pruning is exact, not approximate.
+
+    The distances inside a window are GATHERED from the block's
+    full-width product, never recomputed on a column subset: OpenBLAS
+    rounds a sub-matrix product differently (see ``_BLOCK_CELLS``)."""
+
+    def __init__(self, ref: np.ndarray, l_eff: int):
+        n_ref, dim = ref.shape
+        self.ref = ref
+        self.l_eff = l_eff
+        self.rn = (ref * ref).sum(axis=1)  # as _distances computes it
+        self.max_rn = self.rn.max()
+        self.c = int(np.argmax(ref.var(axis=0)))
+        self.order = np.argsort(ref[:, self.c], kind="stable")
+        self.proj = ref[self.order, self.c]
+        self.n_adj = min(n_ref, 2 * (l_eff + 1))
+        self.k_ulp = 64.0 + 4.0 * dim
+
+    def distances(self, xb: np.ndarray, self_pos: np.ndarray):
+        """(d, cols) for one row block, self excluded (inf): ``cols`` are
+        the ref positions of d's columns, or None when d is the
+        full-width matrix — the block's windows cover over half of ref
+        (no pruning, e.g. at d=64) or its values are not finite."""
+        n_ref = len(self.proj)
+        xn = (xb * xb).sum(axis=1)
+        prod = 2.0 * xb @ self.ref.T
+        bound = xn + self.max_rn
+        if np.isfinite(2.0 * bound).all():
+            xc = xb[:, self.c]
+            lo = np.searchsorted(self.proj, xc) - (self.l_eff + 1)
+            adj = self.order[np.clip(lo, 0, n_ref - self.n_adj)[:, None] + np.arange(self.n_adj)]
+            d_adj = _dist_from_product(xn, np.take_along_axis(prod, adj, axis=1), self.rn[adj])
+            d_adj[adj == self_pos[:, None]] = np.inf
+            r = np.partition(d_adj, self.l_eff - 1, axis=1)[:, self.l_eff - 1]
+            half = r + 2.0 * np.sqrt(self.k_ulp * _EPS * bound + _TINY)
+            lo = np.searchsorted(self.proj, xc - half, "left")
+            hi = np.searchsorted(self.proj, xc + half, "right")
+            # at least L+1 columns, as _select_topl needs (x may be foreign to ref)
+            width = max(int((hi - lo).max()), self.l_eff + 1)
+            if 2 * width <= n_ref:
+                idx = lo[:, None] + np.arange(width)
+                cols = self.order[np.minimum(idx, n_ref - 1)]
+                d = _dist_from_product(xn, np.take_along_axis(prod, cols, axis=1), self.rn[cols])
+                d[(idx >= hi[:, None]) | (cols == self_pos[:, None])] = np.inf
+                return d, cols
+        return _mask_self(_dist_from_product(xn, prod, self.rn), self_pos), None
 
 
 def _topl_blocked(
@@ -72,36 +163,44 @@ def _topl_blocked(
     *,
     dist_fn=None,
 ):
-    """Top-L neighbors of each row of x against ref, computed in row blocks
-    so the (rows × |ref|) distance matrix never exceeds ~32 MB. Rows whose
-    id appears in ref exclude themselves. Returns (nbr_pos, nbr_dist) of
-    shape (len(x), l_eff). ``dist_fn`` defaults to the BLAS gemm form;
-    pass assign._distances_exact when ranks must reproduce a SQL oracle's
-    Σ(x−y)² distances bit-for-bit."""
+    """Top-L neighbors of each row of x against ref (ids sorted), by
+    (dist, id), computed in row blocks so the (rows × |ref|) distance
+    matrix stays within ``_BLOCK_CELLS`` (2 MB). Rows whose id appears in
+    ref exclude themselves. Returns (nbr_pos, nbr_dist) of shape
+    (len(x), l_eff), l_eff = min(L, |ref| − 1).
+
+    ``dist_fn`` defaults to the BLAS gemm form, which the projection
+    windows of :class:`_ProjectionWindows` prune exactly: the result is
+    byte-identical to brute-force ``_distances`` over the same row blocks.
+    Pass assign._distances_exact when ranks must reproduce a SQL oracle's
+    Σ(x−y)² distances bit-for-bit (brute force, no pruning)."""
     n_ref = ref.shape[0]
     l_eff = min(l_nbrs, n_ref - 1)
+    out_pos = np.empty((len(x), l_eff), dtype=np.int64)
+    out_d = np.empty((len(x), l_eff), dtype=np.float64)
+    if l_eff == 0:
+        return out_pos, out_d
     if dist_fn is None:
-        dist_fn = _distances
+        windows = _ProjectionWindows(ref, l_eff)
         block = max(1, _BLOCK_CELLS // max(1, n_ref))
     else:
         # the exact Σ(x−y)² formula materializes a (block, n_ref, d)
         # difference tensor — size the block so THAT stays ~32 MB, not
         # just the (block, n_ref) output matrix
         block = max(1, _BLOCK_CELLS_EXACT // max(1, n_ref * ref.shape[1]))
-    out_pos = np.empty((len(x), l_eff), dtype=np.int64)
-    out_d = np.empty((len(x), l_eff), dtype=np.float64)
     for s in range(0, len(x), block):
         e = min(s + block, len(x))
-        d = dist_fn(x[s:e], ref)
-        pos = np.searchsorted(ref_ids, x_ids[s:e])
-        pos = np.clip(pos, 0, n_ref - 1)
-        hit = ref_ids[pos] == x_ids[s:e]
-        d[np.arange(e - s)[hit], pos[hit]] = np.inf
-        part = np.argpartition(d, l_eff - 1, axis=1)[:, :l_eff]
-        pd_d = np.take_along_axis(d, part, axis=1)
-        order = np.lexsort((ref_ids[part], pd_d), axis=1)
-        out_pos[s:e] = np.take_along_axis(part, order, axis=1)
-        out_d[s:e] = np.take_along_axis(pd_d, order, axis=1)
+        pos = np.clip(np.searchsorted(ref_ids, x_ids[s:e]), 0, n_ref - 1)
+        self_pos = np.where(ref_ids[pos] == x_ids[s:e], pos, -1)
+        if dist_fn is None:
+            d, cols = windows.distances(x[s:e], self_pos)
+        else:
+            d, cols = _mask_self(dist_fn(x[s:e], ref), self_pos), None
+        if cols is None:
+            out_pos[s:e], out_d[s:e] = _select_topl(d, np.broadcast_to(ref_ids, d.shape), l_eff)
+        else:
+            sel, out_d[s:e] = _select_topl(d, ref_ids[cols], l_eff)
+            out_pos[s:e] = np.take_along_axis(cols, sel, axis=1)
     return out_pos, out_d
 
 

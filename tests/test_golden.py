@@ -42,7 +42,9 @@ def test_golden_seeded_fit(blobs_df):
 def test_fit_oracle_data_is_fresh(spark):
     """The recorded archive positions (tools/fit_oracle_data.json) must be
     what the seeded fits actually produce — catches an engine change that
-    moved the PSO trajectory without a rerun of tools/gen_fit_oracle.py."""
+    moved the PSO trajectory without a rerun of tools/gen_fit_oracle.py.
+    Checks the exact-kNN embeddings fit and the partition-local lineitem
+    fit, whose neighbor tables come from the pruned kNN build."""
     import json
     import sys
 
@@ -53,7 +55,8 @@ def test_fit_oracle_data_is_fresh(spark):
         pytest.skip("fit oracle data not generated")
     with open(em._FIT_ORACLE_PATH) as f:
         data = json.load(f)
-    res_e, _ = em._fit_embeddings(spark, data["sf_dir"])
-    got = [p.tolist() for p in res_e.archive_positions]
-    assert len(got) == len(data["mopso_fit"]["positions"])
-    np.testing.assert_allclose(got, data["mopso_fit"]["positions"], rtol=1e-12)
+    for name, fit in (("mopso_fit", em._fit_embeddings), ("mopso_fit_lineitem", em._fit_lineitem)):
+        res, _ = fit(spark, data["sf_dir"])
+        got = [p.tolist() for p in res.archive_positions]
+        assert len(got) == len(data[name]["positions"]), name
+        np.testing.assert_allclose(got, data[name]["positions"], rtol=1e-12, err_msg=name)

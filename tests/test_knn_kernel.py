@@ -1,0 +1,113 @@
+"""The exact kNN kernel (``objectives._topl_blocked``) against a brute-force
+oracle, byte for byte — no Spark needed, so this is the quick kernel check.
+
+The oracle is ``_distances`` over the kernel's own row blocks plus a full
+(dist, id) sort. The block rule must be the same on both sides because it
+is part of the bytes (see ``objectives._BLOCK_CELLS``). The generated
+tables hold what breaks a pruned build: duplicates and exact distance
+ties, constant columns (a constant projection column among them),
+values near 1e5 where ‖x‖² − 2x·y + ‖y‖² cancels, tables of at most L+1
+rows, query rows foreign to the reference set, and 1-row trailing blocks
+(numpy routes those through gemv).
+"""
+
+from unittest import mock
+
+import numpy as np
+from hypothesis import given, settings
+from hypothesis import strategies as st
+
+from mopso_engine import objectives
+from mopso_engine.assign import _distances, _distances_exact
+
+
+def brute_topl(x, ref, ref_ids, x_ids, l_nbrs, exact_math):
+    n_ref, dim = ref.shape
+    l_eff = min(l_nbrs, n_ref - 1)
+    if exact_math:
+        dist_fn, block = _distances_exact, max(1, objectives._BLOCK_CELLS_EXACT // (n_ref * dim))
+    else:
+        dist_fn, block = _distances, max(1, objectives._BLOCK_CELLS // n_ref)
+    pos, dist = [], []
+    for s in range(0, len(x), block):
+        d = dist_fn(x[s : s + block], ref)
+        d[ref_ids[None, :] == x_ids[s : s + block, None]] = np.inf
+        order = np.lexsort((np.broadcast_to(ref_ids, d.shape), d), axis=1)[:, :l_eff]
+        pos.append(order)
+        dist.append(np.take_along_axis(d, order, axis=1))
+    return np.concatenate(pos), np.concatenate(dist)
+
+
+@st.composite
+def knn_inputs(draw):
+    rng = np.random.default_rng(draw(st.integers(0, 2**32 - 1)))
+    dim = draw(st.sampled_from([1, 2, 4, 8, 64]))
+    l_nbrs = draw(st.integers(1, 8))
+    n_ref = draw(st.one_of(st.integers(1, l_nbrs + 1), st.integers(1, 300)))
+    kind = draw(st.sampled_from(["grid", "normal", "near_1e5"]))
+    if kind == "grid":  # duplicate points and exact distance ties
+        ref = rng.integers(0, draw(st.integers(2, 12)), size=(n_ref, dim)).astype(np.float64)
+    elif kind == "normal":  # anisotropic, as real tables often are, so windows prune
+        scale = 10.0 ** (draw(st.integers(-3, 3)) - 2.0 * rng.random(dim))
+        ref = rng.normal(size=(n_ref, dim)) * scale
+    else:  # ‖x‖² ~ 1e10 against squared gaps of 1e-4..1
+        ref = 1e5 + rng.integers(0, 5, size=(n_ref, dim)) * draw(st.sampled_from([1e-2, 0.5]))
+    ref[:, 0] *= draw(st.sampled_from([1.0, 100.0, 1e4]))  # a dominant column prunes best
+    const = draw(st.sampled_from(["none", "none", "some", "all"]))
+    if const == "all":  # the projection column is constant too
+        ref[:] = ref[0]
+    elif const == "some":
+        ref[:, rng.random(dim) < 0.5] = 7.0
+    if draw(st.booleans()):  # resample rows: more duplicates
+        ref = ref[rng.integers(0, n_ref, n_ref)]
+    ref_ids = np.sort(rng.choice(10**6, size=n_ref, replace=False)).astype(np.int64)
+    block_rows = draw(st.integers(1, 5))
+    n_x = block_rows * draw(st.integers(0, 4)) + draw(st.sampled_from([1, 1, 2, block_rows]))
+    take = rng.integers(0, n_ref, n_x)
+    x, x_ids = ref[take].copy(), ref_ids[take].copy()
+    foreign = rng.random(n_x) < draw(st.sampled_from([0.0, 0.3]))
+    x_ids[foreign] = -1 - np.arange(foreign.sum())  # not in ref; same point or a jittered one
+    x[foreign] += rng.integers(0, 2, size=(foreign.sum(), dim))
+    return x, ref, ref_ids, x_ids, l_nbrs, block_rows, draw(st.booleans())
+
+
+@given(knn_inputs())
+@settings(max_examples=400, deadline=None)
+def test_topl_blocked_equals_brute_force_bytes(case):
+    x, ref, ref_ids, x_ids, l_nbrs, block_rows, exact_math = case
+    n_ref, dim = ref.shape
+    with mock.patch.multiple(
+        objectives,
+        _BLOCK_CELLS=block_rows * n_ref,
+        _BLOCK_CELLS_EXACT=block_rows * n_ref * dim,
+    ):
+        got_pos, got_d = objectives._topl_blocked(
+            x, ref, ref_ids, x_ids, l_nbrs, dist_fn=_distances_exact if exact_math else None
+        )
+        want_pos, want_d = brute_topl(x, ref, ref_ids, x_ids, l_nbrs, exact_math)
+    assert np.array_equal(got_pos, want_pos)
+    assert got_d.tobytes() == want_d.tobytes()
+
+
+def test_projection_windows_gather_the_full_width_distances():
+    """Where the projection separates points the pruned path is taken, and
+    its window distances are the very bytes of the full-width
+    ``_distances`` matrix (a product over the window's columns alone would
+    round differently). A block whose windows cover most of ref falls
+    back to the full-width matrix."""
+    rng = np.random.default_rng(0)
+    for dim, spread in ((2, 100.0), (4, 100.0), (8, 100.0), (64, 1.0)):
+        ref = rng.normal(size=(2000, dim))
+        ref[:, 0] *= spread
+        pruned = spread > 1.0
+        xb = ref[:100]
+        d, cols = objectives._ProjectionWindows(ref, 5).distances(xb, np.arange(100))
+        full = _distances(xb, ref)
+        full[np.arange(100), np.arange(100)] = np.inf
+        assert (cols is not None) == pruned
+        if pruned:
+            assert d.shape[1] < 100
+            live = np.isfinite(d)
+            assert d[live].tobytes() == np.take_along_axis(full, cols, axis=1)[live].tobytes()
+        else:
+            assert d.tobytes() == full.tobytes()

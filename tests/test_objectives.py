@@ -9,6 +9,7 @@ from mopso_engine.objectives import (
     evaluate_solutions,
     knn_pairs_crossjoin,
     knn_pairs_exact,
+    knn_pairs_partition_local,
     with_neighbors,
 )
 from tests.conftest import oracle_assign, oracle_conn
@@ -20,6 +21,51 @@ def test_knn_exact_matches_crossjoin(blobs_df):
     a = {(r["id"], r["rank"]): r["nbr_id"] for r in knn_pairs_exact(blobs_df, L).collect()}
     b = {(r["id"], r["rank"]): r["nbr_id"] for r in knn_pairs_crossjoin(blobs_df, L).collect()}
     assert a == b
+
+
+def test_knn_exact_matches_crossjoin_on_boundary_ties(spark):
+    """On an integer grid with duplicate points most rows' L-th and
+    (L+1)-th distances tie; the kernel must pick the neighbor SET the
+    crossjoin's row_number over (dist, nbr_id) picks, not whichever tied
+    point argpartition happens to leave in front. Integer coordinates
+    make the gemm distances exact, so the doubles must match too."""
+    rng = np.random.default_rng(3)
+    grid = rng.integers(0, 6, size=(200, 2)).astype(np.float64)
+    ids = rng.choice(10_000, size=200, replace=False)
+    d = np.sqrt(((grid[:, None, :] - grid[None, :, :]) ** 2).sum(axis=2))
+    np.fill_diagonal(d, np.inf)
+    kth = np.sort(d, axis=1)
+    assert (kth[:, 4] == kth[:, 5]).mean() > 0.5  # ties straddle rank L=5
+    df = spark.createDataFrame(
+        [(int(i), [float(v) for v in p], 0) for i, p in zip(ids, grid)],
+        "id long, features array<double>, label int",
+    ).repartition(3)
+    key = lambda r: (r["id"], r["rank"])  # noqa: E731
+    a = {key(r): (r["nbr_id"], r["nbr_dist"]) for r in knn_pairs_exact(df, 5).collect()}
+    b = {key(r): (r["nbr_id"], r["nbr_dist"]) for r in knn_pairs_crossjoin(df, 5).collect()}
+    assert len(a) == 200 * 5
+    assert a == b
+
+
+def test_partition_local_pairs_match_packed_neighbors(blobs_df, blobs):
+    """knn_pairs_partition_local (the rescore path's pair table) and
+    with_neighbors(mode='partition_local') (the fit's packed vectors)
+    must hold the same neighbor ids at the same ranks on one layout."""
+    ids, x, _, _ = blobs
+    layout = blobs_df.repartition(3, "id").sortWithinPartitions("id")
+    id_of = {xi.tobytes(): int(i) for i, xi in zip(ids, x)}
+    assert len(id_of) == len(ids)  # vectors identify their rows
+    packed = {}
+    for r in with_neighbors(layout, L, mode="partition_local").collect():
+        v = np.frombuffer(r["self_nbr_flat"], dtype=np.float64).reshape(1 + L, -1)
+        for rank in range(1, r["nbr_n"] + 1):
+            packed[(r["id"], rank)] = id_of[v[rank].tobytes()]
+    pairs = {
+        (r["id"], r["rank"]): r["nbr_id"]
+        for r in knn_pairs_partition_local(layout, L).collect()
+    }
+    assert len(pairs) == len(ids) * L
+    assert packed == pairs
 
 
 def test_dev_matches_oracle(blobs_df, blobs):

@@ -10,7 +10,10 @@ DuckDB on every correctness run (see __spark_entry__._FIT_ORACLE_PATH).
 Re-run after ANY change that can move the PSO trajectory (engine, pso,
 pareto, objectives, init, the fit configs in __spark_entry__):
 
-    python tools/gen_fit_oracle.py [sf_dir]
+    python tools/gen_fit_oracle.py [sf_dir [out_json]]
+
+``out_json`` defaults to the recorded file; write elsewhere and diff to
+check the recorded file is fresh without touching it.
 
 tests/test_golden.py::test_fit_oracle_data_is_fresh fails when this file
 is stale.
@@ -69,10 +72,11 @@ def main() -> None:
             "fitness": res_lsh.archive_fitness.tolist(),
         },
     }
-    with open(em._FIT_ORACLE_PATH, "w") as f:
+    out = sys.argv[2] if len(sys.argv) > 2 else em._FIT_ORACLE_PATH
+    with open(out, "w") as f:
         json.dump(data, f)
     print(
-        f"wrote {em._FIT_ORACLE_PATH}: "
+        f"wrote {out}: "
         f"mopso_fit={len(data['mopso_fit']['positions'])} entries, "
         f"mopso_fit_full={len(data['mopso_fit_full']['positions'])} entries, "
         f"mopso_fit_lineitem={len(data['mopso_fit_lineitem']['positions'])} entries"
