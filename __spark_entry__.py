@@ -89,7 +89,7 @@ _DOCS_DUP_SQL = (
 # The fit is iterative + seeded, so no SQL can derive the archive from the
 # tables alone. But the fit is BIT-deterministic (hash-partitioned layout,
 # in-partition sort, batch-order-independent kernel reduction — see
-# engine.py/objectives.py), so tools/gen_fit_oracle.py records the archive
+# engine.py/objectives.py), so tools/fit_oracle.py records the archive
 # POSITIONS it produces at the driver's correctness scale (sf0.01) and the
 # oracle re-derives [Dev, Conn] for those positions RELATIONALLY in DuckDB
 # (assignment + kNN + grouped sums over the raw tables — only the seeded
@@ -99,77 +99,29 @@ _DOCS_DUP_SQL = (
 # kernel regression breaks the driver's hash gate two ways: changed
 # trajectories → positions diverge from the recorded ones → values
 # mismatch; same trajectories but wrong kernel values → kernel_ok=false.
-# Regenerate after any engine change: python tools/gen_fit_oracle.py
+# Regenerate after any engine change: python tools/fit_oracle.py
 # --------------------------------------------------------------------------
 
-_FIT_ORACLE_PATH = os.path.join(
-    os.path.dirname(os.path.abspath(__file__)), "tools", "fit_oracle_data.json"
-)
+def _load_fit_oracle():
+    """tools/fit_oracle.py owns the fit configs, the recorded-positions
+    path and the replay SQL; the queries below use them from there."""
+    import importlib.util
+
+    path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "tools", "fit_oracle.py")
+    spec = importlib.util.spec_from_file_location("fit_oracle", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
 
 
-def _fit_embeddings(spark: SparkSession, sf: str):
-    """The tiny-budget seeded exact-mode fit on the embeddings points
-    table; shared by queries()['mopso_fit'] and tools/gen_fit_oracle.py."""
-    from mopso_engine.engine import MopsoEngine
-
-    pts = points_from_embeddings(spark, sf)
-    cfg = MopsoConfig(n_particles=6, iter_max=2, knn_l=5, seed=42)
-    return MopsoEngine(cfg).fit(pts), pts
-
-
-def _fit_embeddings_full(spark: SparkSession, sf: str):
-    """The REFERENCE-budget fit (VERDICT r1 #8): 50 particles × 10
-    iterations × L=10 × archive 15 — the reference's own constants
-    (Spark_MOPSO_Avg.scala:31-39) — exposing the per-iteration driver-loop
-    overhead the tiny-budget fit hides. Benched at sf0.1; oracle-verified
-    at sf0.01 like mopso_fit."""
-    from mopso_engine.engine import MopsoEngine
-
-    pts = points_from_embeddings(spark, sf)
-    cfg = MopsoConfig(n_particles=50, iter_max=10, knn_l=10, seed=42)
-    return MopsoEngine(cfg).fit(pts), pts
-
-
-def _fit_embeddings_lsh(spark: SparkSession, sf: str):
-    """The tiny-budget seeded fit on the LSH Conn backend (VERDICT r6
-    #6): identical budget to _fit_embeddings but knn_mode='lsh' — the
-    100 TB approximate-kNN path (BucketedRandomProjectionLSH candidate
-    join, seed-pinned, re-ranked by a deterministic window) composed
-    with the FULL fit loop end-to-end instead of only the standalone
-    recall gate (knn_lsh_recall)."""
-    from mopso_engine.engine import MopsoEngine
-
-    pts = points_from_embeddings(spark, sf)
-    cfg = MopsoConfig(n_particles=6, iter_max=2, knn_l=5, seed=42, knn_mode="lsh")
-    return MopsoEngine(cfg).fit(pts), pts
-
-
-def _fit_lineitem(spark: SparkSession, sf: str):
-    """The SCALE demonstration fit: partition-local fitness over a
-    lineitem-derived points table (~600k rows at sf0.1) — the reference
-    Avg's own cluster-scale semantics (no data broadcast, map-only
-    per-iteration jobs, Spark_MOPSO_Avg.scala:86,843-865). The row id is
-    a deterministic hash of the full row, and the layout is an explicit
-    hash-repartition + in-partition sort, so the seeded fit replays
-    bit-identically regardless of input splits or cpu count."""
-    from mopso_engine.engine import MopsoEngine
-    from mopso_engine.io import points_from_columns
-
-    li = read_table(spark, sf, "lineitem").withColumn(
-        "pid",
-        F.xxhash64(
-            "l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
-            "l_quantity", "l_extendedprice", "l_discount", "l_tax",
-        ),
-    )
-    pts = points_from_columns(
-        li, ["l_quantity", "l_extendedprice", "l_discount", "l_tax"], None, id_col="pid"
-    ).repartition(64, "id").sortWithinPartitions("id")
-    cfg = MopsoConfig(
-        k=4, n_particles=5, iter_max=2, knn_l=5, seed=42,
-        fitness_mode="partition_local",
-    )
-    return MopsoEngine(cfg).fit(pts), pts
+_fo = _load_fit_oracle()
+_FIT_ORACLE_PATH = _fo._FIT_ORACLE_PATH
+_fit_embeddings = _fo._fit_embeddings
+_fit_embeddings_full = _fo._fit_embeddings_full
+_fit_embeddings_lsh = _fo._fit_embeddings_lsh
+_fit_lineitem = _fo._fit_lineitem
+_fit_oracle_embeddings_sql = _fo._fit_oracle_embeddings_sql
+_fit_oracle_lineitem_sql = _fo._fit_oracle_lineitem_sql
 
 #: shared oracle CTEs ------------------------------------------------------
 
@@ -13153,7 +13105,7 @@ def oracle_sql() -> dict[str, str]:
     """
 
     # mopso_fit / mopso_fit_lineitem: the archive positions recorded by
-    # tools/gen_fit_oracle.py (the fits are bit-deterministic) let DuckDB
+    # tools/fit_oracle.py (the fits are bit-deterministic) let DuckDB
     # re-derive the objectives relationally — see the comment block at
     # _FIT_ORACLE_PATH. Valid at the driver's correctness scale (sf0.01);
     # absent file ⇒ graceful fallback to the rows-only check.
@@ -13187,7 +13139,7 @@ def oracle_sql() -> dict[str, str]:
                 f"[oracle_sql] fit oracles DISABLED: MOPSO_REDUCE_BLOCK_ROWS="
                 f"{_cur_block} != recorded {_rec_block} — seeded fit "
                 "trajectories differ in last ulps under a different block "
-                "size; regenerate with tools/gen_fit_oracle.py or unset the "
+                "size; regenerate with tools/fit_oracle.py or unset the "
                 "env var (falling back to rows-only checks)",
                 file=_sys.stderr,
             )
@@ -13245,80 +13197,3 @@ def oracle_sql() -> dict[str, str]:
             )
     return o
 
-
-def _fit_oracle_embeddings_sql(d: dict, *, knn_l: int) -> str:
-    """Full-strength oracle for mopso_fit / mopso_fit_full: DuckDB
-    recomputes assignment, Dev, the global L=``knn_l`` kNN and Conn from
-    the embeddings table, for the recorded archive positions (the only
-    injected literals)."""
-    positions = d["positions"]
-    vals = ",\n          ".join(
-        f"({s}, {c + 1}, CAST([{', '.join(repr(float(v)) for v in pos[c])}] AS DOUBLE[]))"
-        for s, pos in enumerate(positions)
-        for c in range(len(pos))
-    )
-    return f"""
-        WITH cents(sol, cl, cv) AS (VALUES
-          {vals}),
-        cent AS (SELECT sol, cl, r.range AS dim, cv[r.range] AS c FROM cents, range(1,65) r),
-        adist AS (
-          SELECT e.vec_id AS id, ct.sol, ct.cl,
-                 sqrt(sum((e.embedding[ct.dim]::DOUBLE - ct.c)*(e.embedding[ct.dim]::DOUBLE - ct.c))) AS d
-          FROM embeddings e, cent ct
-          GROUP BY 1, 2, 3),
-        asg AS (
-          SELECT id, sol, cl AS cluster, d
-          FROM (SELECT *, row_number() OVER (PARTITION BY id, sol ORDER BY d, cl) AS rn FROM adist)
-          WHERE rn = 1),
-        dev AS (SELECT sol, sum(d) AS dev FROM asg GROUP BY 1),
-        pts AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings),
-        pd0 AS (
-          SELECT a.id AS id, b.id AS nbr_id, unnest(a.v) AS x, unnest(b.v) AS y
-          FROM pts a JOIN pts b ON a.id <> b.id),
-        pd AS (SELECT id, nbr_id, sqrt(sum((x-y)*(x-y))) AS d FROM pd0 GROUP BY 1, 2),
-        rk AS (SELECT id, nbr_id, row_number() OVER (PARTITION BY id ORDER BY d, nbr_id) AS rank FROM pd),
-        conn AS (
-          SELECT ai.sol, sum(CASE WHEN ai.cluster = aj.cluster THEN 1.0/rk.rank ELSE 0 END) AS conn
-          FROM rk JOIN asg ai ON ai.id = rk.id
-                  JOIN asg aj ON aj.id = rk.nbr_id AND aj.sol = ai.sol
-          WHERE rk.rank <= {knn_l} GROUP BY 1)
-        SELECT d.sol::INT AS solution, round(d.dev, 4) AS dev, round(c.conn, 4) AS conn,
-               true AS kernel_ok
-        FROM dev d JOIN conn c ON c.sol = d.sol
-    """
-
-
-def _fit_oracle_lineitem_sql(d: dict) -> str:
-    """Oracle for mopso_fit_lineitem: global Dev recomputed from the
-    recorded positions over lineitem in ONE scan (inline 4-dim distances,
-    least() over the k=4 centers — no unnest, no per-point grouping);
-    the partition-local Conn is pinned as a recorded regression literal
-    (its layout semantics are invisible to SQL — documented weaker leg)."""
-    positions = d["positions"]
-    cols = ("l_quantity", "l_extendedprice", "l_discount", "l_tax")
-
-    def dist_expr(center):
-        # parenthesize the literal: a negative center would otherwise
-        # render as `col--0.4`, which SQL lexes as a line comment
-        terms = " + ".join(
-            f"({col}-({repr(float(c))}))*({col}-({repr(float(c))}))"
-            for col, c in zip(cols, center)
-        )
-        return f"sqrt({terms})"
-
-    aggs = ", ".join(
-        f"round(sum(least({', '.join(dist_expr(c) for c in pos)})), 0) AS d{s}"
-        for s, pos in enumerate(positions)
-    )
-    union = " UNION ALL ".join(
-        f"SELECT {s} AS sol, d{s} AS dev FROM agg" for s in range(len(positions))
-    )
-    kern = ", ".join(f"({s}, {repr(float(c))})" for s, c in enumerate(d["conn_rounded"]))
-    return f"""
-        WITH agg AS (SELECT {aggs} FROM lineitem),
-        devs AS ({union}),
-        kern(sol, conn) AS (VALUES {kern})
-        SELECT devs.sol::INT AS solution, devs.dev AS dev, kern.conn::DOUBLE AS conn,
-               true AS nondominated
-        FROM devs JOIN kern ON kern.sol = devs.sol
-    """

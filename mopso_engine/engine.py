@@ -71,13 +71,6 @@ class MopsoResult:
         return spark.createDataFrame(rows, "solution int, dev double, conn double, dev_norm double, conn_norm double")
 
 
-# Phase telemetry of the most recent fit() in this process — read by
-# bench.py right after timing a fit entry so the artifact records the
-# setup/per-iteration decomposition without threading the MopsoResult
-# through the generic query interface (which returns DataFrames).
-LAST_FIT_PHASES: dict = {}
-
-
 class MopsoEngine:
     """Multi-objective PSO clustering on Spark DataFrames."""
 
@@ -444,8 +437,6 @@ class MopsoEngine:
             # resumed fit's sec_per_iter stays a pure kernel number
             phases["resume_load"] = resume_load_sec
             setup_sub["resume_load"] = resume_load_sec
-        LAST_FIT_PHASES.clear()
-        LAST_FIT_PHASES.update(phases)
         return MopsoResult(
             archive_positions=[e.position for e in archive.entries],
             archive_fitness=front,

@@ -31,8 +31,7 @@ _UNIT = 1_000_000
 #: persisted KB-scale tables retained so ONE shuffle can feed both a
 #: driver-side fit collect and the output join (the isotonic/WoE
 #: sharing shape). Contract: any module may append; the RUNNER clears
-#: between queries (bench.py / tools/check_oracle.py /
-#: tools/quiet_bestof.py / tools/scale_smoke.py call
+#: between queries (tools/check_oracle.py calls
 #: :func:`clear_calib_caches` after each query completes), so appenders
 #: must consume their entry within the query that created it — an
 #: operator whose OUTPUT plan still reads a registered table after the

@@ -32,9 +32,8 @@ __all__ = [
     "LAST_GRAPH_PHASES",
 ]
 
-#: per-phase wall clocks of the LAST pagerank/bfs_levels call — read by
-#: bench.py right after timing a graph entry (the LAST_FIT_PHASES
-#: pattern, VERDICT r11 #2: supplier_bfs swung 15→22s across rounds on
+#: per-phase wall clocks of the LAST pagerank/bfs_levels call — read
+#: right after timing a graph entry (VERDICT r11 #2: supplier_bfs swung 15→22s across rounds on
 #: unchanged code with quiet calibs and had no in-artifact decomposition
 #: to adjudicate it). "setup" is the one-off edge/node cache build
 #: (forced eagerly so it can't leak into the first block); each entry of

@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, LongType, StructField, StructType
 
+from mopso_engine.lloyd import _RES_LOG2_MAX, derive_scale_log2
+
 #: single packed partial per Arrow batch: [n, Σx (d cells), ΣxxT (d² cells,
 #: row-major)]. ONE array column means the whole reduce is ONE
 #: posexplode+groupBy over (1+d+d²)·n_batches tiny rows — the vector scan
@@ -54,44 +56,6 @@ def gram_partials(emb: DataFrame, dims: int, col: str = "embedding") -> DataFram
             yield pd.DataFrame({"p": [packed]})
 
     return emb.select(col).mapInPandas(kernel, schema=_PARTIAL_SCHEMA)
-
-
-#: hard bounds of the derived RELATIVE grid resolution r = k + x_bound_log2
-#: (grid steps per unit of data magnitude, 2^r): 2²² keeps the gate's
-#: quantization error ≲1e-6·|x| on small corpora; 2¹³ is the floor below
-#: which the relative error (~2^-r) stops being meaningfully tighter than
-#: typical float noise — corpora too big for 2¹³ (> ~2³⁵ rows) need an
-#: int128/decimal combine, and derive_scale_log2 fails loudly there. The
-#: bounds are RELATIVE (not on k alone) so large-magnitude features —
-#: e.g. raw lineitem prices, |x| ≲ 2¹⁷ — get a coarser ABSOLUTE grid of
-#: identical relative precision instead of a spurious overflow error.
-_RES_LOG2_MAX = 22
-_RES_LOG2_MIN = 13
-
-
-def derive_scale_log2(n: int, x_bound_log2: int = 0) -> int:
-    """Largest quantization exponent k (possibly negative — scale is
-    ``2.0**k``) such that the int64 sufficient statistics CANNOT
-    overflow: with ``|x| ≤ 2^x_bound_log2`` the quantized
-    ``|q| ≤ 2^(k + x_bound_log2)``, so the worst total
-    ``Σq² ≤ n · 2^(2k + 2·x_bound_log2)``; requiring that to stay ≤ 2⁶¹
-    leaves 4× headroom under int64. Pure integer arithmetic
-    (``ceil_log2`` via bit_length) so an SQL oracle derives the SAME k
-    from the same row count with exact comparisons — no float log2 at a
-    power-of-two boundary (ADVICE r4: the fixed 2²² default wrapped
-    silently past ~2¹⁹ rows)."""
-    if n < 1:
-        raise ValueError("derive_scale_log2 needs n >= 1")
-    ceil_log2_n = (n - 1).bit_length()
-    k = (61 - ceil_log2_n) // 2 - x_bound_log2
-    k = min(_RES_LOG2_MAX - x_bound_log2, k)
-    if k + x_bound_log2 < _RES_LOG2_MIN:
-        raise ValueError(
-            f"n={n} rows leave fewer than 2^{_RES_LOG2_MIN} grid steps of relative "
-            "resolution in int64 sufficient statistics — switch the combine to "
-            "decimal(38,0) for corpora this large"
-        )
-    return k
 
 
 def derive_combine_plan(n: int, x_bound_log2: int = 0) -> tuple[int, str]:

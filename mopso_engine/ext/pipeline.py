@@ -22,14 +22,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-#: scale of the 32-bit md5 prefix → uniform [0, 1)
-_HASH_SPACE = float(1 << 32)
-
-
-def hash_uniform(key: Column | str, *, salt: str = "s0") -> Column:
-    """Deterministic per-row uniform in [0, 1) from md5(key ∥ salt)."""
-    h = F.conv(F.substring(F.md5(F.concat_ws("#", key, F.lit(salt))), 1, 8), 16, 10)
-    return h.cast("double") / F.lit(_HASH_SPACE)
+from mopso_engine.lloyd import hash_uniform
 
 
 def sample_by_hash(

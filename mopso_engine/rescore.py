@@ -56,9 +56,6 @@ def rescore_archive(
     Eager: persists the multi-solution assignment for its two uses and
     releases it before returning.
     """
-    import time
-
-    t0 = time.time()
     stack = np.stack(positions)
     if knn_mode == "partition_local":
         if layout_partitions is None:
@@ -111,32 +108,15 @@ def rescore_archive(
     finally:
         asg.unpersist()
         pts.unpersist()
-    _note_rescore_phase(time.time() - t0)
     dev = {r["solution"]: r["dev"] for r in dev_rows}
     conn = {r["solution"]: r["conn"] for r in conn_rows}
     return [(s, float(dev[s]), float(conn.get(s, 0.0))) for s in sorted(dev)]
-
-
-def _note_rescore_phase(wall: float) -> None:
-    """Record the rescore wall into the engine's LAST_FIT_PHASES so the
-    bench's fit+rescore entries (mopso_fit, mopso_fit_full,
-    mopso_fit_lineitem) self-adjudicate their composition (VERDICT r16
-    #7): the fit just populated the dict, the rescore runs after it, so
-    appending here keeps setup/iter_loop/rescore in one artifact.
-    Lazy import — engine does not import rescore, but stay cycle-proof."""
-    from mopso_engine.engine import LAST_FIT_PHASES
-
-    if LAST_FIT_PHASES:
-        LAST_FIT_PHASES["rescore"] = round(wall, 3)
 
 
 def rescore_dev(pts: DataFrame, positions: list[np.ndarray]) -> list[tuple[int, float]]:
     """[(solution, dev)] — global Dev only, for partition-local fits whose
     Conn is layout-dependent (not SQL-expressible); one multi-solution
     assignment pass + one grouped aggregate."""
-    import time
-
-    t0 = time.time()
     stack = np.stack(positions)
     rows = (
         assign_all_solutions(pts, stack, exact_math=True)
@@ -144,5 +124,4 @@ def rescore_dev(pts: DataFrame, positions: list[np.ndarray]) -> list[tuple[int, 
         .agg(F.sum("dist").alias("dev"))
         .collect()
     )
-    _note_rescore_phase(time.time() - t0)
     return sorted((r["solution"], float(r["dev"])) for r in rows)

@@ -39,24 +39,52 @@ def test_golden_seeded_fit(blobs_df):
 @pytest.mark.skipif(
     not __import__("os").path.exists("/root/testdata/sf0.01"), reason="driver testdata absent"
 )
-def test_fit_oracle_data_is_fresh(spark):
+def test_fit_oracle_data_is_fresh(spark, monkeypatch):
     """The recorded archive positions (tools/fit_oracle_data.json) must be
     what the seeded fits actually produce — catches an engine change that
-    moved the PSO trajectory without a rerun of tools/gen_fit_oracle.py.
+    moved the PSO trajectory without a rerun of tools/fit_oracle.py.
     Checks the exact-kNN embeddings fit and the partition-local lineitem
-    fit, whose neighbor tables come from the pruned kNN build."""
+    fit, whose neighbor tables come from the pruned kNN build. Then DuckDB
+    replays both fits' objectives relationally from the recorded
+    positions, independently of the engine's kernels."""
     import json
-    import sys
+    import os
 
-    sys.path.insert(0, "/root/repo")
-    import __spark_entry__ as em
+    import duckdb
 
-    if not __import__("os").path.exists(em._FIT_ORACLE_PATH):
+    monkeypatch.syspath_prepend(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
+    import fit_oracle as fo
+
+    from mopso_engine.rescore import rescore_dev
+
+    if not os.path.exists(fo._FIT_ORACLE_PATH):
         pytest.skip("fit oracle data not generated")
-    with open(em._FIT_ORACLE_PATH) as f:
+    with open(fo._FIT_ORACLE_PATH) as f:
         data = json.load(f)
-    for name, fit in (("mopso_fit", em._fit_embeddings), ("mopso_fit_lineitem", em._fit_lineitem)):
-        res, _ = fit(spark, data["sf_dir"])
+    fits = {}
+    for name, fit in (("mopso_fit", fo._fit_embeddings), ("mopso_fit_lineitem", fo._fit_lineitem)):
+        res, pts = fit(spark, data["sf_dir"])
         got = [p.tolist() for p in res.archive_positions]
         assert len(got) == len(data[name]["positions"]), name
         np.testing.assert_allclose(got, data[name]["positions"], rtol=1e-12, err_msg=name)
+        fits[name] = (res, pts)
+
+    con = duckdb.connect()
+    for t in ("embeddings", "lineitem"):
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{data['sf_dir']}/{t}.parquet'")
+
+    res, _ = fits["mopso_fit"]
+    rows = con.execute(fo._fit_oracle_embeddings_sql(data["mopso_fit"], knn_l=5)).fetchall()
+    assert sorted(s for s, *_ in rows) == list(range(len(res.archive_fitness)))
+    for s, dev, conn, _ in rows:
+        kd, kc = (round(float(v), 4) for v in res.archive_fitness[s])
+        assert (dev, conn) == (kd, kc), (s, dev, conn, kd, kc)
+
+    res, pts = fits["mopso_fit_lineitem"]
+    rec = data["mopso_fit_lineitem"]
+    rows = con.execute(fo._fit_oracle_lineitem_sql(rec)).fetchall()
+    devs = dict(rescore_dev(pts, res.archive_positions))
+    assert sorted(s for s, *_ in rows) == sorted(devs)
+    for s, dev, conn, _ in rows:
+        assert dev == round(devs[s], 0), (s, dev, devs[s])
+        assert conn == rec["conn_rounded"][s] == round(float(res.archive_fitness[s][1]), 4), s

@@ -11,11 +11,12 @@ from pyspark.sql import Row
 
 from mopso_engine.lloyd import (
     LloydResult,
+    derive_scale_log2,
+    hash_uniform,
     lloyd_fit,
     lloyd_summary_df,
     x_bound_log2,
 )
-from mopso_engine.ext.linalg import derive_scale_log2
 
 
 def _points_df(spark, x, n_parts=4):
@@ -65,8 +66,6 @@ def test_lloyd_matches_numpy_twin_and_is_partition_invariant(spark, xdata):
 
     # numpy twin from the same init rows
     scale = 2.0**res4.scale_log2
-    from mopso_engine.ext.pipeline import hash_uniform
-
     init = (
         df4.select("id", "features", hash_uniform("id", salt="lloyd11").alias("u"))
         .orderBy("u", "id")

@@ -190,8 +190,7 @@ def test_lloyd_iteration_shuffles_only_partial_cells(spark):
 
     emb = points_from_embeddings(spark, SF).limit(200)
     # reconstruct the per-iteration stats frame the fit executes
-    from mopso_engine.lloyd import _iteration_stats, x_bound_log2
-    from mopso_engine.ext.linalg import derive_scale_log2
+    from mopso_engine.lloyd import _iteration_stats, derive_scale_log2, x_bound_log2
 
     n = emb.count()
     # n·d envelope: the SSE partial sums d squared terms per point
