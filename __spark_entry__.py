@@ -13126,9 +13126,9 @@ def oracle_sql() -> dict[str, str]:
         )
         # the recorded trajectories also depend on the fitness kernel's
         # reduction block size (part of the float-summation grouping):
-        # under an overridden MOPSO_REDUCE_BLOCK_ROWS the hash gates
-        # would fail in the last ulps with no pointer to the cause
-        # (VERDICT r4 #7) — fall back rows-only and say why, loudly.
+        # once objectives._REDUCE_BLOCK_ROWS differs from the recorded
+        # value the hash gates would fail in the last ulps with no
+        # pointer to the cause — fall back rows-only and say why, loudly.
         from mopso_engine.objectives import _REDUCE_BLOCK_ROWS as _cur_block
 
         _rec_block = fit_data.get("reduce_block_rows", 2048)
@@ -13136,11 +13136,11 @@ def oracle_sql() -> dict[str, str]:
             import sys as _sys
 
             print(
-                f"[oracle_sql] fit oracles DISABLED: MOPSO_REDUCE_BLOCK_ROWS="
-                f"{_cur_block} != recorded {_rec_block} — seeded fit "
-                "trajectories differ in last ulps under a different block "
-                "size; regenerate with tools/fit_oracle.py or unset the "
-                "env var (falling back to rows-only checks)",
+                f"[oracle_sql] fit oracles DISABLED: objectives._REDUCE_BLOCK_ROWS="
+                f"{_cur_block} != recorded {_rec_block} — the constant changed, "
+                "so seeded fit trajectories differ in last ulps; regenerate "
+                "tools/fit_oracle_data.json with tools/fit_oracle.py "
+                "(falling back to rows-only checks)",
                 file=_sys.stderr,
             )
         elif os.path.normpath(run_sf) == os.path.normpath(

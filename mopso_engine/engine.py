@@ -21,7 +21,6 @@ from dataclasses import dataclass, field
 
 import numpy as np
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from mopso_engine import init as init_mod
 from mopso_engine import metrics as metrics_mod
@@ -53,11 +52,11 @@ class MopsoResult:
     #: rescorer can rebuild the layout, and with it the partition-local
     #: neighbor sets, exactly; None = caller's layout was kept
     layout_partitions: int | None = None
-    #: wall-clock decomposition of the fit (VERDICT r10 #3): "setup" =
-    #: stats + sample + layout + kNN persist + init fitness (the one-off
-    #: per-job fixed costs), "iter_loop" = the driver-looped fitness
-    #: passes, "finalize" = best-selection + normalization, plus
-    #: "n_iters_run". Lets a bench artifact self-adjudicate a slow fit:
+    #: wall-clock decomposition of the fit: "setup" = stats + sample +
+    #: layout + kNN persist + init fitness (the one-off per-job fixed
+    #: costs), "iter_loop" = the driver-looped fitness passes, "finalize"
+    #: = best-selection + normalization, plus "n_iters_run". Lets a
+    #: reader of a slow fit's timings tell noise from a regression:
     #: per-iteration flat + setup inflated = launch-overhead/IO noise,
     #: per-iteration inflated = a real kernel regression.
     phase_sec: dict = field(default_factory=dict)
@@ -76,27 +75,6 @@ class MopsoEngine:
 
     def __init__(self, config: MopsoConfig | None = None):
         self.cfg = config or MopsoConfig()
-
-    # -- helpers -----------------------------------------------------------
-    def _infer(self, points: DataFrame) -> tuple[int, int, int]:
-        """(N, d, k) in ONE aggregation job (+ a first() for d): the
-        reference runs separate jobs for each (A2/A3,
-        Spark_MOPSO_Avg.scala:89-103); count and distinct-label count
-        share a single scan here."""
-        first = points.select(F.size("features").alias("d")).first()
-        if first is None:
-            raise ValueError("empty points table")
-        d = first["d"]
-        row = points.agg(
-            F.count("*").alias("n"), F.countDistinct("label").alias("k")
-        ).collect()[0]
-        n = row["n"]
-        k = self.cfg.k
-        if k is None:
-            k = row["k"]
-            if k <= 1:
-                raise ValueError("cannot infer k from labels; pass MopsoConfig(k=...)")
-        return n, d, k
 
     # -- checkpointing -----------------------------------------------------
     @staticmethod
@@ -186,8 +164,8 @@ class MopsoEngine:
             # kernel is the per-iteration cost and is compute-bound
             # (distances for S solutions per row): at the old ~2k floor a
             # 2000-row corpus ran the whole kernel on ONE core while the
-            # rest idled — measured 0.60s/iter vs 0.24s at 8 partitions
-            # (VERDICT r5 #9). 256 rows is still ≳20× the ~10ms per-task
+            # rest idled — measured 0.60s/iter vs 0.24s at 8 partitions.
+            # 256 rows is still ≳20× the ~10ms per-task
             # fixed cost; large corpora bind on the 4×cores cap as before.
             target = int(min(4 * dp, max(1, -(-n // 256))))
             pts_k = pts.repartition(target, "id").sortWithinPartitions("id")
@@ -225,8 +203,8 @@ class MopsoEngine:
         start_iter = 1
         setup_sub: dict = {"stats": round(t_stats_end - t0, 3)}
         if not resume:
-            # materialize the kNN cache as its OWN timed step (VERDICT
-            # r15 #6): the hash-repartition + in-partition sort +
+            # materialize the kNN cache as its OWN timed step: the
+            # hash-repartition + in-partition sort +
             # neighbor build + persist used to hide inside the init
             # fitness pass, leaving "setup" a single opaque wall that
             # elevated-host readings re-litigated every round. An extra
@@ -417,7 +395,7 @@ class MopsoEngine:
         t_end = time.time()
         phases = {
             "setup": round(t_setup_end - t0, 3),
-            # named setup sub-walls (VERDICT r15 #6): stats = the fused
+            # named setup sub-walls: stats = the fused
             # read+stats job on the persisted corpus; knn_cache = the
             # layout repartition/sort + neighbor build + persist;
             # init_fitness = swarm init + the first distributed fitness

@@ -23,21 +23,6 @@ from mopso_engine.assign import _distances
 from mopso_engine.pso import canonicalize_centers
 
 
-def feature_bounds(points: DataFrame) -> np.ndarray:
-    """(d, 2) per-feature [min, max] in ONE pass (A1) — the reference runs
-    2·d separate jobs (Spark_MOPSO_Avg.scala:1239-1252); posexplode +
-    groupBy is a single scan + tiny shuffle, and Catalyst prunes to the
-    features column only."""
-    row = (
-        points.select(F.posexplode("features").alias("idx", "v"))
-        .groupBy("idx")
-        .agg(F.min("v").alias("lo"), F.max("v").alias("hi"))
-        .orderBy("idx")
-        .collect()
-    )
-    return np.array([[r["lo"], r["hi"]] for r in row], dtype=np.float64)
-
-
 def sample_features(points: DataFrame, n: int, seed: int) -> np.ndarray:
     """Seeded, PARTITION-INVARIANT driver-side sample: order by
     (xxhash64(id, seed), id) and take n — a TakeOrderedAndProject (top-n,
@@ -115,11 +100,9 @@ def init_swarm(
 def corpus_stats(points: DataFrame, k_hint: int | None = None):
     """(n, d, k, bounds) in ONE scan + one tiny d-keyed shuffle — fuses
     the reference's separate count / distinct-label / 2·d min-max jobs
-    (A1+A2+A3; Spark_MOPSO_Avg.scala:89-103,1239-1252) AND the three
-    separate jobs fit() itself paid through round 5 (first() probe,
-    count+countDistinct agg, feature_bounds scan). Values are identical
-    to the unfused jobs (exact min/max/counts), so seeded fits replay
-    bit-identically; only the job count changes."""
+    (A1+A2+A3; Spark_MOPSO_Avg.scala:89-103,1239-1252). Values are
+    identical to the unfused jobs (exact min/max/counts), so seeded fits
+    replay bit-identically; only the job count changes."""
     rows = (
         points.select("label", F.posexplode("features").alias("idx", "v"))
         .groupBy("idx")

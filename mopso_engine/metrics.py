@@ -143,15 +143,9 @@ def davies_bouldin(assigned: DataFrame, centers: np.ndarray, *, max_not_reset: b
     return total / k
 
 
-def silhouette_exact(points: DataFrame, assigned: DataFrame, *, include_self: bool = True) -> float:
-    """A14: exact O(N²) silhouette via a self-join of the assigned points.
-
-    mean over i of (b−a)/max(a,b); a = mean distance to own cluster
-    (INCLUDING self when ``include_self`` — the reference's bias,
-    Spark_MOPSO_Avg.scala:622-633), b = min over other clusters of the
-    mean distance. Quadratic: run on samples; at scale use
-    ``ml.evaluation.ClusteringEvaluator`` (squared-euclidean silhouette).
-    """
+def _silhouette_points(points: DataFrame, assigned: DataFrame, include_self: bool) -> DataFrame:
+    """Per-point silhouette DataFrame(s double) of the exact O(N²)
+    self-join plan behind :func:`silhouette_exact` and its twin."""
     pts = points.select("id", "features").join(assigned.select("id", "cluster"), "id")
     a = pts.select(
         F.col("id").alias("i"), F.col("features").alias("fi"), F.col("cluster").alias("ci")
@@ -180,9 +174,21 @@ def silhouette_exact(points: DataFrame, assigned: DataFrame, *, include_self: bo
         .groupBy("i")
         .agg(F.min("mean_d").alias("b"))
     )
-    sil = own.join(other, "i").select(
+    return own.join(other, "i").select(
         ((F.col("b") - F.col("a")) / F.greatest(F.col("a"), F.col("b"))).alias("s")
     )
+
+
+def silhouette_exact(points: DataFrame, assigned: DataFrame, *, include_self: bool = True) -> float:
+    """A14: exact O(N²) silhouette via a self-join of the assigned points.
+
+    mean over i of (b−a)/max(a,b); a = mean distance to own cluster
+    (INCLUDING self when ``include_self`` — the reference's bias,
+    Spark_MOPSO_Avg.scala:622-633), b = min over other clusters of the
+    mean distance. Quadratic: run on samples; at scale use
+    ``ml.evaluation.ClusteringEvaluator`` (squared-euclidean silhouette).
+    """
+    sil = _silhouette_points(points, assigned, include_self)
     row = sil.agg(F.avg("s").alias("sil")).collect()[0]
     return float(row["sil"]) if row["sil"] is not None else 0.0
 
@@ -190,31 +196,8 @@ def silhouette_exact(points: DataFrame, assigned: DataFrame, *, include_self: bo
 def silhouette_exact_df(points: DataFrame, assigned: DataFrame, *, include_self: bool = True, ndigits: int = 6) -> DataFrame:
     """1-row DataFrame(sil double) twin of :func:`silhouette_exact`, for
     declarative pipelines / oracle checks."""
-    pts = points.select("id", "features").join(assigned.select("id", "cluster"), "id")
-    a = pts.select(F.col("id").alias("i"), F.col("features").alias("fi"), F.col("cluster").alias("ci"))
-    b = pts.select(F.col("id").alias("j"), F.col("features").alias("fj"), F.col("cluster").alias("cj"))
-    dist = F.sqrt(
-        F.aggregate(
-            F.zip_with("fi", "fj", lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
-    pairs = a.crossJoin(b)
-    if not include_self:
-        pairs = pairs.where(F.col("i") != F.col("j"))
-    per_cluster = (
-        pairs.select("i", "ci", "cj", dist.alias("d"))
-        .groupBy("i", "ci", "cj")
-        .agg(F.avg("d").alias("mean_d"))
-    )
-    own = per_cluster.where(F.col("ci") == F.col("cj")).select("i", F.col("mean_d").alias("a"))
-    other = per_cluster.where(F.col("ci") != F.col("cj")).groupBy("i").agg(F.min("mean_d").alias("b"))
-    return (
-        own.join(other, "i")
-        .select(((F.col("b") - F.col("a")) / F.greatest(F.col("a"), F.col("b"))).alias("s"))
-        .agg(F.round(F.avg("s"), ndigits).alias("sil"))
-    )
+    sil = _silhouette_points(points, assigned, include_self)
+    return sil.agg(F.round(F.avg("s"), ndigits).alias("sil"))
 
 
 def silhouette_all_solutions(points: DataFrame, centers_stack) -> np.ndarray:

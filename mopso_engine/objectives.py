@@ -24,7 +24,6 @@ parallel, exactly what it did at cluster scale), and 'lsh'
 
 from __future__ import annotations
 
-import os
 from typing import Iterable
 
 import numpy as np
@@ -32,7 +31,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType,
     BinaryType,
     DoubleType,
     IntegerType,
@@ -41,7 +39,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from mopso_engine.assign import _dist_from_product, _distances
+from mopso_engine.assign import _dist_from_product, _distances, _distances_exact
 
 #: cap on the scratch distance-matrix cells per block for the BLAS/gemm
 #: path (262_144 cells = 2 MB of float64): sized to stay CACHE-resident
@@ -51,7 +49,9 @@ from mopso_engine.assign import _dist_from_product, _distances
 #: the 600k-row lineitem fit layout (64 partitions × 9.4k rows, d=4):
 #: 32 MB blocks → 22.7s wall / 558 task-core-s; 2 MB → 6.8s / 155; the
 #: same kernel single-task isolated runs 2.0s either way. NOTE the
-#: row-block rule is part of the neighbor table's BYTES, as
+#: row-block rule, and which rows the shared kernel ``_knn_map`` scores
+#: as one block (an Arrow batch when exact, the whole partition when
+#: partition_local), is part of the neighbor table's BYTES, as
 #: ``_REDUCE_BLOCK_ROWS`` is part of the fitness sums: OpenBLAS rounds the
 #: ``2x·y`` product differently for different operand shapes (a 1-row
 #: block goes through gemv; at d ≥ 8 any other row subset can differ
@@ -204,23 +204,10 @@ def _topl_blocked(
     return out_pos, out_d
 
 
-#: (id, label, self_nbr_flat, nbr_n): self + L neighbor vectors packed in
-#: one fixed-width array<double>; nbr_n = real neighbor count (≤ L).
-#: Used by the RELATIONAL with_neighbors modes, whose flat column is
-#: built declaratively (F.concat of arrays).
-_NBR_SCHEMA = StructType(
-    [
-        StructField("id", LongType(), False),
-        StructField("label", IntegerType(), True),
-        StructField("self_nbr_flat", ArrayType(DoubleType()), False),
-        StructField("nbr_n", IntegerType(), False),
-    ]
-)
-
-#: Binary twin for the KERNEL-built modes ('exact', 'partition_local'):
-#: self_nbr_flat is the same (1+L)·d doubles as raw little-endian float64
-#: bytes. One bytes object per row Arrow-transfers and reconstructs
-#: (np.frombuffer) several times faster than a list<double> column (which
+#: (id, label, self_nbr_flat, nbr_n) of the KERNEL-built modes: self + L
+#: neighbor vectors as (1+L)·d raw little-endian float64 bytes. One bytes
+#: object per row Arrow-transfers and reconstructs (np.frombuffer) several
+#: times faster than the relational modes' list<double> column (which
 #: materializes 600k tiny ndarrays per pass and GC-thrashes); the VALUES
 #: are bit-identical, so fitness partials — and with them the recorded
 #: seeded trajectories — are unchanged. evaluate_solutions accepts both.
@@ -245,6 +232,7 @@ def _pack_self_nbrs(x: np.ndarray, ref: np.ndarray, nbr_pos: np.ndarray, l_nbrs:
         return np.concatenate([x, nb, pad], axis=1)
     return np.concatenate([x, nb], axis=1)
 
+
 PAIRS_SCHEMA = StructType(
     [
         StructField("id", LongType(), False),
@@ -253,6 +241,82 @@ PAIRS_SCHEMA = StructType(
         StructField("nbr_dist", DoubleType(), False),
     ]
 )
+
+
+#: exact mode collects+broadcasts the full (id, features) table; beyond
+#: this many rows that is a driver/executor memory foot-gun — callers
+#: should switch to 'partition_local' (reference semantics) or 'lsh'.
+MAX_EXACT_KNN_ROWS = 200_000
+
+
+def _knn_map(points: DataFrame, l_nbrs: int, scope: str, *, packed: bool, n_rows: int | None = None, dist_fn=None) -> DataFrame:
+    """The one kernel-built kNN table: ONE map stage, no shuffle, each
+    scored block against an id-sorted reference set via ``_topl_blocked``.
+    ``scope='exact'`` collects + broadcasts all (id, features) once and
+    scores each non-empty Arrow batch; ``'partition_local'`` scores the
+    whole partition against itself (the reference Avg's semantics,
+    Spark_MOPSO_Avg.scala:843-865). ``packed=True`` emits the fit's
+    ``_NBR_SCHEMA_BIN`` rows, else ``PAIRS_SCHEMA`` rows — both from the
+    same neighbor positions, so the same neighbors at the same ranks. A
+    row with no neighbor (1-row partition) packs as 1+L self-copies with
+    ``nbr_n = 0`` and emits no pair."""
+    if scope == "exact":
+        n = n_rows if n_rows is not None else points.count()
+        if n > MAX_EXACT_KNN_ROWS:
+            raise ValueError(
+                f"exact kNN collects all {n} rows and broadcasts them to every executor; beyond "
+                f"{MAX_EXACT_KNN_ROWS} rows use mode='partition_local' (the reference's own "
+                "cluster-scale semantics) or mode='lsh'"
+            )
+        rows = points.select("id", "features").collect()
+        ids = np.array([r["id"] for r in rows], dtype=np.int64)
+        feats = np.array([r["features"] for r in rows], dtype=np.float64)
+        order = np.argsort(ids)
+        bc = points.sparkSession.sparkContext.broadcast((ids[order], feats[order]))
+
+    def scored_blocks(batches: Iterable[pd.DataFrame]):
+        """(pdf, x, ref, ref_ids) per scored block."""
+        if scope == "exact":
+            ref_ids, ref = bc.value
+            for pdf in batches:
+                if len(pdf):
+                    yield pdf, np.stack(pdf["features"].to_numpy()).astype(np.float64), ref, ref_ids
+            return
+        chunks = [pdf for pdf in batches if len(pdf)]
+        if chunks:  # else an empty partition
+            pdf = pd.concat(chunks, ignore_index=True)
+            x = np.stack(pdf["features"].to_numpy()).astype(np.float64)
+            order = np.argsort(pdf["id"].to_numpy())
+            yield pdf, x, x[order], pdf["id"].to_numpy()[order]
+
+    def kernel(batches: Iterable[pd.DataFrame]):
+        for pdf, x, ref, ref_ids in scored_blocks(batches):
+            ids = pdf["id"].to_numpy()
+            nbr_pos, nbr_d = _topl_blocked(x, ref, ref_ids, ids, l_nbrs, dist_fn=dist_fn)
+            n, l_eff = nbr_pos.shape
+            if packed:
+                flat = _pack_self_nbrs(x, ref, nbr_pos, l_nbrs)
+                yield pd.DataFrame(
+                    {
+                        "id": ids,
+                        "label": pdf["label"],
+                        "self_nbr_flat": [r.tobytes() for r in np.ascontiguousarray(flat)],
+                        "nbr_n": np.full(n, l_eff, dtype=np.int32),
+                    }
+                )
+            else:
+                yield pd.DataFrame(
+                    {
+                        "id": np.repeat(ids, l_eff),
+                        "nbr_id": ref_ids[nbr_pos].ravel(),
+                        "rank": np.tile(np.arange(1, l_eff + 1, dtype=np.int32), n),
+                        "nbr_dist": nbr_d.ravel(),
+                    }
+                )
+
+    if packed:
+        return points.select("id", "features", "label").mapInPandas(kernel, schema=_NBR_SCHEMA_BIN)
+    return points.select("id", "features").mapInPandas(kernel, schema=PAIRS_SCHEMA)
 
 
 def knn_pairs_exact(
@@ -264,85 +328,29 @@ def knn_pairs_exact(
     executors via Spark broadcast; each partition computes cdist(batch, all)
     and keeps the L smallest — O(N²/P) vectorized work, no shuffle. Ties
     break by (dist, nbr_id) for determinism (the reference relied on sort
-    stability, Spark_MOPSO_Avg.scala:1050-1052).
+    stability, Spark_MOPSO_Avg.scala:1050-1052). Same kernel as
+    ``with_neighbors(mode='exact')``.
 
     Guarded by ``MAX_EXACT_KNN_ROWS``: the full-table collect + broadcast
     is a driver/executor memory foot-gun beyond ~10⁵ rows — callers with
     bigger tables must use 'partition_local' or 'lsh'. Pass ``n_rows``
-    when already known to skip the extra count job.
+    when already known to skip the extra count job. ``exact_math`` ranks
+    by ``assign._distances_exact``'s Σ(x−y)² (a SQL oracle's bits).
     """
-    n = n_rows if n_rows is not None else points.count()
-    if n > MAX_EXACT_KNN_ROWS:
-        raise ValueError(
-            f"knn_pairs_exact collects all {n} rows to the driver and broadcasts "
-            f"them to every executor; beyond {MAX_EXACT_KNN_ROWS} rows use "
-            "mode='partition_local' (the reference's own cluster-scale semantics) "
-            "or mode='lsh'"
-        )
-    rows = points.select("id", "features").collect()
-    ids = np.array([r["id"] for r in rows], dtype=np.int64)
-    feats = np.array([r["features"] for r in rows], dtype=np.float64)
-    order = np.argsort(ids)  # searchsorted self-exclusion needs sorted ids
-    ids, feats = ids[order], feats[order]
-    sc = points.sparkSession.sparkContext
-    bc = sc.broadcast((ids, feats))
-    from mopso_engine.assign import _distances_exact
-
     dist_fn = _distances_exact if exact_math else None
-
-    def kernel(batches: Iterable[pd.DataFrame]):
-        all_ids, all_feats = bc.value
-        for pdf in batches:
-            x = np.stack(pdf["features"].to_numpy()).astype(np.float64)
-            bid = pdf["id"].to_numpy()
-            nbr_pos, nbr_d = _topl_blocked(x, all_feats, all_ids, bid, l_nbrs, dist_fn=dist_fn)
-            n, l_eff = nbr_pos.shape
-            yield pd.DataFrame(
-                {
-                    "id": np.repeat(bid, l_eff),
-                    "nbr_id": all_ids[nbr_pos].ravel(),
-                    "rank": np.tile(np.arange(1, l_eff + 1, dtype=np.int32), n),
-                    "nbr_dist": nbr_d.ravel(),
-                }
-            )
-
-    return points.select("id", "features").mapInPandas(kernel, schema=PAIRS_SCHEMA)
+    return _knn_map(points, l_nbrs, "exact", packed=False, n_rows=n_rows, dist_fn=dist_fn)
 
 
 def knn_pairs_partition_local(points: DataFrame, l_nbrs: int) -> DataFrame:
     """Top-L neighbor pairs WITHIN each input partition — the pair-table
-    rendering of ``with_neighbors(mode='partition_local')``: same
-    per-partition concat, same sorted-ref ``_topl_blocked`` call, same
-    default distance math, so it reproduces the fit kernel's neighbor
-    sets and ranks EXACTLY for any points table laid out the way the fit
-    laid it out. No collect, no broadcast, no shuffle — the rescore path
-    for fits beyond ``MAX_EXACT_KNN_ROWS`` (layout is semantics here:
-    callers must pass the same deterministic layout the engine built,
-    see ``MopsoEngine.fit``)."""
-
-    def kernel(batches: Iterable[pd.DataFrame]):
-        chunks = list(batches)
-        if not chunks:
-            return
-        pdf = pd.concat(chunks, ignore_index=True)
-        if len(pdf) < 2:
-            return
-        x = np.stack(pdf["features"].to_numpy()).astype(np.float64)
-        ids = pdf["id"].to_numpy()
-        order = np.argsort(ids)
-        xs, ids_s = x[order], ids[order]
-        nbr_pos, nbr_d = _topl_blocked(x, xs, ids_s, ids, l_nbrs)
-        n, l_eff = nbr_pos.shape
-        yield pd.DataFrame(
-            {
-                "id": np.repeat(ids, l_eff),
-                "nbr_id": ids_s[nbr_pos].ravel(),
-                "rank": np.tile(np.arange(1, l_eff + 1, dtype=np.int32), n),
-                "nbr_dist": nbr_d.ravel(),
-            }
-        )
-
-    return points.select("id", "features").mapInPandas(kernel, schema=PAIRS_SCHEMA)
+    rendering of ``with_neighbors(mode='partition_local')`` (same kernel,
+    :func:`_knn_map`), so it reproduces the fit kernel's neighbor sets and
+    ranks EXACTLY for any points table laid out the way the fit laid it
+    out. No collect, no broadcast, no shuffle — the rescore path for fits
+    beyond ``MAX_EXACT_KNN_ROWS`` (layout is semantics here: callers must
+    pass the same deterministic layout the engine built, see
+    ``MopsoEngine.fit``)."""
+    return _knn_map(points, l_nbrs, "partition_local", packed=False)
 
 
 def knn_pairs_crossjoin(
@@ -457,12 +465,6 @@ def knn_pairs_lsh(points: DataFrame, l_nbrs: int, *, bucket_length: float = 2.0,
     )
 
 
-#: exact mode collects+broadcasts the full (id, features) table; beyond
-#: this many rows that is a driver/executor memory foot-gun — callers
-#: should switch to 'partition_local' (reference semantics) or 'lsh'.
-MAX_EXACT_KNN_ROWS = 200_000
-
-
 def with_neighbors(
     points: DataFrame, l_nbrs: int, mode: str = "exact", *, n_rows: int | None = None
 ) -> DataFrame:
@@ -484,87 +486,14 @@ def with_neighbors(
     * 'partition_local' — neighbors within each input partition only: the
       reference Avg's semantics (Spark_MOPSO_Avg.scala:843-865) and the
       unbounded-scale path (no broadcast, no shuffle).
-    * 'exact_pairs'/'crossjoin'/'lsh' — build a (id, nbr_id, rank) pair
-      table, then join neighbor features back (one shuffle, once per fit);
-      'lsh' is the approximate big-N path.
+    * 'crossjoin'/'lsh' — build a (id, nbr_id, rank) pair table, then
+      join neighbor features back (one shuffle, once per fit); 'lsh' is
+      the approximate big-N path.
+    'exact'/'partition_local' are the two scopes of :func:`_knn_map`.
     """
-    if mode == "partition_local":
-        out_schema = _NBR_SCHEMA_BIN
-
-        def kernel(batches: Iterable[pd.DataFrame]):
-            chunks = list(batches)
-            if not chunks:  # empty partition
-                return
-            pdf = pd.concat(chunks, ignore_index=True)
-            if pdf.empty:
-                return
-            x = np.stack(pdf["features"].to_numpy()).astype(np.float64)
-            n, d_ = x.shape
-            if n < 2:
-                # a single-row partition has no neighbors: all padding
-                flat = np.tile(x, (1, 1 + l_nbrs))
-                nbr_n = np.zeros(n, dtype=np.int32)
-            else:
-                ids = pdf["id"].to_numpy()
-                order = np.argsort(ids)
-                xs, ids_s = x[order], ids[order]
-                nbr_pos, _ = _topl_blocked(x, xs, ids_s, ids, l_nbrs)
-                flat = _pack_self_nbrs(x, xs, nbr_pos, l_nbrs)
-                nbr_n = np.full(n, nbr_pos.shape[1], dtype=np.int32)
-            yield pd.DataFrame(
-                {
-                    "id": pdf["id"],
-                    "label": pdf["label"],
-                    "self_nbr_flat": [r.tobytes() for r in np.ascontiguousarray(flat)],
-                    "nbr_n": nbr_n,
-                }
-            )
-
-        return points.select("id", "features", "label").mapInPandas(kernel, schema=out_schema)
-
-    if mode == "exact":
-        # broadcast kernel emits neighbor FEATURES directly — no pair
-        # table, no join, no shuffle: the whole precompute is one map
-        # stage over the points (plus one collect for the broadcast).
-        n = n_rows if n_rows is not None else points.count()
-        if n > MAX_EXACT_KNN_ROWS:
-            raise ValueError(
-                f"knn mode 'exact' broadcasts all {n} rows to every executor; "
-                f"beyond {MAX_EXACT_KNN_ROWS} rows use mode='partition_local' "
-                "(the reference's own cluster-scale semantics) or mode='lsh'"
-            )
-        rows = points.select("id", "features").collect()
-        ids = np.array([r["id"] for r in rows], dtype=np.int64)
-        feats = np.array([r["features"] for r in rows], dtype=np.float64)
-        order = np.argsort(ids)
-        ids, feats = ids[order], feats[order]
-        bc = points.sparkSession.sparkContext.broadcast((ids, feats))
-
-        out_schema = _NBR_SCHEMA_BIN
-
-        def kernel(batches: Iterable[pd.DataFrame]):
-            all_ids, all_feats = bc.value
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                x = np.stack(pdf["features"].to_numpy()).astype(np.float64)
-                bid = pdf["id"].to_numpy()
-                nbr_pos, _ = _topl_blocked(x, all_feats, all_ids, bid, l_nbrs)
-                flat = _pack_self_nbrs(x, all_feats, nbr_pos, l_nbrs)
-                yield pd.DataFrame(
-                    {
-                        "id": bid,
-                        "label": pdf["label"],
-                        "self_nbr_flat": [r.tobytes() for r in np.ascontiguousarray(flat)],
-                        "nbr_n": np.full(len(bid), nbr_pos.shape[1], dtype=np.int32),
-                    }
-                )
-
-        return points.select("id", "features", "label").mapInPandas(kernel, schema=out_schema)
-
-    if mode == "exact_pairs":
-        pairs = knn_pairs_exact(points, l_nbrs, n_rows=n_rows)
-    elif mode == "crossjoin":
+    if mode in ("exact", "partition_local"):
+        return _knn_map(points, l_nbrs, mode, packed=True, n_rows=n_rows)
+    if mode == "crossjoin":
         pairs = knn_pairs_crossjoin(points, l_nbrs)
     elif mode == "lsh":
         pairs = knn_pairs_lsh(points, l_nbrs)
@@ -590,10 +519,10 @@ def with_neighbors(
 #: fitness-kernel reduction block: matches the exact-mode layout's ~2k-row
 #: partition sizing (engine.py), so engine-owned layouts reduce in one
 #: block exactly as before; only oversized caller-owned partitions split.
-#: Env-overridable for memory/throughput tuning — NOTE the block size is
-#: part of the float-summation grouping, so changing it changes seeded
-#: fit trajectories in the last ulps (regenerate recorded oracles).
-_REDUCE_BLOCK_ROWS = int(os.environ.get("MOPSO_REDUCE_BLOCK_ROWS", "2048"))
+#: NOTE the block size is part of the float-summation grouping, so
+#: changing it changes seeded fit trajectories in the last ulps
+#: (regenerate the recorded oracles with tools/fit_oracle.py).
+_REDUCE_BLOCK_ROWS = 2048
 
 
 def _fixed_blocks(batches: "Iterable[pd.DataFrame]", block_rows: int):

@@ -47,24 +47,47 @@ def test_knn_exact_matches_crossjoin_on_boundary_ties(spark):
     assert a == b
 
 
-def test_partition_local_pairs_match_packed_neighbors(blobs_df, blobs):
-    """knn_pairs_partition_local (the rescore path's pair table) and
-    with_neighbors(mode='partition_local') (the fit's packed vectors)
-    must hold the same neighbor ids at the same ranks on one layout."""
-    ids, x, _, _ = blobs
-    layout = blobs_df.repartition(3, "id").sortWithinPartitions("id")
+#: 8 rows over 5 id-hash partitions: sizes 5, 2, 1, 0, 0
+SPARSE_IDS = (0, 2, 4, 5, 6, 7, 16, 18)
+
+
+@pytest.mark.parametrize("table", ["blobs", "sparse"])
+@pytest.mark.parametrize("scope", ["partition_local", "exact"])
+def test_partition_local_pairs_match_packed_neighbors(spark, blobs_df, blobs, scope, table):
+    """The pair table (knn_pairs_partition_local / knn_pairs_exact, the
+    rescore path) and with_neighbors' packed vectors (the fit) must hold
+    the same neighbor ids at the same ranks on one layout — in both
+    scopes, also with empty and 1-row partitions, whose row packs 1+L
+    self-copies with nbr_n = 0 and emits no pair."""
+    if table == "blobs":
+        ids, x, _, _ = blobs
+        layout = blobs_df.repartition(3, "id").sortWithinPartitions("id")
+    else:
+        ids = np.array(SPARSE_IDS, dtype=np.int64)
+        x = np.stack([ids, ids % 3], axis=1).astype(np.float64)
+        rows = [(int(i), [float(v) for v in xi], 1 + int(i) % 2) for i, xi in zip(ids, x)]
+        layout = spark.createDataFrame(rows, "id long, features array<double>, label int").repartition(5, "id")
+    parts = [[r["id"] for r in part] for part in layout.rdd.glom().collect()]
+    if table == "sparse":
+        assert sorted(map(len, parts)) == [0, 0, 1, 2, 5]
     id_of = {xi.tobytes(): int(i) for i, xi in zip(ids, x)}
     assert len(id_of) == len(ids)  # vectors identify their rows
+    # each row's neighbor pool: the whole table, or the row's partition
+    if scope == "exact":
+        pools, pairs_df = [sum(parts, [])], knn_pairs_exact(layout, L)
+    else:
+        pools, pairs_df = parts, knn_pairs_partition_local(layout, L)
+    pool_n = {i: len(pool) for pool in pools for i in pool}
     packed = {}
-    for r in with_neighbors(layout, L, mode="partition_local").collect():
+    for r in with_neighbors(layout, L, mode=scope).collect():
         v = np.frombuffer(r["self_nbr_flat"], dtype=np.float64).reshape(1 + L, -1)
+        assert r["nbr_n"] == min(L, pool_n[r["id"]] - 1)
         for rank in range(1, r["nbr_n"] + 1):
             packed[(r["id"], rank)] = id_of[v[rank].tobytes()]
-    pairs = {
-        (r["id"], r["rank"]): r["nbr_id"]
-        for r in knn_pairs_partition_local(layout, L).collect()
-    }
-    assert len(pairs) == len(ids) * L
+        for pad in v[1 + r["nbr_n"] :]:  # padding repeats the point itself
+            assert pad.tobytes() == v[0].tobytes()
+    pairs = {(r["id"], r["rank"]): r["nbr_id"] for r in pairs_df.collect()}
+    assert len(pairs) == sum(len(p) * min(L, len(p) - 1) for p in pools)
     assert packed == pairs
 
 
