@@ -16,6 +16,8 @@ Scale notes:
 
 from __future__ import annotations
 
+import json
+import os
 import time
 from dataclasses import dataclass, field
 
@@ -59,6 +61,12 @@ class MopsoResult:
     #: reader of a slow fit's timings tell noise from a regression:
     #: per-iteration flat + setup inflated = launch-overhead/IO noise,
     #: per-iteration inflated = a real kernel regression.
+    #: "setup_phases" splits setup into "stats" (the fused stats job +
+    #: sample), "knn_cache" (layout + the whole neighbor build, exact
+    #: mode's collect + broadcast included, + persist) and either
+    #: "init_fitness" (swarm init + the first fitness pass) or, on
+    #: resume, "resume_load" (the checkpoint read only; also reported at
+    #: the top level).
     phase_sec: dict = field(default_factory=dict)
 
     def archive_df(self, spark) -> DataFrame:
@@ -70,39 +78,100 @@ class MopsoResult:
         return spark.createDataFrame(rows, "solution int, dev double, conn double, dev_norm double, conn_norm double")
 
 
+@dataclass
+class _LoopState:
+    """The fit loop's complete state: swarm, velocities, pbests, the
+    archive with its crowding values, the RNG and the history. It is
+    O(S·k·d) doubles on the driver, so a checkpoint costs microseconds
+    and no Spark job."""
+
+    iteration: int
+    positions: np.ndarray
+    velocities: np.ndarray
+    pbest_pos: np.ndarray
+    pbest_fit: np.ndarray
+    archive: Archive
+    rng: np.random.Generator
+    history: list[dict]
+    #: early-stop streak (iterations with a bit-identical front, and that
+    #: front's bytes): checkpointed so a resumed run stops exactly where
+    #: the uninterrupted one would
+    stable_iters: int = 0
+    prev_front: bytes | None = None
+
+    def save(self, path: str, ident: dict) -> None:
+        """Atomic JSON write (tmp + rename): a crash mid-save leaves the
+        previous checkpoint intact. Doubles survive round-trip exactly —
+        Python floats ARE IEEE doubles and json prints shortest-exact."""
+        front = self.prev_front
+        state = {
+            **ident,
+            "iteration": self.iteration,
+            "rng_state": self.rng.bit_generator.state,
+            "positions": self.positions.tolist(),
+            "velocities": self.velocities.tolist(),
+            "pbest_pos": self.pbest_pos.tolist(),
+            "pbest_fit": self.pbest_fit.tolist(),
+            "archive": [
+                {"position": e.position.tolist(), "fitness": e.fitness.tolist(), "crowding": e.crowding}
+                for e in self.archive.entries
+            ],
+            "history": self.history,
+            "stable_iters": self.stable_iters,
+            "prev_front": None if front is None else np.frombuffer(front, dtype=np.float64).reshape(-1, 2).tolist(),
+        }
+        tmp = path + ".tmp"
+        with open(tmp, "w") as f:
+            json.dump(state, f)
+        os.replace(tmp, path)
+
+    @classmethod
+    def load(cls, path: str, ident: dict, archive: Archive) -> "_LoopState":
+        """Restore the state :meth:`save` wrote, into ``archive``. The
+        checkpoint must carry the same ``ident``: iter_max belongs to it
+        because w_at is a function of it, so resuming under a different
+        budget would silently follow a different inertia schedule."""
+        with open(path) as f:
+            st = json.load(f)
+        written = {key: st.get(key) for key in ident}
+        if written != ident:
+            raise ValueError(f"checkpoint was written by a different fit ({written} vs {ident})")
+        archive.entries = [
+            ArchiveEntry(
+                np.array(e["position"], dtype=np.float64),
+                np.array(e["fitness"], dtype=np.float64),
+                crowding=float(e["crowding"]),
+            )
+            for e in st["archive"]
+        ]
+        rng = np.random.default_rng()
+        rng.bit_generator.state = st["rng_state"]
+        front = st.get("prev_front")
+        return cls(
+            iteration=int(st["iteration"]),
+            positions=np.array(st["positions"], dtype=np.float64),
+            velocities=np.array(st["velocities"], dtype=np.float64),
+            pbest_pos=np.array(st["pbest_pos"], dtype=np.float64),
+            pbest_fit=np.array(st["pbest_fit"], dtype=np.float64),
+            archive=archive,
+            rng=rng,
+            history=st["history"],
+            stable_iters=int(st.get("stable_iters", 0)),
+            prev_front=None if front is None else np.array(front, dtype=np.float64).tobytes(),
+        )
+
+
 class MopsoEngine:
     """Multi-objective PSO clustering on Spark DataFrames."""
 
     def __init__(self, config: MopsoConfig | None = None):
         self.cfg = config or MopsoConfig()
 
-    # -- checkpointing -----------------------------------------------------
-    @staticmethod
-    def _checkpoint_path(checkpoint_dir: str) -> str:
-        import os
-
-        return os.path.join(checkpoint_dir, "mopso_checkpoint.json")
-
-    @staticmethod
-    def _save_checkpoint(path: str, state: dict) -> None:
-        """Atomic JSON write (tmp + rename): a crash mid-save leaves the
-        previous checkpoint intact. Doubles survive round-trip exactly —
-        Python floats ARE IEEE doubles and json prints shortest-exact."""
-        import json
-        import os
-
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(state, f)
-        os.replace(tmp, path)
-
-    # -- main entry --------------------------------------------------------
     def fit(
         self,
         points: DataFrame,
         *,
         checkpoint_dir: str | None = None,
-        checkpoint_every: int = 1,
         resume: bool = False,
         stop_after: int | None = None,
         early_stop_patience: int | None = None,
@@ -111,8 +180,8 @@ class MopsoEngine:
 
         With ``checkpoint_dir``, the complete loop state (swarm,
         velocities, pbest, archive with crowding, RNG bit-generator
-        state, history) is written atomically every ``checkpoint_every``
-        iterations — it is O(S·k·d) doubles, exactly the state the
+        state, history, early-stop streak) is written atomically after
+        every iteration — it is O(S·k·d) doubles, exactly the state the
         design keeps on the driver, so a checkpoint costs microseconds
         and no Spark job. ``resume=True`` reloads it and continues to
         ``cfg.iter_max``: because every distributed input (stats, kNN
@@ -126,7 +195,7 @@ class MopsoEngine:
         model an interruption, because the inertia-weight schedule is a
         function of iter_max: a shorter-budget fit is NOT a prefix of a
         longer one (w_at differs), so interrupt-and-resume must share
-        one config.
+        one config. ``resume`` and ``stop_after`` need ``checkpoint_dir``.
 
         ``early_stop_patience=p`` (opt-in; default None keeps the
         reference's fixed-budget semantics) breaks the loop once the
@@ -135,13 +204,14 @@ class MopsoEngine:
         distributed fitness pass, so on converged corpora this saves
         real cluster time. The truncated run equals the prefix of the
         full run exactly (the loop has no lookahead)."""
+        if (resume or stop_after is not None) and checkpoint_dir is None:
+            raise ValueError("resume and stop_after need checkpoint_dir: without it the fit state is lost")
         cfg = self.cfg
-        rng = np.random.default_rng(cfg.seed)
         t0 = time.time()
 
         pts = points.select("id", "features", "label").persist()
         # ONE fused stats job (count + distinct-label + per-dim bounds):
-        # see init.corpus_stats — three fewer full scans than r5's fit
+        # see init.corpus_stats — three fewer full scans than separate jobs
         n, d, k, bounds = init_mod.corpus_stats(pts, cfg.k)
         sample = init_mod.sample_features(pts, cfg.init_sample_size, cfg.seed)
         t_stats_end = time.time()
@@ -181,8 +251,7 @@ class MopsoEngine:
         else:
             pts_k = pts
 
-        # kNN precompute: solution-independent, reused by every iteration;
-        # cache materializes lazily on the first fitness pass
+        # kNN precompute: solution-independent, reused by every iteration
         knn_mode = "partition_local" if cfg.fitness_mode == "partition_local" else cfg.knn_mode
         if knn_mode == "exact":
             from mopso_engine.objectives import MAX_EXACT_KNN_ROWS
@@ -191,7 +260,13 @@ class MopsoEngine:
                 # exact mode would broadcast the whole table — fall back to
                 # the reference's own cluster-scale semantics
                 knn_mode = "partition_local"
+        # materialize the cache as its own timed step, so neither the init
+        # fitness pass nor a resumed fit's first iteration absorbs the
+        # build (that would inflate sec/iter with one-off IO)
         nbr = with_neighbors(pts_k, cfg.knn_l, mode=knn_mode, n_rows=n).persist()
+        nbr.count()
+        t_cache_end = time.time()
+        setup_sub: dict = {"stats": round(t_stats_end - t0, 3), "knn_cache": round(t_cache_end - t_stats_end, 3)}
         part_weighted = cfg.fitness_mode == "partition_local"
 
         archive = Archive(
@@ -199,192 +274,74 @@ class MopsoEngine:
             crowding_formula=cfg.crowding_formula,
             endpoint_bug=cfg.bug_compat.crowding_endpoint_bug,
         )
-        history: list[dict] = []
-        start_iter = 1
-        setup_sub: dict = {"stats": round(t_stats_end - t0, 3)}
-        if not resume:
-            # materialize the kNN cache as its OWN timed step: the
-            # hash-repartition + in-partition sort +
-            # neighbor build + persist used to hide inside the init
-            # fitness pass, leaving "setup" a single opaque wall that
-            # elevated-host readings re-litigated every round. An extra
-            # count() over the freshly-cached table costs milliseconds
-            # and buys the decomposition (the resume path has done the
-            # same materialize-first step since ADVICE r11).
-            t_cache0 = time.time()
-            nbr.count()
-            t_cache_end = time.time()
-            setup_sub["knn_cache"] = round(t_cache_end - t_cache0, 3)
+        ckpt = None if checkpoint_dir is None else os.path.join(checkpoint_dir, "mopso_checkpoint.json")
+        ident = {"seed": cfg.seed, "n": n, "d": d, "k": k, "iter_max": cfg.iter_max}
+        if resume:
+            # the restored RNG state already reflects the init's draws, so
+            # the init and its distributed fitness pass are skipped
+            state = _LoopState.load(ckpt, ident, archive)
+            setup_sub["resume_load"] = round(time.time() - t_cache_end, 3)
+        else:
+            rng = np.random.default_rng(cfg.seed)
             positions = init_mod.init_swarm(sample, bounds, k, cfg.n_particles, rng, method=cfg.init)
             velocities = init_velocity(rng, positions.shape, cfg.v_min, cfg.v_max)
             fitness = evaluate_solutions(nbr, positions, partition_weighted=part_weighted, n_total=n)
-            pbest_pos = positions.copy()
-            pbest_fit = fitness.copy()
-            archive.update([ArchiveEntry(positions[i].copy(), fitness[i].copy()) for i in range(cfg.n_particles)])
+            archive.update([ArchiveEntry(p.copy(), f.copy()) for p, f in zip(positions, fitness)])
+            state = _LoopState(0, positions, velocities, positions.copy(), fitness.copy(), archive, rng, [])
             setup_sub["init_fitness"] = round(time.time() - t_cache_end, 3)
-        else:
-            # skip the init entirely (including its distributed fitness
-            # job): every array below comes from the checkpoint, and the
-            # restored RNG state already reflects the init's draws
-            import json
-
-            t_resume0 = time.time()
-            if checkpoint_dir is None:
-                raise ValueError("resume=True requires checkpoint_dir")
-            with open(self._checkpoint_path(checkpoint_dir)) as f:
-                st = json.load(f)
-            if (
-                st["seed"] != cfg.seed
-                or st["n"] != n
-                or st["k"] != k
-                or st["d"] != d
-                # iter_max is part of the fit's identity: w_at is a
-                # function of it, so resuming under a different budget
-                # would silently follow a different inertia schedule
-                or st.get("iter_max") != cfg.iter_max
-            ):
-                raise ValueError(
-                    "checkpoint was written by a different fit "
-                    f"(seed/n/k/d/iter_max {st['seed']}/{st['n']}/{st['k']}/{st['d']}"
-                    f"/{st.get('iter_max')} vs {cfg.seed}/{n}/{k}/{d}/{cfg.iter_max})"
-                )
-            positions = np.array(st["positions"], dtype=np.float64)
-            velocities = np.array(st["velocities"], dtype=np.float64)
-            pbest_pos = np.array(st["pbest_pos"], dtype=np.float64)
-            pbest_fit = np.array(st["pbest_fit"], dtype=np.float64)
-            archive.entries = [
-                ArchiveEntry(
-                    np.array(e["position"], dtype=np.float64),
-                    np.array(e["fitness"], dtype=np.float64),
-                    crowding=float(e["crowding"]),
-                )
-                for e in st["archive"]
-            ]
-            rng = np.random.default_rng()
-            rng.bit_generator.state = st["rng_state"]
-            history = st["history"]
-            start_iter = int(st["iteration"]) + 1
-            resumed_stable = int(st.get("stable_iters", 0))
-            resumed_front = (
-                np.array(st["prev_front"], dtype=np.float64).tobytes()
-                if st.get("prev_front") is not None
-                else None
-            )
-            # materialize the kNN cache NOW: a fresh fit pays the cache
-            # build inside its init fitness pass (i.e. inside setup);
-            # a resumed fit skips the init, so without this the FIRST
-            # iteration would absorb the build and the phase telemetry
-            # would charge one-off IO to iter_loop, inflating
-            # sec_per_iter — the exact misread the decomposition exists
-            # to prevent (ADVICE r11). The load+build wall is also
-            # reported as its own resume_load phase.
-            nbr.count()
-            resume_load_sec = round(time.time() - t_resume0, 3)
-
-        def _dump_state(iteration: int) -> None:
-            self._save_checkpoint(
-                self._checkpoint_path(checkpoint_dir),
-                {
-                    "iteration": iteration,
-                    "seed": cfg.seed,
-                    "n": n,
-                    "d": d,
-                    "k": k,
-                    "rng_state": rng.bit_generator.state,
-                    "positions": positions.tolist(),
-                    "velocities": velocities.tolist(),
-                    "pbest_pos": pbest_pos.tolist(),
-                    "pbest_fit": pbest_fit.tolist(),
-                    "archive": [
-                        {
-                            "position": e.position.tolist(),
-                            "fitness": e.fitness.tolist(),
-                            "crowding": e.crowding,
-                        }
-                        for e in archive.entries
-                    ],
-                    "history": history,
-                    "iter_max": cfg.iter_max,
-                    # early-stop streak travels with the checkpoint so a
-                    # resumed run stops exactly where the uninterrupted
-                    # one would (review finding)
-                    "stable_iters": stable_iters,
-                    "prev_front": (
-                        np.frombuffer(prev_front, dtype=np.float64).reshape(-1, 2).tolist()
-                        if prev_front is not None
-                        else None
-                    ),
-                },
-            )
 
         last_iter = cfg.iter_max if stop_after is None else min(int(stop_after), cfg.iter_max)
-        if stop_after is not None and checkpoint_dir is None:
-            raise ValueError("stop_after without checkpoint_dir would lose the fit state")
+        first_iter = state.iteration
         t_setup_end = time.time()
-        prev_front: bytes | None = None
-        stable_iters = 0
-        if resume:
-            prev_front = resumed_front
-            stable_iters = resumed_stable
-        for iteration in range(start_iter, last_iter + 1):
+        for iteration in range(first_iter + 1, last_iter + 1):
             w = cfg.w_at(iteration)
-            gbest = archive.global_best(rng)
-            positions, velocities = update_swarm(
-                positions, velocities, pbest_pos, gbest.position, w, cfg, rng, feature_bounds=bounds
+            gbest = state.archive.global_best(state.rng)
+            state.positions, state.velocities = update_swarm(
+                state.positions, state.velocities, state.pbest_pos, gbest.position, w, cfg, state.rng,
+                feature_bounds=bounds,
             )
-            fitness = evaluate_solutions(nbr, positions, partition_weighted=part_weighted, n_total=n)
+            fitness = evaluate_solutions(nbr, state.positions, partition_weighted=part_weighted, n_total=n)
             for i in range(cfg.n_particles):
-                pbest_pos[i], pbest_fit[i] = pbest_update(
-                    positions[i],
+                state.pbest_pos[i], state.pbest_fit[i] = pbest_update(
+                    state.positions[i],
                     fitness[i],
-                    pbest_pos[i],
-                    pbest_fit[i],
-                    rng,
+                    state.pbest_pos[i],
+                    state.pbest_fit[i],
+                    state.rng,
                     frozen=cfg.bug_compat.pbest_frozen,
                     inverted=cfg.bug_compat.pbest_inverted,
                 )
-            archive.update([ArchiveEntry(positions[i].copy(), fitness[i].copy()) for i in range(cfg.n_particles)])
-            front = archive.fitness_matrix()
-            history.append(
+            state.archive.update([ArchiveEntry(p.copy(), f.copy()) for p, f in zip(state.positions, fitness)])
+            front = state.archive.fitness_matrix()
+            state.history.append(
                 {
                     "iter": iteration,
                     "w": w,
-                    "archive_size": len(archive.entries),
+                    "archive_size": len(state.archive.entries),
                     "best_dev": float(front[:, 0].min()),
                     "best_conn": float(front[:, 1].min()),
                 }
             )
-            # streak update BEFORE the dump so the checkpoint carries the
-            # post-iteration counter; a triggered stop forces a terminal
-            # dump even off the checkpoint_every grid (review findings)
+            state.iteration = iteration
             if early_stop_patience is not None:
                 fb = front.tobytes()
-                stable_iters = stable_iters + 1 if fb == prev_front else 0
-                prev_front = fb
-            should_stop = (
-                early_stop_patience is not None and stable_iters >= early_stop_patience
-            )
-            if checkpoint_dir is not None and (
-                iteration % max(1, checkpoint_every) == 0
-                or iteration == last_iter
-                or should_stop
-            ):
-                _dump_state(iteration)
-            if should_stop:
-                last_iter = iteration
+                state.stable_iters = state.stable_iters + 1 if fb == state.prev_front else 0
+                state.prev_front = fb
+            if ckpt is not None:
+                state.save(ckpt, ident)
+            if early_stop_patience is not None and state.stable_iters >= early_stop_patience:
                 break
 
         t_loop_end = time.time()
-        front = archive.fitness_matrix()
+        entries = state.archive.entries
+        front = state.archive.fitness_matrix()
         norm = normalize_fitness(front)
         if cfg.select_best == "silhouette":
             # selectBestArchiveAsFinalResult (Spark_MOPSO_Avg.scala:578-602):
             # max squared-euclidean silhouette across archive entries — ONE
             # multi-solution stats pass + ONE coefficient pass for the whole
             # archive (silhouette_all_solutions) instead of 2 jobs per entry
-            scores = metrics_mod.silhouette_all_solutions(
-                pts, np.stack([e.position for e in archive.entries])
-            )
+            scores = metrics_mod.silhouette_all_solutions(pts, np.stack([e.position for e in entries]))
             best_idx = int(np.argmax(scores))
         else:
             # knee: min normalized L2 to the ideal point
@@ -395,38 +352,29 @@ class MopsoEngine:
         t_end = time.time()
         phases = {
             "setup": round(t_setup_end - t0, 3),
-            # named setup sub-walls: stats = the fused
-            # read+stats job on the persisted corpus; knn_cache = the
-            # layout repartition/sort + neighbor build + persist;
-            # init_fitness = swarm init + the first distributed fitness
-            # pass on the warm cache. Sub-walls sum slightly under
-            # "setup" (driver glue) — an elevated setup reading is now
-            # diagnosable: stats inflated = input IO, knn_cache
-            # inflated = shuffle/layout, init_fitness inflated = the
-            # kernel itself (compare sec/iter).
+            # sub-walls sum slightly under "setup" (driver glue); an
+            # elevated setup is diagnosable: stats inflated = input IO,
+            # knn_cache inflated = shuffle/layout, init_fitness inflated =
+            # the kernel itself (compare sec/iter)
             "setup_phases": setup_sub,
             "iter_loop": round(t_loop_end - t_setup_end, 3),
             "finalize": round(t_end - t_loop_end, 3),
-            "n_iters_run": max(0, last_iter - start_iter + 1),
+            "n_iters_run": state.iteration - first_iter,
         }
         if resume:
-            # one-off checkpoint load + kNN cache build, reported
-            # separately (it is INSIDE setup, never iter_loop) so a
-            # resumed fit's sec_per_iter stays a pure kernel number
-            phases["resume_load"] = resume_load_sec
-            setup_sub["resume_load"] = resume_load_sec
+            phases["resume_load"] = setup_sub["resume_load"]
         return MopsoResult(
-            archive_positions=[e.position for e in archive.entries],
+            archive_positions=[e.position for e in entries],
             archive_fitness=front,
             archive_fitness_normalized=norm,
-            best_position=archive.entries[best_idx].position,
+            best_position=entries[best_idx].position,
             best_index=best_idx,
             n_points=n,
             n_features=d,
             k=k,
-            iterations=last_iter,
+            iterations=state.iteration,
             wall_clock_sec=t_end - t0,
-            history=history,
+            history=state.history,
             knn_mode_used=knn_mode,
             layout_partitions=layout_partitions,
             phase_sec=phases,

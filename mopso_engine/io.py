@@ -43,7 +43,6 @@ def read_points_csv(
     labeled: bool = True,
     zero_based_labels: bool = False,
     sep: str = ",",
-    explicit_k: int | None = None,  # noqa: ARG001 — carried by config, kept for API parity
 ) -> DataFrame:
     """CSV → points DataFrame (S2/S4).
 

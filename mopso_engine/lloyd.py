@@ -64,8 +64,8 @@ def derive_scale_log2(n: int, x_bound_log2: int = 0) -> int:
     leaves 4× headroom under int64. Pure integer arithmetic
     (``ceil_log2`` via bit_length) so an SQL oracle derives the SAME k
     from the same row count with exact comparisons — no float log2 at a
-    power-of-two boundary (ADVICE r4: the fixed 2²² default wrapped
-    silently past ~2¹⁹ rows)."""
+    power-of-two boundary (a fixed 2²² default wrapped silently past
+    ~2¹⁹ rows)."""
     if n < 1:
         raise ValueError("derive_scale_log2 needs n >= 1")
     ceil_log2_n = (n - 1).bit_length()
@@ -231,8 +231,8 @@ def lloyd_fit(
 
     # +1 headroom: worst-case (q - qc)² is 4× a point's own q² bound.
     # The SSE partial sums (q - qc)² over ALL d dims per point, so the
-    # envelope must bound n·d squared terms, not n (ADVICE r5: with n
-    # alone, a d=64 corpus could overflow int64 by up to 2^6 silently).
+    # envelope must bound n·d squared terms, not n (with n alone, a
+    # d=64 corpus could overflow int64 by up to 2^6 silently).
     scale_log2 = derive_scale_log2(n * d, e + 1)
     # possibly NEGATIVE for large-magnitude features (raw prices etc.):
     # a coarser absolute grid with the same relative precision

@@ -203,8 +203,8 @@ def silhouette_exact_df(points: DataFrame, assigned: DataFrame, *, include_self:
 def silhouette_all_solutions(points: DataFrame, centers_stack) -> np.ndarray:
     """Squared-euclidean silhouette (ml.ClusteringEvaluator's formula) for
     a WHOLE archive of candidate clusterings in TWO distributed passes
-    (VERDICT r1 #9 — replaces the per-entry assign + evaluator loop:
-    2 jobs instead of 2·|archive|).
+    (in place of a per-entry assign + evaluator loop: 2 jobs instead of
+    2·|archive|).
 
     The squared-euclidean silhouette admits sufficient statistics: with
     N_c = |C|, Y_c = Σ_{y∈C} y, ψ_c = Σ_{y∈C} ||y||², the mean squared

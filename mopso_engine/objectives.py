@@ -365,11 +365,11 @@ def knn_pairs_crossjoin(
     scalar arithmetic (bit-identical to the fold — see
     functions.euclidean_expr) when the pair volume is large enough to pay
     for it (the recall gate's ~1.5M-pair exact arm). The default keeps
-    the HOF fold WITHOUT any width probe: r16 unconditionally probed +
-    unrolled here and the driver's knn_top5/conn_objective entries (≈10-20k
-    pairs of mostly fixed cost) ran 2-2.6× their anchors — the probe job
-    plus the 64-term expression's per-query codegen cost more than the
-    fold saves at sample size (settled r17 with an interleaved A/B)."""
+    the HOF fold WITHOUT any width probe: unconditionally probing +
+    unrolling here made the knn_top5/conn_objective queries (≈10-20k
+    pairs of mostly fixed cost) run 2-2.6× slower — the probe job plus
+    the 64-term expression's per-query codegen cost more than the fold
+    saves at sample size (measured with an interleaved A/B)."""
     from pyspark.sql.window import Window
 
     from mopso_engine.functions import euclidean_expr
@@ -402,7 +402,7 @@ def knn_pairs_lsh(points: DataFrame, l_nbrs: int, *, bucket_length: float = 2.0,
     tie-break run as pure DataFrame expressions inside whole-stage
     codegen instead of ``approxSimilarityJoin``'s encoder/UDF pair path
     — measured ~8× on the candidate-heavy sf0.1 embeddings table
-    (VERDICT r9 #5: the join was 42s of mopso_fit_lsh's 80s). The output
+    (the join was 42s of an 80s LSH fit). The output
     is BIT-identical to the approxSimilarityJoin rendering: the
     candidate set is the same pairs-sharing-≥1-(table, bucket) relation
     (ml's processDataset posexplode + equality join + distinct), and

@@ -40,11 +40,6 @@ def dominates(b: np.ndarray, a: np.ndarray) -> bool:
     return bool(b[0] <= a[0] and b[1] < a[1])
 
 
-def is_dominated_in(cost: np.ndarray, fitnesses: np.ndarray) -> bool:
-    """∃ row of `fitnesses` dominating `cost` (isDominatedIn)."""
-    return bool(np.any((fitnesses[:, 0] <= cost[0]) & (fitnesses[:, 1] < cost[1])))
-
-
 def non_dominated_mask(fitnesses: np.ndarray) -> np.ndarray:
     """Vectorized dominance filter over an (n,2) fitness matrix.
 

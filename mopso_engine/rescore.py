@@ -1,4 +1,4 @@
-"""Post-hoc RELATIONAL re-scoring of a fitted archive (VERDICT r1 #1).
+"""Post-hoc RELATIONAL re-scoring of a fitted archive.
 
 ``MopsoEngine.fit`` computes [Dev, Conn] with the Arrow fitness kernel
 (objectives.evaluate_solutions). These helpers recompute the same

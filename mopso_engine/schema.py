@@ -31,15 +31,15 @@ POINTS_SCHEMA = StructType(
     ]
 )
 
-#: Assignment-table schema (FIXTURES.md F3); the reference's
-#: ``((clusterId, distance), point)`` rows (Spark_MOPSO_Avg.scala:660-675).
-ASSIGNMENT_SCHEMA = StructType(
-    [
-        StructField("id", LongType(), False),
-        StructField("cluster", IntegerType(), False),
-        StructField("dist", DoubleType(), False),
-    ]
-)
+#: The values each enumerated MopsoConfig field accepts.
+_CHOICES = {
+    "w_schedule": ("decreasing", "increasing"),
+    "crowding_formula": ("avg", "product"),
+    "fitness_mode": ("exact", "partition_local"),
+    "knn_mode": ("exact", "partition_local", "crossjoin", "lsh"),
+    "select_best": ("knee", "silhouette"),
+    "init": ("maximin", "random", "random_point"),
+}
 
 
 @dataclass
@@ -65,9 +65,6 @@ class BugCompat:
     #: DBI inner ``max`` is never reset across the outer loop
     #: (Spark_MOPSO_Avg.scala:1317,1326-1340).
     dbi_max_not_reset: bool = False
-    #: Exact silhouette a(i) includes the point itself (distance 0) in the
-    #: own-cluster mean (Spark_MOPSO_Avg.scala:622-633).
-    silhouette_include_self: bool = True  # harmless; reference behavior default
 
 
 @dataclass
@@ -138,13 +135,23 @@ class MopsoConfig:
     #: ml.ClusteringEvaluator silhouette for the sweep.
     select_best: str = "knee"
 
-    #: Swarm init: 'maximin' (reference default, Spark_MOPSO_Avg.scala:1123-1187)
-    #: or 'random' / 'kmeans'.
+    #: Swarm init: 'maximin' (reference default, Spark_MOPSO_Avg.scala:1123-1187),
+    #: 'random' (uniform in the feature bounds, MOPSO_Single.scala:548-556)
+    #: or 'random_point' (k distinct sampled points, MOPSO_Single.scala:538-545).
     init: str = "maximin"
-    #: Rows sampled to the driver for maximin / kmeans init at scale.
+    #: Rows sampled to the driver for the maximin / random_point init at scale.
     init_sample_size: int = 20000
 
     bug_compat: BugCompat = field(default_factory=BugCompat)
+
+    def __post_init__(self):
+        # reject a bad value before any Spark job: the code that reads
+        # these fields fails late on one (init after the kNN build) or
+        # silently falls back (select_best to the knee)
+        for name, allowed in _CHOICES.items():
+            value = getattr(self, name)
+            if value not in allowed:
+                raise ValueError(f"MopsoConfig.{name}={value!r}: expected one of {allowed}")
 
     @classmethod
     def variant(cls, name: str, **overrides) -> "MopsoConfig":

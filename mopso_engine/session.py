@@ -61,7 +61,7 @@ def build_session(
         # output (the pruned-tf table, any persisted groupBy result)
         # is stored at the full shuffle width — 64 near-empty blocks
         # for a 31k-row cache here — and EVERY consumer stage schedules
-        # that many tasks. Measured r14: flat on the explicit-N
+        # that many tasks. Measured: flat on the explicit-N
         # repartition caches (graph adjacency, shingle tables — AQE
         # never touches user-specified partitioning, so their reported
         # hash distribution and the per-iteration zero-exchange joins
@@ -77,8 +77,8 @@ def build_session(
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
         # ContextCleaner only reclaims shuffle files / broadcasts after a
         # driver GC notices the dead references — with a large heap that
-        # can be never, so long sessions (the 71-query bench, a
-        # multi-query notebook) accumulate shuffle state on disk. A
+        # can be never, so long sessions (a multi-query notebook, a
+        # benchmark run) accumulate shuffle state on disk. A
         # 1-minute periodic GC bounds that accumulation; on a cluster the
         # same knob bounds per-executor shuffle-dir growth.
         .config("spark.cleaner.periodicGC.interval", "1min")

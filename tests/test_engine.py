@@ -1,3 +1,5 @@
+import functools
+
 import numpy as np
 import pytest
 
@@ -58,6 +60,29 @@ def test_variant_avg_runs_e2e(blobs_df):
     cfg = MopsoConfig.variant("avg", n_particles=4, iter_max=2, knn_l=5, seed=2)
     res = MopsoEngine(cfg).fit(blobs_df.repartition(3))
     assert len(res.archive_positions) >= 1
+
+
+@pytest.mark.parametrize(
+    "make", [MopsoConfig, functools.partial(MopsoConfig.variant, "avg")], ids=["config", "variant"]
+)
+@pytest.mark.parametrize(
+    "field,bad",
+    [
+        ("fitness_mode", "global"),
+        ("knn_mode", "brute"),
+        ("w_schedule", "decreasng"),
+        ("crowding_formula", "sum"),
+        ("select_best", "Silhouette"),
+        ("init", "kmeans"),
+    ],
+)
+def test_config_rejects_unknown_choice(make, field, bad):
+    """An enumerated field outside what the engine handles fails at
+    construction, not after the kNN build (init), at iteration 1
+    (w_schedule), at the first archive overflow (crowding_formula) or
+    never (select_best falls back to the knee)."""
+    with pytest.raises(ValueError, match=field):
+        make(**{field: bad})
 
 
 def test_w_schedules():
@@ -173,13 +198,18 @@ def test_exact_mode_layout_invariance_bitwise(blobs_df, small_cfg):
 
 
 class TestCheckpointResume:
-    def test_resume_bit_identical(self, blobs_df, tmp_path):
+    @pytest.mark.parametrize(
+        "cfg",
+        [
+            MopsoConfig(iter_max=6, n_particles=6, knn_l=5, seed=42, init_sample_size=300),
+            MopsoConfig.variant("avg_label", iter_max=6, n_particles=6, knn_l=5, seed=9, init_sample_size=300),
+        ],
+        ids=["exact", "avg_label"],
+    )
+    def test_resume_bit_identical(self, blobs_df, tmp_path, cfg):
         """fit(6 iters) == fit(3 iters, checkpoint) + resume(to 6),
-        bit-for-bit: archive positions, fitness, and history."""
-        import numpy as np
-        from mopso_engine import MopsoConfig, MopsoEngine
-
-        cfg = MopsoConfig(iter_max=6, n_particles=6, knn_l=5, seed=42, init_sample_size=300)
+        bit-for-bit: archive positions, fitness, and history — for the
+        exact fit and the partition-local (label layout) one."""
         straight = MopsoEngine(cfg).fit(blobs_df)
 
         cp = str(tmp_path / "cp")
@@ -197,28 +227,45 @@ class TestCheckpointResume:
         np.testing.assert_array_equal(straight.archive_fitness, resumed.archive_fitness)
         assert straight.history == resumed.history
         assert resumed.best_index == straight.best_index
-        # ADVICE r11: the one-off checkpoint load + kNN cache build is
-        # reported as its own resume_load phase INSIDE setup, so a
-        # resumed fit's sec_per_iter stays a pure kernel number
+        # the one-off checkpoint load is reported as its own resume_load
+        # phase INSIDE setup, so a resumed fit's sec_per_iter stays a
+        # pure kernel number
         assert resumed.phase_sec.get("resume_load") is not None
         assert resumed.phase_sec["resume_load"] <= resumed.phase_sec["setup"] + 1e-9
         assert "resume_load" not in straight.phase_sec
 
-    def test_resume_rejects_foreign_checkpoint(self, blobs_df, tmp_path):
-        import os
-        import pytest as _pt
-        from mopso_engine import MopsoConfig, MopsoEngine
+    @pytest.mark.parametrize("field", ["seed", "iter_max", "k", "n", "d"])
+    def test_resume_rejects_foreign_checkpoint(self, blobs_df, tmp_path, field):
+        """A checkpoint resumes only the fit that wrote it. iter_max is
+        part of that identity: w_at is a function of it."""
+        from pyspark.sql import functions as F
 
-        cp = str(tmp_path / "cp2")
-        os.makedirs(cp, exist_ok=True)
-        kw = dict(iter_max=4, n_particles=6, knn_l=5, init_sample_size=300)
-        MopsoEngine(MopsoConfig(seed=42, **kw)).fit(
-            blobs_df, checkpoint_dir=cp, stop_after=2
-        )
-        with _pt.raises(ValueError, match="different fit"):
-            MopsoEngine(MopsoConfig(seed=43, **kw)).fit(
-                blobs_df, checkpoint_dir=cp, resume=True
-            )
+        cp = str(tmp_path)
+        kw = dict(seed=42, iter_max=4, n_particles=6, knn_l=5, init_sample_size=300)
+        MopsoEngine(MopsoConfig(**kw)).fit(blobs_df, checkpoint_dir=cp, stop_after=2)
+        points = blobs_df
+        if field == "n":
+            points = blobs_df.where("id < 200")
+        elif field == "d":
+            points = blobs_df.withColumn("features", F.slice("features", 1, 3))
+        else:
+            kw[field] = {"seed": 43, "iter_max": 5, "k": 4}[field]
+        with pytest.raises(ValueError, match="different fit"):
+            MopsoEngine(MopsoConfig(**kw)).fit(points, checkpoint_dir=cp, resume=True)
+
+    @pytest.mark.parametrize("kwargs", [dict(resume=True), dict(stop_after=2)], ids=["resume", "stop_after"])
+    def test_checkpoint_args_need_dir_before_any_job(self, spark, blobs_df, kwargs):
+        """resume / stop_after without checkpoint_dir raise before the fit
+        launches a single Spark job (stats, sample or kNN build)."""
+        sc = spark.sparkContext
+        group = "ckpt-args-" + "-".join(kwargs)
+        sc.setJobGroup(group, "checkpoint argument check")
+        try:
+            with pytest.raises(ValueError, match="checkpoint_dir"):
+                MopsoEngine(MopsoConfig(n_particles=4, iter_max=3, knn_l=5)).fit(blobs_df, **kwargs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
 def test_early_stop_triggers_on_constant_front(blobs_df, monkeypatch):
