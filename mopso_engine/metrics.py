@@ -1,14 +1,29 @@
-"""Evaluation metrics (SURVEY A9-A15) as DataFrame plans.
+"""Evaluation metrics (SURVEY A9-A15).
 
-Each metric takes the assignment table (id, cluster, dist[, label]) and
-is a single groupBy/window plan — replacing the reference's per-class
-job storms (k·|archive| filter+assign jobs, Spark_MOPSO_Avg.scala:342-348)
-with one shuffle each (SURVEY §4.1).
+The report's heavy metrics are single Arrow kernels:
+
+* :func:`assignment_report` — purity, inertia, DBI and cluster sizes of
+  one set of centers from ONE map pass that assigns each batch and emits
+  (cluster, label) → (count, Σdist, Σdist²) partials; the driver merges
+  the k×labels rows and derives all four;
+* :func:`silhouette_exact` — the exact O(N²) silhouette as one map job
+  over row blocks of a broadcast (id-sorted) table;
+* :func:`silhouette_all_solutions` — the squared-euclidean silhouette of
+  a whole archive from two map passes of sufficient statistics.
+
+The per-metric DataFrame plans (a groupBy/window each over the
+assignment table (id, cluster, dist[, label])) stay as the relational
+forms the tests check the kernels against. All replace the reference's
+per-class job storms (k·|archive| filter+assign jobs,
+Spark_MOPSO_Avg.scala:342-348, SURVEY §4.1).
 """
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -93,16 +108,6 @@ def purity_accuracy(assigned_with_labels: DataFrame, n_total: int, k: int) -> tu
     return acc, distinct == k
 
 
-def accuracy_rate(assigned_with_labels: DataFrame) -> float:
-    """A10: #(label == cluster)/N — meaningful when cluster ids align with
-    labels (getAccuracyRate, Spark_MOPSO_Avg.scala:543-554)."""
-    return (
-        assigned_with_labels.agg(
-            F.avg((F.col("label") == F.col("cluster")).cast("double")).alias("acc")
-        ).collect()[0]["acc"]
-    )
-
-
 def inertia(assigned: DataFrame) -> float:
     """A13: Σ dist² (calInertia, Spark_MOPSO_Avg.scala:1351-1364)."""
     return assigned.agg(F.sum(F.col("dist") * F.col("dist")).alias("sse")).collect()[0]["sse"]
@@ -116,17 +121,21 @@ def within_cluster_mean_dist(assigned: DataFrame) -> DataFrame:
 def davies_bouldin(assigned: DataFrame, centers: np.ndarray, *, max_not_reset: bool = False) -> float:
     """A12: DBI = avg_i max_{j≠i} (s_i+s_j)/d(c_i,c_j).
 
-    One Spark aggregate (A11) + a k×k numpy loop on the driver. The
-    reference never resets the inner ``max`` across i
-    (Spark_MOPSO_Avg.scala:1317,1326-1340) — so each term is a running
-    max over ALL pairs seen so far; reproduced with
-    ``max_not_reset=True``.
+    One Spark aggregate (A11) + the k×k driver loop of :func:`_dbi`.
     """
-    s_rows = within_cluster_mean_dist(assigned).collect()
-    k = len(centers)
-    s = np.zeros(k)
-    for r in s_rows:
+    s = np.zeros(len(centers))
+    for r in within_cluster_mean_dist(assigned).collect():
         s[r["cluster"] - 1] = r["mean_dist"]
+    return _dbi(s, centers, max_not_reset)
+
+
+def _dbi(s: np.ndarray, centers: np.ndarray, max_not_reset: bool) -> float:
+    """DBI from the per-cluster mean distances ``s`` (0 for an empty
+    cluster) and the k centers. The reference never resets the inner
+    ``max`` across i (Spark_MOPSO_Avg.scala:1317,1326-1340) — so each
+    term is a running max over ALL pairs seen so far; reproduced with
+    ``max_not_reset=True``."""
+    k = len(centers)
     c = np.asarray(centers, dtype=np.float64)
     total = 0.0
     running = 0.0
@@ -143,9 +152,85 @@ def davies_bouldin(assigned: DataFrame, centers: np.ndarray, *, max_not_reset: b
     return total / k
 
 
+def assignment_report(points: DataFrame, centers: np.ndarray, n_total: int, *, max_not_reset: bool = False) -> dict:
+    """Purity (A9), inertia (A13), DBI (A12) and cluster sizes (A8) of
+    one set of centers, from ONE map job.
+
+    Each Arrow batch of (features, label) is assigned as :func:`assign`
+    does it (same gemm, first minimum), so clusters and distances are
+    the same bits; the batch emits (cluster, label) → (cnt, Σdist,
+    Σdist²). The driver merges those k×labels rows and derives:
+
+    * purity / accepted as :func:`purity_accuracy` — per label the modal
+      cluster by (cnt desc, cluster asc); Σ modal counts / ``n_total``,
+      accepted iff the modal clusters are k distinct ones;
+    * inertia = Σ dist²;
+    * DBI from each cluster's mean distance (empty cluster → 0);
+    * the sizes of the non-empty clusters.
+
+    The per-metric DataFrame plans above are its relational oracles.
+    """
+    from mopso_engine.assign import _distances
+
+    c = np.asarray(centers, dtype=np.float64)
+    schema = StructType(
+        [
+            StructField("cluster", IntegerType(), False),
+            StructField("label", points.schema["label"].dataType, False),
+            StructField("cnt", LongType(), False),
+            StructField("sum_d", DoubleType(), False),
+            StructField("sum_d2", DoubleType(), False),
+        ]
+    )
+
+    def kernel(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            x = np.stack(pdf["features"].to_numpy()).astype(np.float64)
+            d = _distances(x, c)
+            idx = d.argmin(axis=1)
+            dist = d[np.arange(len(idx)), idx]
+            rows = pd.DataFrame(
+                {"cluster": (idx + 1).astype(np.int32), "label": pdf["label"].to_numpy(), "d": dist, "d2": dist * dist}
+            )
+            yield (
+                rows.groupby(["cluster", "label"], sort=True)
+                .agg(cnt=("d", "size"), sum_d=("d", "sum"), sum_d2=("d2", "sum"))
+                .reset_index()
+            )
+
+    parts = points.select("features", "label").mapInPandas(kernel, schema=schema).collect()
+    cells: dict[tuple[int, int], list] = {}
+    for r in parts:
+        acc = cells.setdefault((r["cluster"], r["label"]), [0, 0.0, 0.0])
+        acc[0] += r["cnt"]
+        acc[1] += r["sum_d"]
+        acc[2] += r["sum_d2"]
+    k = len(c)
+    modal: dict[int, tuple[int, int]] = {}  # label -> (modal count, modal cluster)
+    cnt = np.zeros(k, dtype=np.int64)
+    sum_d = np.zeros(k)
+    for (cl, lab), (n, sd, _) in cells.items():
+        best = modal.get(lab)
+        if best is None or (n, -cl) > (best[0], -best[1]):
+            modal[lab] = (n, cl)
+        cnt[cl - 1] += n
+        sum_d[cl - 1] += sd
+    s = np.where(cnt > 0, sum_d / np.maximum(cnt, 1), 0.0)
+    return {
+        "purity": sum(n for n, _ in modal.values()) / float(n_total),
+        "purity_accepted": len({cl for _, cl in modal.values()}) == k,
+        "inertia": float(sum(v[2] for v in cells.values())),
+        "dbi": _dbi(s, c, max_not_reset),
+        "cluster_sizes": {i + 1: int(cnt[i]) for i in range(k) if cnt[i]},
+    }
+
+
 def _silhouette_points(points: DataFrame, assigned: DataFrame, include_self: bool) -> DataFrame:
     """Per-point silhouette DataFrame(s double) of the exact O(N²)
-    self-join plan behind :func:`silhouette_exact` and its twin."""
+    self-join plan: the relational form of :func:`silhouette_exact` (its
+    test oracle) and the plan behind :func:`silhouette_exact_df`."""
     pts = points.select("id", "features").join(assigned.select("id", "cluster"), "id")
     a = pts.select(
         F.col("id").alias("i"), F.col("features").alias("fi"), F.col("cluster").alias("ci")
@@ -180,22 +265,88 @@ def _silhouette_points(points: DataFrame, assigned: DataFrame, include_self: boo
 
 
 def silhouette_exact(points: DataFrame, assigned: DataFrame, *, include_self: bool = True) -> float:
-    """A14: exact O(N²) silhouette via a self-join of the assigned points.
+    """A14: the exact O(N²) silhouette, mean over i of (b−a)/max(a,b).
 
-    mean over i of (b−a)/max(a,b); a = mean distance to own cluster
-    (INCLUDING self when ``include_self`` — the reference's bias,
-    Spark_MOPSO_Avg.scala:622-633), b = min over other clusters of the
-    mean distance. Quadratic: run on samples; at scale use
-    ``ml.evaluation.ClusteringEvaluator`` (squared-euclidean silhouette).
+    a = mean distance to the own cluster (INCLUDING self when
+    ``include_self`` — the reference's bias, Spark_MOPSO_Avg.scala:622-633),
+    b = min over the other clusters of the mean distance. A row is
+    dropped when it has no other cluster, when its cluster is a
+    singleton and ``include_self`` is False, and when max(a,b) = 0 (the
+    relational plan's null quotient, which ``avg`` skips); no row left
+    → 0.0. :func:`_silhouette_points` is the relational form of the same
+    values.
+
+    Plan: the (id, features, cluster) join is collected once (at most
+    ``MAX_EXACT_KNN_ROWS`` rows), sorted by id and broadcast; ONE
+    ``mapInPandas`` over ``spark.range(n_blocks)`` scores each fixed row
+    block against all rows with elementwise Σ(x−y)² distances and emits
+    the block's s_i; the driver sums them in id order and releases the
+    broadcast. The value does not depend on the input's partitioning.
+    Quadratic: run on samples; at scale use :func:`silhouette_ml`
+    (squared-euclidean silhouette).
     """
-    sil = _silhouette_points(points, assigned, include_self)
-    row = sil.agg(F.avg("s").alias("sil")).collect()[0]
-    return float(row["sil"]) if row["sil"] is not None else 0.0
+    from mopso_engine.assign import _distances_exact
+    from mopso_engine.objectives import _BLOCK_CELLS_EXACT, MAX_EXACT_KNN_ROWS
+
+    rows = points.select("id", "features").join(assigned.select("id", "cluster"), "id").collect()
+    n = len(rows)
+    if n > MAX_EXACT_KNN_ROWS:
+        raise ValueError(
+            f"exact silhouette broadcasts all {n} rows and scores N² pairs; beyond "
+            f"{MAX_EXACT_KNN_ROWS} rows use silhouette_ml or a sample"
+        )
+    if n == 0:
+        return 0.0
+    order = np.argsort(np.array([r["id"] for r in rows], dtype=np.int64), kind="stable")
+    x = np.array([rows[i]["features"] for i in order], dtype=np.float64)
+    _, cl = np.unique(np.array([rows[i]["cluster"] for i in order]), return_inverse=True)
+    block = max(1, _BLOCK_CELLS_EXACT // max(1, n * x.shape[1]))
+    n_blocks = -(-n // block)
+    spark = points.sparkSession
+    bc = spark.sparkContext.broadcast((x, cl))
+
+    def kernel(batches):
+        xs, cs = bc.value
+        members = [cs == j for j in range(cs.max() + 1)]
+        cnt = np.array([m.sum() for m in members], dtype=np.float64)
+        for pdf in batches:
+            for b in pdf["id"].to_numpy():
+                lo, hi = int(b) * block, min(n, (int(b) + 1) * block)
+                d = _distances_exact(xs[lo:hi], xs)
+                sums = np.stack([d[:, m].sum(axis=1) for m in members], axis=1)
+                own = cs[lo:hi]
+                rr = np.arange(hi - lo)
+                own_n = cnt[own] - (0 if include_self else 1)
+                with np.errstate(invalid="ignore", divide="ignore"):
+                    a = sums[rr, own] / own_n
+                    means = sums / cnt
+                    means[rr, own] = np.inf
+                    b_ = means.min(axis=1)
+                    top = np.maximum(a, b_)
+                    keep = (own_n > 0) & np.isfinite(b_) & (top > 0)
+                    s = np.where(keep, (b_ - a) / top, np.nan)
+                yield pd.DataFrame({"row": np.arange(lo, hi, dtype=np.int64), "s": s})
+
+    schema = StructType([StructField("row", LongType(), False), StructField("s", DoubleType(), True)])
+    try:
+        out = (
+            spark.range(n_blocks, numPartitions=min(n_blocks, spark.sparkContext.defaultParallelism))
+            .mapInPandas(kernel, schema=schema)
+            .collect()
+        )
+    finally:
+        bc.destroy()
+    s = np.full(n, np.nan)
+    for r in out:
+        s[r["row"]] = r["s"]
+    kept = s[~np.isnan(s)]
+    return math.fsum(kept) / len(kept) if len(kept) else 0.0
 
 
 def silhouette_exact_df(points: DataFrame, assigned: DataFrame, *, include_self: bool = True, ndigits: int = 6) -> DataFrame:
-    """1-row DataFrame(sil double) twin of :func:`silhouette_exact`, for
-    declarative pipelines / oracle checks."""
+    """1-row DataFrame(sil double) of :func:`silhouette_exact`'s value
+    through the relational plan, for declarative pipelines / oracle
+    checks."""
     sil = _silhouette_points(points, assigned, include_self)
     return sil.agg(F.round(F.avg("s"), ndigits).alias("sil"))
 

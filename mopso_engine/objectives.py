@@ -315,8 +315,23 @@ def _knn_map(points: DataFrame, l_nbrs: int, scope: str, *, packed: bool, n_rows
                 )
 
     if packed:
-        return points.select("id", "features", "label").mapInPandas(kernel, schema=_NBR_SCHEMA_BIN)
-    return points.select("id", "features").mapInPandas(kernel, schema=PAIRS_SCHEMA)
+        out = points.select("id", "features", "label").mapInPandas(kernel, schema=_NBR_SCHEMA_BIN)
+    else:
+        out = points.select("id", "features").mapInPandas(kernel, schema=PAIRS_SCHEMA)
+    if scope == "exact":
+        out._knn_broadcast = bc  # released by _release_knn once the table's consumer is done
+    return out
+
+
+def _release_knn(table: DataFrame) -> None:
+    """Destroy the exact-scope broadcast behind a :func:`_knn_map` table
+    (N·d·8 bytes on the driver and every executor). Call it once nothing
+    will compute the table again: after its cache is unpersisted, or
+    after its last job. No-op for a partition-local table."""
+    bc = getattr(table, "_knn_broadcast", None)
+    if bc is not None:
+        bc.destroy()
+        table._knn_broadcast = None
 
 
 def knn_pairs_exact(

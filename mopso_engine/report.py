@@ -10,7 +10,6 @@ import numpy as np
 from pyspark.sql import DataFrame
 
 from mopso_engine import metrics as metrics_mod
-from mopso_engine.assign import assign_with_labels
 from mopso_engine.engine import MopsoEngine, MopsoResult
 from mopso_engine.init import kmeans_centers
 
@@ -62,15 +61,13 @@ def build_report(engine: MopsoEngine, points: DataFrame, result: MopsoResult, *,
         entry["purity_accepted"] = len({r["modal_cluster"] for r in rows}) == result.k
     if kmeans_baseline:
         km = kmeans_centers(points, result.k, seed=cfg.seed)
-        awl = assign_with_labels(points, km).persist()
-        purity, accepted = metrics_mod.purity_accuracy(awl, result.n_points, result.k)
+        ev = metrics_mod.assignment_report(points, km, result.n_points)
         report["kmeans_baseline"] = {
-            "purity": purity,
-            "purity_accepted": accepted,
-            "inertia": metrics_mod.inertia(awl),
+            "purity": ev["purity"],
+            "purity_accepted": ev["purity_accepted"],
+            "inertia": ev["inertia"],
             "centers": np.asarray(km).tolist(),
         }
-        awl.unpersist()
     return report
 
 

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mopso_engine.assign import assign_all_solutions
-from mopso_engine.objectives import knn_pairs_exact, knn_pairs_partition_local
+from mopso_engine.objectives import _release_knn, knn_pairs_exact, knn_pairs_partition_local
 
 
 def rescore_archive(
@@ -54,7 +54,7 @@ def rescore_archive(
       partition-local fit would disagree by construction).
 
     Eager: persists the multi-solution assignment for its two uses and
-    releases it before returning.
+    releases it, and the exact scope's broadcast, before returning.
     """
     stack = np.stack(positions)
     if knn_mode == "partition_local":
@@ -108,6 +108,7 @@ def rescore_archive(
     finally:
         asg.unpersist()
         pts.unpersist()
+        _release_knn(pairs)
     dev = {r["solution"]: r["dev"] for r in dev_rows}
     conn = {r["solution"]: r["conn"] for r in conn_rows}
     return [(s, float(dev[s]), float(conn.get(s, 0.0))) for s in sorted(dev)]

@@ -3,8 +3,9 @@ import pytest
 from pyspark.sql import SparkSession
 
 
-@pytest.fixture(scope="session")
-def spark():
+def make_spark() -> SparkSession:
+    """The tests' session; ``tools/report_fixture.py`` records its values
+    with the same settings."""
     import tempfile
 
     s = (
@@ -20,6 +21,12 @@ def spark():
         .getOrCreate()
     )
     s.sparkContext.setLogLevel("WARN")
+    return s
+
+
+@pytest.fixture(scope="session")
+def spark():
+    s = make_spark()
     yield s
     s.stop()
 
@@ -68,3 +75,25 @@ def oracle_conn(x: np.ndarray, clusters: np.ndarray, l_nbrs=10):
             if clusters[j] == clusters[i]:
                 total += 1.0 / rank
     return total
+
+
+def oracle_silhouette(x: np.ndarray, clusters: np.ndarray, include_self: bool = True) -> float:
+    """Literal exact silhouette (Spark_MOPSO_Avg.scala:622-633): mean over
+    i of (b−a)/max(a,b), a = mean distance to the own cluster (with i
+    itself when ``include_self``), b = smallest mean distance to another
+    cluster. A row without an own distance (a singleton and not
+    ``include_self``), without another cluster, or with max(a,b) = 0
+    scores nothing; no row left → 0.0."""
+    d = np.sqrt(((x[:, None, :] - x[None, :, :]) ** 2).sum(axis=2))
+    svals = []
+    for i in range(len(x)):
+        own = clusters == clusters[i]
+        if not include_self:
+            own[i] = False
+        others = [d[i][clusters == c].mean() for c in np.unique(clusters) if c != clusters[i]]
+        if not own.any() or not others:
+            continue
+        a, b = d[i][own].mean(), min(others)
+        if max(a, b) > 0:
+            svals.append((b - a) / max(a, b))
+    return float(np.mean(svals)) if svals else 0.0

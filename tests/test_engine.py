@@ -5,6 +5,7 @@ import pytest
 
 from mopso_engine import MopsoConfig, MopsoEngine
 from mopso_engine.pareto import non_dominated_mask
+from tests.conftest import make_blobs
 
 
 @pytest.fixture(scope="module")
@@ -185,6 +186,40 @@ def test_rescore_agrees_beyond_exact_knn_ceiling(blobs_df, small_cfg, monkeypatc
         kd, kc = (float(v) for v in res.archive_fitness[s])
         assert math.isclose(kd, dev, rel_tol=1e-6)
         assert math.isclose(kc, conn, rel_tol=1e-6)
+
+
+@pytest.mark.parametrize("consumer", ["fit", "rescore_archive", "silhouette_exact"])
+def test_exact_broadcasts_released(spark, blobs_df, small_cfg, monkeypatch, consumer):
+    """Every broadcast an exact-scope consumer creates (the kNN map's
+    (ids, features) table, the exact silhouette's rows) is destroyed by
+    the time the consumer returns: the driver keeps no N·d·8-byte copy
+    for the ContextCleaner, and the broadcast's file is gone."""
+    import os
+
+    from mopso_engine import metrics
+    from mopso_engine.assign import assign
+    from mopso_engine.rescore import rescore_archive
+
+    made = []
+    orig = type(spark.sparkContext).broadcast
+
+    def recording(sc, value):
+        bc = orig(sc, value)
+        made.append(bc)
+        return bc
+
+    monkeypatch.setattr(type(spark.sparkContext), "broadcast", recording)
+    if consumer == "fit":
+        res = MopsoEngine(small_cfg).fit(blobs_df)
+        assert res.knn_mode_used == "exact"
+    elif consumer == "rescore_archive":
+        _, _, _, c = make_blobs()
+        rescore_archive(blobs_df, [c], knn_l=5, knn_mode="exact")
+    else:
+        _, _, _, c = make_blobs()
+        metrics.silhouette_exact(blobs_df, assign(blobs_df, c))
+    assert made
+    assert [os.path.exists(bc._path) for bc in made] == [False] * len(made)
 
 
 def test_exact_mode_layout_invariance_bitwise(blobs_df, small_cfg):

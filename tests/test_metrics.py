@@ -3,7 +3,7 @@ import pytest
 
 from mopso_engine import metrics as M
 from mopso_engine.assign import assign, assign_with_labels
-from tests.conftest import oracle_assign
+from tests.conftest import oracle_assign, oracle_silhouette
 
 
 @pytest.fixture(scope="module")
@@ -128,16 +128,8 @@ def test_dbi_max_not_reset_is_monotone_larger(assigned, blobs):
 def test_silhouette_exact_oracle(spark, blobs_df, blobs):
     _, x, _, c = blobs
     cl, _ = oracle_assign(x, c)
-    n = len(x)
-    d = np.sqrt(((x[:, None, :] - x[None, :, :]) ** 2).sum(axis=2))
-    svals = []
-    for i in range(n):
-        own = d[i][cl == cl[i]]  # includes self (reference bias)
-        a = own.mean()
-        b = min(d[i][cl == kk].mean() for kk in np.unique(cl) if kk != cl[i])
-        svals.append((b - a) / max(a, b))
     got = M.silhouette_exact(blobs_df, assign(blobs_df, c))
-    assert got == pytest.approx(np.mean(svals), rel=1e-9)
+    assert got == pytest.approx(oracle_silhouette(x, cl), rel=1e-9)  # includes self (reference bias)
     assert got > 0.8  # well-separated blobs
 
 
