@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
+from mopso_engine.worker import prepare
+
 
 def _distances(block: np.ndarray, centers: np.ndarray) -> np.ndarray:
     """(n,d) × (k,d) → (n,k) euclidean distances, one BLAS gemm."""
@@ -68,6 +70,7 @@ def assign(points: DataFrame, centers: np.ndarray, *, exact_math: bool = False) 
     )
 
     def kernel(batches):
+        prepare()
         for pdf in batches:
             x = np.stack(pdf["features"].to_numpy()).astype(np.float64)
             d = dist_fn(x, c)
@@ -117,6 +120,7 @@ def assign_all_solutions(
     )
 
     def kernel(batches):
+        prepare()
         for pdf in batches:
             x = np.stack(pdf["features"].to_numpy()).astype(np.float64)
             n = x.shape[0]

@@ -219,13 +219,16 @@ class MopsoEngine:
 
         # Own the parallelism instead of inheriting the session default:
         # in exact mode results are partition-invariant, so size partitions
-        # for the CPU-bound fitness kernel (~2k rows each, capped at 4×
+        # for the CPU-bound fitness kernel (~256 rows each, capped at 4×
         # cores). Hash-partition on id + sort within partitions: the layout
         # (and with it the float-summation order of the fitness partials)
-        # becomes a pure function of the data — independent of input file
-        # splits, cpu count and arrow batch size — so a seeded fit is
-        # bit-reproducible across session configs (the property the
-        # post-hoc fit oracle pins). partition_local mode keeps the
+        # is independent of input file splits and arrow batch size. It is
+        # NOT independent of the cpu count: above 1024 rows per core the
+        # 4×cores cap sets the partition count, so the summation order
+        # (and the fitness's last bits) follow the core count (ROADMAP
+        # item 1). Below that a seeded fit is bit-reproducible across
+        # session configs (the property the post-hoc fit oracle pins).
+        # partition_local mode keeps the
         # caller's layout — there partitioning IS the semantics (AvgLabel
         # repartitions by label).
         layout_partitions: int | None = None
@@ -236,8 +239,10 @@ class MopsoEngine:
             # (distances for S solutions per row): at the old ~2k floor a
             # 2000-row corpus ran the whole kernel on ONE core while the
             # rest idled — measured 0.60s/iter vs 0.24s at 8 partitions.
-            # 256 rows is still ≳20× the ~10ms per-task
-            # fixed cost; large corpora bind on the 4×cores cap as before.
+            # A Python task's fixed cost is ~75 ms of a core on a 4-core
+            # host (empty mapInPandas tasks on local[4] with
+            # worker.prepare; ~270 ms without it), so small corpora pay
+            # mostly that; large corpora bind on the 4×cores cap.
             target = int(min(4 * dp, max(1, -(-n // 256))))
             pts_k = pts.repartition(target, "id").sortWithinPartitions("id")
             layout_partitions = target

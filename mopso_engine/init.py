@@ -102,7 +102,12 @@ def corpus_stats(points: DataFrame, k_hint: int | None = None):
     the reference's separate count / distinct-label / 2·d min-max jobs
     (A1+A2+A3; Spark_MOPSO_Avg.scala:89-103,1239-1252). Values are
     identical to the unfused jobs (exact min/max/counts), so seeded fits
-    replay bit-identically; only the job count changes."""
+    replay bit-identically; only the job count changes.
+
+    It is also the fit's ingest check, at no extra job: a non-finite
+    bound (Spark's ``max`` is NaN when any value is NaN; ±inf shows in
+    ``min`` or ``max``) or per-dimension counts that differ (ragged
+    feature arrays) raise ``ValueError`` before any later job."""
     rows = (
         points.select("label", F.posexplode("features").alias("idx", "v"))
         .groupBy("idx")
@@ -124,4 +129,17 @@ def corpus_stats(points: DataFrame, k_hint: int | None = None):
         if k <= 1:
             raise ValueError("cannot infer k from labels; pass MopsoConfig(k=...)")
     bounds = np.array([[r["lo"], r["hi"]] for r in rows], dtype=np.float64)
+    bad = np.flatnonzero(~np.isfinite(bounds).all(axis=1))
+    if len(bad):
+        lo, hi = bounds[bad[0]]
+        raise ValueError(
+            f"non-finite feature value in dimension {bad[0]} (min {lo}, max {hi}); "
+            "features must be finite"
+        )
+    ragged = [r["idx"] for r in rows if r["n"] != n]
+    if ragged:
+        raise ValueError(
+            f"ragged feature arrays: {rows[ragged[0]]['n']} rows reach dimension {ragged[0]}, "
+            f"{n} reach dimension 0; every row must have the same length"
+        )
     return int(n), len(rows), int(k), bounds

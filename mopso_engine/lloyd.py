@@ -42,6 +42,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
+from mopso_engine.worker import prepare
+
 #: hard bounds of the derived RELATIVE grid resolution r = k + x_bound_log2
 #: (grid steps per unit of data magnitude, 2^r): 2²² keeps the gate's
 #: quantization error ≲1e-6·|x| on small corpora; 2¹³ is the floor below
@@ -155,6 +157,7 @@ def _iteration_stats(
     qc = centers_q.copy()
 
     def kernel(batches: Iterable[pd.DataFrame]):
+        prepare()
         for pdf in batches:
             if not len(pdf):
                 continue

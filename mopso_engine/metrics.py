@@ -35,6 +35,8 @@ from pyspark.sql.types import (
 )
 from pyspark.sql.window import Window
 
+from mopso_engine.worker import prepare
+
 
 def cluster_sizes(assigned: DataFrame) -> DataFrame:
     """A8: cluster-size histogram."""
@@ -184,6 +186,7 @@ def assignment_report(points: DataFrame, centers: np.ndarray, n_total: int, *, m
     )
 
     def kernel(batches):
+        prepare()
         for pdf in batches:
             if not len(pdf):
                 continue
@@ -260,7 +263,7 @@ def _silhouette_points(points: DataFrame, assigned: DataFrame, include_self: boo
         .agg(F.min("mean_d").alias("b"))
     )
     return own.join(other, "i").select(
-        ((F.col("b") - F.col("a")) / F.greatest(F.col("a"), F.col("b"))).alias("s")
+        F.try_divide(F.col("b") - F.col("a"), F.greatest(F.col("a"), F.col("b"))).alias("s")
     )
 
 
@@ -306,6 +309,7 @@ def silhouette_exact(points: DataFrame, assigned: DataFrame, *, include_self: bo
     bc = spark.sparkContext.broadcast((x, cl))
 
     def kernel(batches):
+        prepare()
         xs, cs = bc.value
         members = [cs == j for j in range(cs.max() + 1)]
         cnt = np.array([m.sum() for m in members], dtype=np.float64)
@@ -390,6 +394,7 @@ def silhouette_all_solutions(points: DataFrame, centers_stack) -> np.ndarray:
     )
 
     def stats_kernel(batches):
+        prepare()
         chunks = [pdf for pdf in batches if len(pdf)]
         if not chunks:
             return
@@ -437,6 +442,7 @@ def silhouette_all_solutions(points: DataFrame, centers_stack) -> np.ndarray:
     )
 
     def coef_kernel(batches):
+        prepare()
         chunks = [pdf for pdf in batches if len(pdf)]
         if not chunks:
             return

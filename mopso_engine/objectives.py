@@ -40,6 +40,7 @@ from pyspark.sql.types import (
 )
 
 from mopso_engine.assign import _dist_from_product, _distances, _distances_exact
+from mopso_engine.worker import prepare
 
 #: cap on the scratch distance-matrix cells per block for the BLAS/gemm
 #: path (262_144 cells = 2 MB of float64): sized to stay CACHE-resident
@@ -290,6 +291,7 @@ def _knn_map(points: DataFrame, l_nbrs: int, scope: str, *, packed: bool, n_rows
             yield pdf, x, x[order], pdf["id"].to_numpy()[order]
 
     def kernel(batches: Iterable[pd.DataFrame]):
+        prepare()
         for pdf, x, ref, ref_ids in scored_blocks(batches):
             ids = pdf["id"].to_numpy()
             nbr_pos, nbr_d = _topl_blocked(x, ref, ref_ids, ids, l_nbrs, dist_fn=dist_fn)
@@ -593,6 +595,7 @@ def evaluate_solutions(nbr_df: DataFrame, centers_stack: np.ndarray, *, partitio
     flat = cs.reshape(s * k, d_)
 
     def kernel(batches: Iterable[pd.DataFrame]):
+        prepare()
         # accumulate over the partition's batches and emit ONE partial
         # row-set per partition: the per-iteration job becomes map-only
         # (no Exchange at all); the driver sums S×num_partitions rows —

@@ -303,6 +303,37 @@ class TestCheckpointResume:
         assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
+def _ingest_fit(spark, rows, monkeypatch):
+    """Fit ``rows`` with every job after the stats job disabled: an
+    ingest error must come from ``init.corpus_stats`` itself."""
+    from mopso_engine import init as init_mod
+
+    def later_job(*a, **kw):
+        raise AssertionError("a job after corpus_stats ran")
+
+    monkeypatch.setattr(init_mod, "sample_features", later_job)
+    df = spark.createDataFrame(rows, "id long, features array<double>, label int")
+    MopsoEngine(MopsoConfig(n_particles=4, iter_max=2, knn_l=3, k=2)).fit(df)
+
+
+@pytest.mark.parametrize("bad", [float("nan"), float("inf"), float("-inf")], ids=["nan", "inf", "-inf"])
+def test_fit_rejects_non_finite_feature_at_ingest(spark, monkeypatch, bad):
+    rows = [(i, [float(i), float(i % 3), 1.0], 1 + i % 2) for i in range(20)]
+    rows[7] = (7, [7.0, bad, 1.0], 2)
+    with pytest.raises(ValueError, match="non-finite feature value in dimension 1 "):
+        _ingest_fit(spark, rows, monkeypatch)
+
+
+@pytest.mark.parametrize(
+    "extra, msg", [(1, "1 rows reach dimension 3, 20"), (-1, "19 rows reach dimension 2, 20")], ids=["longer", "shorter"]
+)
+def test_fit_rejects_ragged_features_at_ingest(spark, monkeypatch, extra, msg):
+    rows = [(i, [float(i), float(i % 3), 1.0], 1 + i % 2) for i in range(20)]
+    rows[5] = (5, [5.0, 2.0, 1.0, 9.0][: 3 + extra], 2)
+    with pytest.raises(ValueError, match=f"ragged feature arrays: {msg} reach dimension 0"):
+        _ingest_fit(spark, rows, monkeypatch)
+
+
 def test_early_stop_triggers_on_constant_front(blobs_df, monkeypatch):
     """With the fitness forced constant the front still GROWS while the
     archive fills (4 equal-fitness entries join per iteration: 4 pre-loop

@@ -36,17 +36,26 @@ def _assigned(spark, clusters, parts):
     return spark.createDataFrame(rows, "id long, cluster int").repartition(parts).persist()
 
 
-def _relational_silhouette(spark, pts, asg, include_self):
-    """The relational plan's average. Its (b−a)/max(a,b) must be null at
-    max(a,b) = 0 for ``avg`` to skip the row, which needs non-ANSI
-    division (ANSI raises there)."""
+def _relational_silhouette(pts, asg, include_self):
+    """The relational plan's average; its (b−a)/max(a,b) is null at
+    max(a,b) = 0, which ``avg`` skips."""
+    v = M._silhouette_points(pts, asg, include_self).agg(F.avg("s")).collect()[0][0]
+    return 0.0 if v is None else v
+
+
+def test_silhouette_exact_df_skips_zero_denominator(spark):
+    """Under ANSI division (the Spark 4 default) a row with
+    max(a, b) = 0 is skipped, as the kernel skips it, instead of raising
+    DIVIDE_BY_ZERO: three points at 0 split over clusters 1 and 2."""
+    pts = _points(spark, [[0.0], [0.0], [0.0], [5.0]], [1, 1, 1, 1], 2)
+    asg = _assigned(spark, [1, 1, 2, 3], 2)
     ansi = spark.conf.get("spark.sql.ansi.enabled")
-    spark.conf.set("spark.sql.ansi.enabled", "false")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
     try:
-        v = M._silhouette_points(pts, asg, include_self).agg(F.avg("s")).collect()[0][0]
+        got = M.silhouette_exact_df(pts, asg).first()["sil"]
     finally:
         spark.conf.set("spark.sql.ansi.enabled", ansi)
-    return 0.0 if v is None else v
+    assert got == round(M.silhouette_exact(pts, asg), 6)
 
 
 def _check_silhouette(spark, x, clusters, include_self):
@@ -59,7 +68,7 @@ def _check_silhouette(spark, x, clusters, include_self):
         asg = _assigned(spark, clusters, parts)
         got[parts] = M.silhouette_exact(pts, asg, include_self=include_self)
         if parts == 7:
-            rel = _relational_silhouette(spark, pts, asg, include_self)
+            rel = _relational_silhouette(pts, asg, include_self)
         pts.unpersist()
         asg.unpersist()
     assert got[1] == got[7]  # bit-identical over the input's partitioning
