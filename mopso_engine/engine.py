@@ -9,8 +9,10 @@ partials → collect → driver merge (Spark_MOPSO_Avg.scala:197-302).
 Scale notes:
 * the points table is scanned once per iteration, from cache, with zero
   data shuffle (only S·num_batches partial-agg rows move);
-* the kNN precompute (the only quadratic step) runs ONCE per fit and has
-  'partition_local' and 'lsh' backends for the 100 TB path;
+* the set-up (counts, bounds, labels, ingest checks, the init sample)
+  is ONE pass over the input, and the fit keeps no copy of it;
+* the kNN precompute (the only quadratic step) runs ONCE per fit and is
+  released on every exit;
 * swarm/archive state is O(S·k·d) doubles — never leaves the driver.
 """
 
@@ -55,15 +57,16 @@ class MopsoResult:
     #: rescorer can rebuild the layout, and with it the partition-local
     #: neighbor sets, exactly; None = caller's layout was kept
     layout_partitions: int | None = None
-    #: wall-clock decomposition of the fit: "setup" = stats + sample +
+    #: wall-clock decomposition of the fit: "setup" = the set-up pass +
     #: layout + kNN persist + init fitness (the one-off per-job fixed
     #: costs), "iter_loop" = the driver-looped fitness passes, "finalize"
     #: = best-selection + normalization, plus "n_iters_run". Lets a
     #: reader of a slow fit's timings tell noise from a regression:
     #: per-iteration flat + setup inflated = launch-overhead/IO noise,
     #: per-iteration inflated = a real kernel regression.
-    #: "setup_phases" splits setup into "stats" (the fused stats job +
-    #: sample), "knn_cache" (layout + the whole neighbor build, exact
+    #: "setup_phases" splits setup into "stats" (the one set-up pass of
+    #: init.corpus_stats: counts, bounds, labels, ingest checks and the
+    #: init sample), "knn_cache" (layout + the whole neighbor build, exact
     #: mode's collect + broadcast included, + persist) and either
     #: "init_fitness" (swarm init + the first fitness pass) or, on
     #: resume, "resume_load" (the checkpoint read only; also reported at
@@ -210,11 +213,12 @@ class MopsoEngine:
         cfg = self.cfg
         t0 = time.time()
 
-        pts = points.select("id", "features", "label").persist()
-        # ONE fused stats job (count + distinct-label + per-dim bounds):
-        # see init.corpus_stats — three fewer full scans than separate jobs
-        n, d, k, bounds = init_mod.corpus_stats(pts, cfg.k)
-        sample = init_mod.sample_features(pts, cfg.init_sample_size, cfg.seed)
+        # ONE set-up job (counts, labels, bounds, ingest checks and the
+        # seeded init sample): see init.corpus_stats. The fit keeps no
+        # copy of the input; the kNN build and the silhouette pick read
+        # the caller's plan, as the report functions do.
+        pts = points.select("id", "features", "label")
+        n, d, k, bounds, sample = init_mod.corpus_stats(pts, cfg.k, cfg.init_sample_size, cfg.seed)
         t_stats_end = time.time()
 
         # Own the parallelism instead of inheriting the session default:
@@ -270,92 +274,92 @@ class MopsoEngine:
         # fitness pass nor a resumed fit's first iteration absorbs the
         # build (that would inflate sec/iter with one-off IO)
         nbr = with_neighbors(pts_k, cfg.knn_l, mode=knn_mode, n_rows=n).persist()
-        nbr.count()
-        t_cache_end = time.time()
-        setup_sub: dict = {"stats": round(t_stats_end - t0, 3), "knn_cache": round(t_cache_end - t_stats_end, 3)}
-        part_weighted = cfg.fitness_mode == "partition_local"
+        try:
+            nbr.count()
+            t_cache_end = time.time()
+            setup_sub: dict = {"stats": round(t_stats_end - t0, 3), "knn_cache": round(t_cache_end - t_stats_end, 3)}
+            part_weighted = cfg.fitness_mode == "partition_local"
 
-        archive = Archive(
-            capacity=cfg.archive_capacity,
-            crowding_formula=cfg.crowding_formula,
-            endpoint_bug=cfg.bug_compat.crowding_endpoint_bug,
-        )
-        ckpt = None if checkpoint_dir is None else os.path.join(checkpoint_dir, "mopso_checkpoint.json")
-        ident = {"seed": cfg.seed, "n": n, "d": d, "k": k, "iter_max": cfg.iter_max}
-        if resume:
-            # the restored RNG state already reflects the init's draws, so
-            # the init and its distributed fitness pass are skipped
-            state = _LoopState.load(ckpt, ident, archive)
-            setup_sub["resume_load"] = round(time.time() - t_cache_end, 3)
-        else:
-            rng = np.random.default_rng(cfg.seed)
-            positions = init_mod.init_swarm(sample, bounds, k, cfg.n_particles, rng, method=cfg.init)
-            velocities = init_velocity(rng, positions.shape, cfg.v_min, cfg.v_max)
-            fitness = evaluate_solutions(nbr, positions, partition_weighted=part_weighted, n_total=n)
-            archive.update([ArchiveEntry(p.copy(), f.copy()) for p, f in zip(positions, fitness)])
-            state = _LoopState(0, positions, velocities, positions.copy(), fitness.copy(), archive, rng, [])
-            setup_sub["init_fitness"] = round(time.time() - t_cache_end, 3)
-
-        last_iter = cfg.iter_max if stop_after is None else min(int(stop_after), cfg.iter_max)
-        first_iter = state.iteration
-        t_setup_end = time.time()
-        for iteration in range(first_iter + 1, last_iter + 1):
-            w = cfg.w_at(iteration)
-            gbest = state.archive.global_best(state.rng)
-            state.positions, state.velocities = update_swarm(
-                state.positions, state.velocities, state.pbest_pos, gbest.position, w, cfg, state.rng,
-                feature_bounds=bounds,
+            archive = Archive(
+                capacity=cfg.archive_capacity,
+                crowding_formula=cfg.crowding_formula,
+                endpoint_bug=cfg.bug_compat.crowding_endpoint_bug,
             )
-            fitness = evaluate_solutions(nbr, state.positions, partition_weighted=part_weighted, n_total=n)
-            for i in range(cfg.n_particles):
-                state.pbest_pos[i], state.pbest_fit[i] = pbest_update(
-                    state.positions[i],
-                    fitness[i],
-                    state.pbest_pos[i],
-                    state.pbest_fit[i],
-                    state.rng,
-                    frozen=cfg.bug_compat.pbest_frozen,
-                    inverted=cfg.bug_compat.pbest_inverted,
+            ckpt = None if checkpoint_dir is None else os.path.join(checkpoint_dir, "mopso_checkpoint.json")
+            ident = {"seed": cfg.seed, "n": n, "d": d, "k": k, "iter_max": cfg.iter_max}
+            if resume:
+                # the restored RNG state already reflects the init's draws, so
+                # the init and its distributed fitness pass are skipped
+                state = _LoopState.load(ckpt, ident, archive)
+                setup_sub["resume_load"] = round(time.time() - t_cache_end, 3)
+            else:
+                rng = np.random.default_rng(cfg.seed)
+                positions = init_mod.init_swarm(sample, bounds, k, cfg.n_particles, rng, method=cfg.init)
+                velocities = init_velocity(rng, positions.shape, cfg.v_min, cfg.v_max)
+                fitness = evaluate_solutions(nbr, positions, partition_weighted=part_weighted, n_total=n)
+                archive.update([ArchiveEntry(p.copy(), f.copy()) for p, f in zip(positions, fitness)])
+                state = _LoopState(0, positions, velocities, positions.copy(), fitness.copy(), archive, rng, [])
+                setup_sub["init_fitness"] = round(time.time() - t_cache_end, 3)
+
+            last_iter = cfg.iter_max if stop_after is None else min(int(stop_after), cfg.iter_max)
+            first_iter = state.iteration
+            t_setup_end = time.time()
+            for iteration in range(first_iter + 1, last_iter + 1):
+                w = cfg.w_at(iteration)
+                gbest = state.archive.global_best(state.rng)
+                state.positions, state.velocities = update_swarm(
+                    state.positions, state.velocities, state.pbest_pos, gbest.position, w, cfg, state.rng,
+                    feature_bounds=bounds,
                 )
-            state.archive.update([ArchiveEntry(p.copy(), f.copy()) for p, f in zip(state.positions, fitness)])
+                fitness = evaluate_solutions(nbr, state.positions, partition_weighted=part_weighted, n_total=n)
+                for i in range(cfg.n_particles):
+                    state.pbest_pos[i], state.pbest_fit[i] = pbest_update(
+                        state.positions[i],
+                        fitness[i],
+                        state.pbest_pos[i],
+                        state.pbest_fit[i],
+                        state.rng,
+                        frozen=cfg.bug_compat.pbest_frozen,
+                        inverted=cfg.bug_compat.pbest_inverted,
+                    )
+                state.archive.update([ArchiveEntry(p.copy(), f.copy()) for p, f in zip(state.positions, fitness)])
+                front = state.archive.fitness_matrix()
+                state.history.append(
+                    {
+                        "iter": iteration,
+                        "w": w,
+                        "archive_size": len(state.archive.entries),
+                        "best_dev": float(front[:, 0].min()),
+                        "best_conn": float(front[:, 1].min()),
+                    }
+                )
+                state.iteration = iteration
+                if early_stop_patience is not None:
+                    fb = front.tobytes()
+                    state.stable_iters = state.stable_iters + 1 if fb == state.prev_front else 0
+                    state.prev_front = fb
+                if ckpt is not None:
+                    state.save(ckpt, ident)
+                if early_stop_patience is not None and state.stable_iters >= early_stop_patience:
+                    break
+
+            t_loop_end = time.time()
+            entries = state.archive.entries
             front = state.archive.fitness_matrix()
-            state.history.append(
-                {
-                    "iter": iteration,
-                    "w": w,
-                    "archive_size": len(state.archive.entries),
-                    "best_dev": float(front[:, 0].min()),
-                    "best_conn": float(front[:, 1].min()),
-                }
-            )
-            state.iteration = iteration
-            if early_stop_patience is not None:
-                fb = front.tobytes()
-                state.stable_iters = state.stable_iters + 1 if fb == state.prev_front else 0
-                state.prev_front = fb
-            if ckpt is not None:
-                state.save(ckpt, ident)
-            if early_stop_patience is not None and state.stable_iters >= early_stop_patience:
-                break
-
-        t_loop_end = time.time()
-        entries = state.archive.entries
-        front = state.archive.fitness_matrix()
-        norm = normalize_fitness(front)
-        if cfg.select_best == "silhouette":
-            # selectBestArchiveAsFinalResult (Spark_MOPSO_Avg.scala:578-602):
-            # max squared-euclidean silhouette across archive entries — ONE
-            # multi-solution stats pass + ONE coefficient pass for the whole
-            # archive (silhouette_all_solutions) instead of 2 jobs per entry
-            scores = metrics_mod.silhouette_all_solutions(pts, np.stack([e.position for e in entries]))
-            best_idx = int(np.argmax(scores))
-        else:
-            # knee: min normalized L2 to the ideal point
-            best_idx = int(np.argmin((norm**2).sum(axis=1)))
-
-        nbr.unpersist()
-        _release_knn(nbr)
-        pts.unpersist()
+            norm = normalize_fitness(front)
+            if cfg.select_best == "silhouette":
+                # selectBestArchiveAsFinalResult (Spark_MOPSO_Avg.scala:578-602):
+                # max squared-euclidean silhouette across archive entries — ONE
+                # multi-solution stats pass + ONE coefficient pass for the whole
+                # archive (silhouette_all_solutions) instead of 2 jobs per entry
+                scores = metrics_mod.silhouette_all_solutions(pts, np.stack([e.position for e in entries]))
+                best_idx = int(np.argmax(scores))
+            else:
+                # knee: min normalized L2 to the ideal point
+                best_idx = int(np.argmin((norm**2).sum(axis=1)))
+        finally:
+            nbr.unpersist()
+            _release_knn(nbr)
         t_end = time.time()
         phases = {
             "setup": round(t_setup_end - t0, 3),

@@ -15,20 +15,26 @@ All inits return canonical center order: ascending by first coordinate
 
 from __future__ import annotations
 
+import pickle
+
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import BinaryType, StructField, StructType
 
 from mopso_engine.assign import _distances
 from mopso_engine.pso import canonicalize_centers
+from mopso_engine.worker import prepare
 
 
 def sample_features(points: DataFrame, n: int, seed: int) -> np.ndarray:
-    """Seeded, PARTITION-INVARIANT driver-side sample: order by
-    (xxhash64(id, seed), id) and take n — a TakeOrderedAndProject (top-n,
-    no global sort materialization), so the same rows come back in the
-    same order regardless of how the input is partitioned. ``sample()``
-    would be seeded per-partition and change with the layout."""
+    """The relational plan of the fit's init sample, kept as the oracle
+    of :func:`corpus_stats`' ``sample``: order by (xxhash64(id, seed), id)
+    and take n, one TakeOrderedAndProject job. The order does not depend
+    on the partitioning; ``sample()`` would be seeded per partition and
+    change with the layout. The fit does not call it."""
     rows = (
         points.select("id", "features")
         .orderBy(F.xxhash64("id", F.lit(seed)), F.col("id"))
@@ -97,38 +103,122 @@ def init_swarm(
     raise ValueError(f"unknown init method: {method}")
 
 
-def corpus_stats(points: DataFrame, k_hint: int | None = None):
-    """(n, d, k, bounds) in ONE scan + one tiny d-keyed shuffle — fuses
-    the reference's separate count / distinct-label / 2·d min-max jobs
-    (A1+A2+A3; Spark_MOPSO_Avg.scala:89-103,1239-1252). Values are
-    identical to the unfused jobs (exact min/max/counts), so seeded fits
-    replay bit-identically; only the job count changes.
+def _smallest(h: np.ndarray, ids: np.ndarray, x: np.ndarray, size: int):
+    """The ``size`` rows smallest by (h, id), in that order. The sort is
+    stable, so rows that tie on both keep their input order."""
+    order = np.lexsort((ids, h))[:size]
+    return h[order], ids[order], x[order]
 
-    It is also the fit's ingest check, at no extra job: a non-finite
-    bound (Spark's ``max`` is NaN when any value is NaN; ±inf shows in
-    ``min`` or ``max``) or per-dimension counts that differ (ragged
-    feature arrays) raise ``ValueError`` before any later job."""
-    rows = (
-        points.select("label", F.posexplode("features").alias("idx", "v"))
-        .groupBy("idx")
-        .agg(
-            F.min("v").alias("lo"),
-            F.max("v").alias("hi"),
-            F.count("*").alias("n"),
-            F.countDistinct("label").alias("k"),
-        )
-        .orderBy("idx")
-        .collect()
+
+def _stats_partial(batches, want_labels: bool, sample_size: int):
+    """One partition's share of :func:`corpus_stats`, as one pickled row:
+    the rows with null features, the histogram of feature-array lengths,
+    the non-null labels, and, while the lengths agree, per-dimension
+    min/max and the partition's ``sample_size`` rows smallest by (h, id).
+    The sample is cut to that size after every Arrow batch, so a task
+    never holds its whole partition. Once the lengths differ the merge
+    raises, so bounds and sample are no longer kept."""
+    prepare()
+    nulls = 0
+    lengths: dict[int, int] = {}
+    lo = hi = sample = None
+    labels: set = set()
+    for b in batches:
+        if want_labels:
+            labels.update(pc.unique(b.column("label")).drop_null().to_pylist())
+        feats = b.column("features")
+        valid = feats.is_valid()
+        if feats.null_count:
+            feats = feats.filter(valid)
+        lens = pc.list_value_length(feats).to_numpy()
+        vals = feats.flatten()
+        nulls += b.num_rows - len(lens)
+        if vals.null_count:
+            owner = np.repeat(np.arange(len(lens)), lens)
+            nulls += len(np.unique(owner[vals.is_null().to_numpy(zero_copy_only=False)]))
+        for w, c in zip(*np.unique(lens, return_counts=True)):
+            lengths[int(w)] = lengths.get(int(w), 0) + int(c)
+        if len(lengths) != 1 or not len(lens):
+            continue
+        # Spark's min (NaN only if every value is NaN) and max (NaN if any is)
+        x = vals.to_numpy(zero_copy_only=False).reshape(len(lens), int(lens[0]))
+        b_lo, b_hi = np.fmin.reduce(x, axis=0), x.max(axis=0)
+        lo, hi = (b_lo, b_hi) if lo is None else (np.fmin(lo, b_lo), np.maximum(hi, b_hi))
+        valid = valid.to_numpy(zero_copy_only=False)
+        part = (b.column("h").to_numpy()[valid], b.column("id").to_numpy()[valid], x)
+        if sample is not None:
+            part = tuple(np.concatenate(p) for p in zip(sample, part))
+        sample = part if len(part[0]) <= sample_size else _smallest(*part, sample_size)
+    partial = dict(nulls=nulls, lengths=lengths, lo=lo, hi=hi, labels=labels, sample=sample)
+    yield pa.RecordBatch.from_arrays([pa.array([pickle.dumps(partial)], pa.binary())], names=["partial"])
+
+
+def corpus_stats(points: DataFrame, k_hint: int | None, sample_size: int, seed: int):
+    """The fit's one set-up pass: ``(n, d, k, bounds, sample)`` from ONE
+    ``mapInArrow`` job over ``points``, collected with ``toArrow()``.
+
+    It fuses the reference's separate count / distinct-label / 2·d
+    min-max jobs (A1+A2+A3; Spark_MOPSO_Avg.scala:89-103,1239-1252) and
+    the seeded init sample. Each task emits its partition's partial
+    (:func:`_stats_partial`); the driver merges them. The values are
+    those of the relational plans: exact counts, Spark's min/max (a
+    signed zero bound reads +0.0), k = the number of distinct non-null
+    labels unless ``k_hint`` is given, and ``sample`` = the first
+    ``sample_size`` rows by (``xxhash64(id, seed)``, id), in that order,
+    as :func:`sample_features` returns them. So the sample does not
+    depend on the partitioning, and seeded fits replay bit-identically.
+
+    It is also the fit's ingest check: null feature arrays (or null
+    values in them), ragged arrays and a non-finite value raise
+    ``ValueError`` before any later job."""
+    want_labels = k_hint is None
+    cols = ["id", "features", F.xxhash64("id", F.lit(seed)).alias("h")] + (["label"] if want_labels else [])
+    schema = StructType([StructField("partial", BinaryType(), False)])
+    table = (
+        points.select(*cols)
+        .mapInArrow(lambda batches: _stats_partial(batches, want_labels, sample_size), schema)
+        .toArrow()
     )
-    if not rows:
+    # Fold the partials in one at a time, in partition order, and drop
+    # each once merged: the driver holds the running merge and one
+    # partial, not an unpickled copy of every partition's sample.
+    nulls, lengths, labels = 0, {}, set()
+    lo = hi = sample = None
+    chunks = table.column("partial").chunks
+    del table
+    while chunks:
+        for blob in chunks.pop(0).to_pylist():
+            p = pickle.loads(blob)
+            nulls += p["nulls"]
+            for w, c in p["lengths"].items():
+                lengths[w] = lengths.get(w, 0) + c
+            labels |= p["labels"]
+            # once the lengths differ the check below raises; stop merging
+            if p["lo"] is None or len(lengths) > 1:
+                continue
+            lo, hi = (p["lo"], p["hi"]) if lo is None else (np.fmin(lo, p["lo"]), np.maximum(hi, p["hi"]))
+            part = p["sample"] if sample is None else tuple(np.concatenate(c) for c in zip(sample, p["sample"]))
+            sample = _smallest(*part, sample_size)
+
+    if nulls:
+        raise ValueError(f"null features in {nulls} rows; every row needs a features array of finite values")
+    d = max(lengths, default=0)
+    if d == 0:
         raise ValueError("empty points table")
-    n = rows[0]["n"]
+    if len(lengths) > 1:
+        reach = [sum(c for w, c in lengths.items() if w > j) for j in range(d)]
+        j = next((j for j in range(d) if reach[j] != reach[0]), None)
+        first = f"{lengths[0]} rows have no features" if j is None else f"{reach[j]} rows reach dimension {j}"
+        raise ValueError(
+            f"ragged feature arrays: {first}, {reach[0]} reach dimension 0; every row must have the same length"
+        )
+    n = lengths[d]
     k = k_hint
     if k is None:
-        k = rows[0]["k"]
+        k = len(labels)
         if k <= 1:
             raise ValueError("cannot infer k from labels; pass MopsoConfig(k=...)")
-    bounds = np.array([[r["lo"], r["hi"]] for r in rows], dtype=np.float64)
+    bounds = np.stack([lo, hi], axis=1) + 0.0
     bad = np.flatnonzero(~np.isfinite(bounds).all(axis=1))
     if len(bad):
         lo, hi = bounds[bad[0]]
@@ -136,10 +226,4 @@ def corpus_stats(points: DataFrame, k_hint: int | None = None):
             f"non-finite feature value in dimension {bad[0]} (min {lo}, max {hi}); "
             "features must be finite"
         )
-    ragged = [r["idx"] for r in rows if r["n"] != n]
-    if ragged:
-        raise ValueError(
-            f"ragged feature arrays: {rows[ragged[0]]['n']} rows reach dimension {ragged[0]}, "
-            f"{n} reach dimension 0; every row must have the same length"
-        )
-    return int(n), len(rows), int(k), bounds
+    return n, d, int(k), bounds, sample[2]

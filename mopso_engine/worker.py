@@ -1,4 +1,5 @@
-"""Python-worker set-up shared by the engine's ``mapInPandas`` kernels.
+"""Python-worker set-up shared by the engine's ``mapInPandas`` and
+``mapInArrow`` kernels.
 
 Before every task PySpark's worker calls ``importlib.invalidate_caches()``
 (``pyspark/worker_util.py`` ``setup_spark_files``). On CPython 3.11 and

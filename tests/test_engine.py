@@ -188,8 +188,23 @@ def test_rescore_agrees_beyond_exact_knn_ceiling(blobs_df, small_cfg, monkeypatc
         assert math.isclose(kc, conn, rel_tol=1e-6)
 
 
+@pytest.fixture
+def broadcasts(spark, monkeypatch):
+    """The broadcasts the session makes while the test runs."""
+    made = []
+    orig = type(spark.sparkContext).broadcast
+
+    def recording(sc, value):
+        bc = orig(sc, value)
+        made.append(bc)
+        return bc
+
+    monkeypatch.setattr(type(spark.sparkContext), "broadcast", recording)
+    return made
+
+
 @pytest.mark.parametrize("consumer", ["fit", "rescore_archive", "silhouette_exact"])
-def test_exact_broadcasts_released(spark, blobs_df, small_cfg, monkeypatch, consumer):
+def test_exact_broadcasts_released(blobs_df, small_cfg, broadcasts, consumer):
     """Every broadcast an exact-scope consumer creates (the kNN map's
     (ids, features) table, the exact silhouette's rows) is destroyed by
     the time the consumer returns: the driver keeps no N·d·8-byte copy
@@ -200,15 +215,6 @@ def test_exact_broadcasts_released(spark, blobs_df, small_cfg, monkeypatch, cons
     from mopso_engine.assign import assign
     from mopso_engine.rescore import rescore_archive
 
-    made = []
-    orig = type(spark.sparkContext).broadcast
-
-    def recording(sc, value):
-        bc = orig(sc, value)
-        made.append(bc)
-        return bc
-
-    monkeypatch.setattr(type(spark.sparkContext), "broadcast", recording)
     if consumer == "fit":
         res = MopsoEngine(small_cfg).fit(blobs_df)
         assert res.knn_mode_used == "exact"
@@ -218,8 +224,8 @@ def test_exact_broadcasts_released(spark, blobs_df, small_cfg, monkeypatch, cons
     else:
         _, _, _, c = make_blobs()
         metrics.silhouette_exact(blobs_df, assign(blobs_df, c))
-    assert made
-    assert [os.path.exists(bc._path) for bc in made] == [False] * len(made)
+    assert broadcasts
+    assert [os.path.exists(bc._path) for bc in broadcasts] == [False] * len(broadcasts)
 
 
 def test_exact_mode_layout_invariance_bitwise(blobs_df, small_cfg):
@@ -304,14 +310,15 @@ class TestCheckpointResume:
 
 
 def _ingest_fit(spark, rows, monkeypatch):
-    """Fit ``rows`` with every job after the stats job disabled: an
-    ingest error must come from ``init.corpus_stats`` itself."""
-    from mopso_engine import init as init_mod
+    """Fit ``rows`` with every job after the set-up pass disabled: an
+    ingest error must come from ``init.corpus_stats`` itself, before the
+    kNN build (the fit's next job)."""
+    import mopso_engine.engine as eng_mod
 
     def later_job(*a, **kw):
         raise AssertionError("a job after corpus_stats ran")
 
-    monkeypatch.setattr(init_mod, "sample_features", later_job)
+    monkeypatch.setattr(eng_mod, "with_neighbors", later_job)
     df = spark.createDataFrame(rows, "id long, features array<double>, label int")
     MopsoEngine(MopsoConfig(n_particles=4, iter_max=2, knn_l=3, k=2)).fit(df)
 
@@ -332,6 +339,50 @@ def test_fit_rejects_ragged_features_at_ingest(spark, monkeypatch, extra, msg):
     rows[5] = (5, [5.0, 2.0, 1.0, 9.0][: 3 + extra], 2)
     with pytest.raises(ValueError, match=f"ragged feature arrays: {msg} reach dimension 0"):
         _ingest_fit(spark, rows, monkeypatch)
+
+
+@pytest.mark.parametrize("bad", [None, [3.0, None, 1.0]], ids=["null_array", "null_value"])
+def test_fit_rejects_null_features_at_ingest(spark, monkeypatch, bad):
+    """A null features array (or a null value in one) is rejected, not
+    dropped from n and from the bounds."""
+    rows = [(i, [float(i), float(i % 3), 1.0], 1 + i % 2) for i in range(20)]
+    rows[3], rows[11] = (3, bad, 2), (11, bad, 1)
+    with pytest.raises(ValueError, match="null features in 2 rows"):
+        _ingest_fit(spark, rows, monkeypatch)
+
+
+@pytest.mark.parametrize("mode", ["exact", "partition_local"])
+def test_failed_fit_releases_its_caches(spark, blobs_df, monkeypatch, broadcasts, mode):
+    """A fit that fails after its kNN build leaves the session's cache
+    manager as it found it and destroys the exact-scope kNN broadcast."""
+    import os
+
+    import mopso_engine.engine as eng_mod
+
+    def failing(*a, **kw):
+        raise RuntimeError("fitness pass failed")
+
+    monkeypatch.setattr(eng_mod, "evaluate_solutions", failing)
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    before = (cm.isEmpty(), cm.numCachedEntries())
+    cfg = MopsoConfig(n_particles=4, iter_max=2, knn_l=5, fitness_mode=mode)
+    with pytest.raises(RuntimeError, match="fitness pass failed"):
+        MopsoEngine(cfg).fit(blobs_df)
+    assert (cm.isEmpty(), cm.numCachedEntries()) == before
+    assert len(broadcasts) == (mode == "exact")
+    assert [os.path.exists(bc._path) for bc in broadcasts] == [False] * len(broadcasts)
+
+
+def test_fit_keeps_the_callers_cache(spark, blobs_df, small_cfg):
+    """The fit caches nothing of its input, so it cannot release the
+    caller's own cache of it."""
+    from pyspark import StorageLevel
+
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    before = cm.numCachedEntries()
+    MopsoEngine(small_cfg).fit(blobs_df)
+    assert blobs_df.storageLevel != StorageLevel.NONE
+    assert cm.numCachedEntries() == before
 
 
 def test_early_stop_triggers_on_constant_front(blobs_df, monkeypatch):

@@ -20,6 +20,7 @@ import numpy as np
 import pytest
 
 from mopso_engine import assign as A
+from mopso_engine import init as I
 from mopso_engine import metrics as M
 from mopso_engine import objectives as O
 from mopso_engine import worker
@@ -137,6 +138,7 @@ _KERNEL_CALLS = {
     "silhouette_exact": lambda df, c, stack: M.silhouette_exact(df, A.assign(df, c)),
     "silhouette_all_solutions": lambda df, c, stack: M.silhouette_all_solutions(df, stack),
     "lloyd": lambda df, c, stack: lloyd_fit(df, 3, iters=1),
+    "corpus_stats": lambda df, c, stack: I.corpus_stats(df, None, 50, 7),
 }
 
 
@@ -174,8 +176,9 @@ def test_engine_kernel_leaves_worker_without_zip_rereads(spark, blobs_df, blobs,
         return run
 
     cls = type(blobs_df)
-    map_in_pandas = cls.mapInPandas
-    monkeypatch.setattr(cls, "mapInPandas", lambda self, func, schema, *a, **kw: map_in_pandas(self, probed(func), schema, *a, **kw))
+    for name in ("mapInPandas", "mapInArrow"):
+        map_in = getattr(cls, name)
+        monkeypatch.setattr(cls, name, lambda self, func, schema, *a, _m=map_in, **kw: _m(self, probed(func), schema, *a, **kw))
     centers = blobs[3]
     stack = np.stack([centers, centers[::-1], centers + 0.5])
     _KERNEL_CALLS[kernel](blobs_df, centers, stack)
