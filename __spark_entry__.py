@@ -118,7 +118,6 @@ _fo = _load_fit_oracle()
 _FIT_ORACLE_PATH = _fo._FIT_ORACLE_PATH
 _fit_embeddings = _fo._fit_embeddings
 _fit_embeddings_full = _fo._fit_embeddings_full
-_fit_embeddings_lsh = _fo._fit_embeddings_lsh
 _fit_lineitem = _fo._fit_lineitem
 _fit_oracle_embeddings_sql = _fo._fit_oracle_embeddings_sql
 _fit_oracle_lineitem_sql = _fo._fit_oracle_lineitem_sql
@@ -3911,39 +3910,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             _docs_with_dups(read_table(spark, sf, "documents")), bits=32, bands=4, max_hamming=3
         )
 
-    def knn_lsh_recall(spark, sf):
-        """Recall gate for the approximate LSH kNN backend (J2's declared
-        100 TB Conn path, objectives.knn_pairs_lsh): BucketedRandom-
-        ProjectionLSH top-5 over the FULL points table, scored against
-        the exact top-5 for the fixed deterministic query sample
-        id % 17 == 0. Spark ML's hash tables aren't reproducible in SQL,
-        so the oracle pins the sketch-gate booleans (sample size +
-        recall >= 0.8) rather than pair values — the sketch_*_check
-        pattern (VERDICT r5 #7). Measured recall here: ~0.95-0.96 at
-        sf0.01 and sf0.1, so the 0.8 gate has real margin yet still
-        fails on a broken hash family or join."""
-        from mopso_engine.objectives import knn_pairs_crossjoin, knn_pairs_lsh
-
-        pts = points_from_embeddings(spark, sf)
-        sample = F.col("id") % 17 == 0
-        lsh = knn_pairs_lsh(pts, 5).where(sample)
-        # the exact arm's ~1.5M sample×corpus pairs DO pay for the
-        # unrolled distance (unlike the sample-sized knn_top5 twin —
-        # see knn_pairs_crossjoin); one width probe buys the unroll
-        first = pts.select(F.size("features").alias("d")).first()
-        exact = knn_pairs_crossjoin(
-            pts, 5, dim=int(first["d"]) if first is not None else None
-        ).where(sample)
-        hits = lsh.join(exact.select("id", "nbr_id"), ["id", "nbr_id"]).agg(
-            F.count("*").alias("hits")
-        )
-        ns = pts.where(sample).agg(F.count("*").alias("n_sampled"))
-        return ns.crossJoin(hits).select(
-            F.col("n_sampled").cast("long").alias("n_sampled"),
-            F.lit(5).cast("int").alias("l"),
-            (F.col("hits") / (F.col("n_sampled") * 5) >= 0.8).alias("recall_ok"),
-        )
-
     def events_sessions_native(spark, sf):
         """Native session windows (F.session_window): gap-merged sessions
         per user with [first, last+gap) bounds — the engine-managed twin
@@ -6380,24 +6346,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         ]
         return spark.createDataFrame(rows, "solution int, cluster int, dim int, pos double")
 
-    def mopso_fit_lsh(spark, sf):
-        """End-to-end fit on the LSH Conn backend (`_fit_embeddings_lsh`,
-        VERDICT r6 #6): same tiny budget and rendering as mopso_fit_only
-        but the per-iteration Conn objective reads neighbors from the
-        seeded BucketedRandomProjectionLSH candidate join — proving the
-        approximate big-N kNN path composes with the whole MOPSO loop.
-        The fit is bit-deterministic (seeded hyperplanes, deterministic
-        re-rank tie-break), so the oracle pins the recorded archive
-        positions exactly like mopso_fit_only."""
-        res, _ = _fit_embeddings_lsh(spark, sf)
-        rows = [
-            (s, c, d, round(float(v), 6))
-            for s, pos in enumerate(res.archive_positions)
-            for c in range(len(pos))
-            for d, v in enumerate(pos[c])
-        ]
-        return spark.createDataFrame(rows, "solution int, cluster int, dim int, pos double")
-
     def mopso_fit_full(spark, sf):
         """The reference-budget fit (50×10×L10, see _fit_embeddings_full),
         post-hoc verified exactly like mopso_fit."""
@@ -6467,7 +6415,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # rows only), so the future schedule is readable off this comment:
     # the past-cutoff blocks are ALREADY in rotation order and each
     # round's slice is simply the next ~39 names after the flagships
-    # and that round's code-changed re-earners. All 270 are verified
+    # and that round's code-changed re-earners. All 268 are verified
     # locally by tools/check_oracle.py (same compare as the driver,
     # default + hostile sessions) before each round ends — the count
     # in this sentence is pinned to len(queries()) by
@@ -6503,27 +6451,27 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # bounds, the experiment⋈session join) (4)
         crossmodal_eval, events_attribution_shapley,
         crossmodal_index_stream, events_ab_sessions,
-        # stale-tail rotation, oldest-verified-first (39): the r9
+        # stale-tail rotation, oldest-verified-first (37): the r9
         # remainder (the four names past r15's cutoff), then the r10
-        # block through q17_small_quantity
+        # block through q16_supplier_variety
         stream_window_topk, supplier_bfs, top_parts, vocab_growth, # last r9
         active_custkeys_both, active_custkeys_diff,         # last r10
         active_custkeys_diff_all, ann_ivf, ann_ivf_unlabeled, # last r10
         ann_topk, big_orders, customers_without_orders,     # last r10
         dedup_exact, emb_neardup, events_interval_join,     # last r10
         events_pivot, events_sessions_native, events_stream, # last r10
-        events_windowed, mopso_fit_lsh, multimodal_stats,   # last r10
+        events_windowed, multimodal_stats,                  # last r10
         names_edit1, orders_pareto_share, orders_range_window, # last r10
         orders_ranking_suite, orders_target_encode,         # last r10
         orders_window_suite, pmi_collocations, q4_priority, # last r10
         q5_local_supplier, q7_volume_shipping, q8_market_share, # last r10
         q9_profit_shape, q10_returned_items, q13_custdist,  # last r10
         q14_promo_share, q15_top_supplier,                  # last r10
-        # Window = 5 fits + 4 re-earners + 4 births + 4 r9 + 33 r10 = 50.
+        q16_supplier_variety,                               # last r10
+        # Window = 5 fits + 4 re-earners + 4 births + 4 r9 + 32 r10 + q16 = 50.
         # --- the 50-entry truncation lands exactly here ---
         # r17's rotation slice continues here: the r10 remainder, then
         # the r11/r12/r13/r14 blocks, then the r15-earned cohort.
-        q16_supplier_variety,                               # last r10
         q17_small_quantity, q19_or_of_ands, q20_promo_suppliers, # last r10
         q22_idle_customers, sketch_distinct_check,          # last r10
         sketch_quantile_check, tfidf_terms, vocab_zipf,     # last r10
@@ -6548,7 +6496,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         dedup_components_star, dev_inertia, docs_bigram_logppl, # last r12
         events_asof_forward, events_ctr_jackknife, events_qte, # last r12
         events_scd2_stream, events_zvalue, hll_union_check, # last r12
-        knn_lsh_recall, lang_pred, lineitem_orc_roundtrip,  # last r12
+        lang_pred, lineitem_orc_roundtrip,                  # last r12
         lloyd_kmeans, lsh_candidates, nightly_delta_publish, # last r12
         orders_bucketed_join, orders_grouping_sets,         # last r12
         orders_incremental_rollup, orders_partitioned_scan, # last r12
@@ -11060,16 +11008,6 @@ def oracle_sql() -> dict[str, str]:
         FROM events GROUP BY 1
     """
 
-    # LSH kNN recall gate (same pattern): Spark ML's random hyperplane
-    # tables aren't SQL-reproducible, so the oracle pins the sample size
-    # (derivable: the id % 17 == 0 query set) and recall_ok TRUE — a
-    # broken hash family / bucket join drives recall under 0.8 and
-    # value-hash-fails the row
-    o["knn_lsh_recall"] = """
-        SELECT count(*)::BIGINT AS n_sampled, 5::INT AS l, true AS recall_ok
-        FROM embeddings WHERE vec_id % 17 = 0
-    """
-
     _mh = _MINHASH_CTE.format(src="documents")
     o["minhash_sigs"] = f"""
         WITH {_mh}
@@ -13163,21 +13101,6 @@ def oracle_sql() -> dict[str, str]:
             if "mopso_fit_full" in fit_data:
                 o["mopso_fit_full"] = _fit_oracle_embeddings_sql(
                     fit_data["mopso_fit_full"], knn_l=10
-                )
-            if "mopso_fit_lsh" in fit_data:
-                # LSH-backend fit: recorded positions ARE the oracle
-                # (same pinning as mopso_fit_only — the approximate
-                # neighbor set is seed-deterministic)
-                _lsh_vals = ",\n          ".join(
-                    f"({s}, {c}, {d}, {round(float(v), 6)!r})"
-                    for s, pos in enumerate(fit_data["mopso_fit_lsh"]["positions"])
-                    for c in range(len(pos))
-                    for d, v in enumerate(pos[c])
-                )
-                o["mopso_fit_lsh"] = (
-                    "SELECT solution::INT AS solution, cluster::INT AS cluster,\n"
-                    "       dim::INT AS dim, pos::DOUBLE AS pos\n"
-                    f"FROM (VALUES {_lsh_vals}) AS t(solution, cluster, dim, pos)"
                 )
             o["mopso_fit_lineitem"] = _fit_oracle_lineitem_sql(
                 fit_data["mopso_fit_lineitem"]

@@ -49,8 +49,8 @@ class MopsoResult:
     iterations: int
     wall_clock_sec: float
     history: list[dict] = field(default_factory=list)
-    #: kNN mode the fit ACTUALLY used after the exact→partition_local
-    #: fallback (rescore must replay the same neighbor semantics)
+    #: the fit's kNN scope, always ``cfg.fitness_mode`` (rescore replays
+    #: the same neighbor semantics with it)
     knn_mode_used: str = "exact"
     #: partition count of the deterministic (repartition(m,"id") +
     #: in-partition sort) layout, when the fit built one — with it a
@@ -219,6 +219,9 @@ class MopsoEngine:
         # the caller's plan, as the report functions do.
         pts = points.select("id", "features", "label")
         n, d, k, bounds, sample = init_mod.corpus_stats(pts, cfg.k, cfg.init_sample_size, cfg.seed)
+        if k > n:
+            # k above the number of DISTINCT points fits (centers coincide)
+            raise ValueError(f"k={k} clusters but the points table has n={n} rows; k must be at most n")
         t_stats_end = time.time()
 
         # Own the parallelism instead of inheriting the session default:
@@ -261,21 +264,16 @@ class MopsoEngine:
         else:
             pts_k = pts
 
-        # kNN precompute: solution-independent, reused by every iteration
-        knn_mode = "partition_local" if cfg.fitness_mode == "partition_local" else cfg.knn_mode
-        if knn_mode == "exact":
-            from mopso_engine.objectives import MAX_EXACT_KNN_ROWS
-
-            if n > MAX_EXACT_KNN_ROWS:
-                # exact mode would broadcast the whole table — fall back to
-                # the reference's own cluster-scale semantics
-                knn_mode = "partition_local"
-        # materialize the cache as its own timed step, so neither the init
-        # fitness pass nor a resumed fit's first iteration absorbs the
-        # build (that would inflate sec/iter with one-off IO)
-        nbr = with_neighbors(pts_k, cfg.knn_l, mode=knn_mode, n_rows=n).persist()
+        # kNN precompute: solution-independent, reused by every iteration.
+        # fitness_mode is the scope; an exact fit above MAX_EXACT_KNN_ROWS
+        # fails here, before the kNN map's collect.
+        nbr = with_neighbors(pts_k, cfg.knn_l, mode=cfg.fitness_mode, n_rows=n).persist()
         try:
-            nbr.count()
+            # materialize the cache as its own timed step, so neither the
+            # init fitness pass nor a resumed fit's first iteration absorbs
+            # the build (that would inflate sec/iter with one-off IO). A
+            # noop write takes one Spark job fewer than count() under AQE.
+            nbr.write.format("noop").mode("overwrite").save()
             t_cache_end = time.time()
             setup_sub: dict = {"stats": round(t_stats_end - t0, 3), "knn_cache": round(t_cache_end - t_stats_end, 3)}
             part_weighted = cfg.fitness_mode == "partition_local"
@@ -386,7 +384,7 @@ class MopsoEngine:
             iterations=state.iteration,
             wall_clock_sec=t_end - t0,
             history=state.history,
-            knn_mode_used=knn_mode,
+            knn_mode_used=cfg.fitness_mode,
             layout_partitions=layout_partitions,
             phase_sec=phases,
         )

@@ -15,11 +15,12 @@ all S candidate solutions in a single Arrow-vectorized pass + one tiny
 partial/final aggregation (S rows out). The reference instead re-scans
 per particle per iteration (Spark_MOPSO_Avg.scala:211-228).
 
-Scale: the exact kNN is the only O(N²) corner (SURVEY §7.4.1). Three
-backends: 'exact' (broadcast block-cdist — to ~10⁵ rows),
-'partition_local' (the reference Avg semantics — embarrassingly
-parallel, exactly what it did at cluster scale), and 'lsh'
-(BucketedRandomProjectionLSH approxSimilarityJoin — the 100 TB path).
+Scale: the exact kNN is the only O(N²) corner (SURVEY §7.4.1). The
+fit's ``fitness_mode`` picks one of two neighbourhoods, both built by
+:func:`_knn_map`: 'exact' (global neighbours, broadcast block-cdist, to
+``MAX_EXACT_KNN_ROWS`` rows; the Single/Particle semantics) and
+'partition_local' (neighbours within each partition, no broadcast; the
+reference Avg semantics, what it ran at cluster scale).
 """
 
 from __future__ import annotations
@@ -205,13 +206,11 @@ def _topl_blocked(
     return out_pos, out_d
 
 
-#: (id, label, self_nbr_flat, nbr_n) of the KERNEL-built modes: self + L
-#: neighbor vectors as (1+L)·d raw little-endian float64 bytes. One bytes
-#: object per row Arrow-transfers and reconstructs (np.frombuffer) several
-#: times faster than the relational modes' list<double> column (which
-#: materializes 600k tiny ndarrays per pass and GC-thrashes); the VALUES
-#: are bit-identical, so fitness partials — and with them the recorded
-#: seeded trajectories — are unchanged. evaluate_solutions accepts both.
+#: (id, label, self_nbr_flat, nbr_n) of the fit's neighbour table: self +
+#: L neighbor vectors as (1+L)·d raw little-endian float64 bytes. One
+#: bytes object per row Arrow-transfers and reconstructs (np.frombuffer)
+#: several times faster than a list<double> column, which materializes
+#: 600k tiny ndarrays per pass and GC-thrashes.
 _NBR_SCHEMA_BIN = StructType(
     [
         StructField("id", LongType(), False),
@@ -245,8 +244,9 @@ PAIRS_SCHEMA = StructType(
 
 
 #: exact mode collects+broadcasts the full (id, features) table; beyond
-#: this many rows that is a driver/executor memory foot-gun — callers
-#: should switch to 'partition_local' (reference semantics) or 'lsh'.
+#: this many rows that is a driver/executor memory foot-gun, so the kNN
+#: map refuses it — callers switch to 'partition_local' (the reference
+#: Avg semantics).
 MAX_EXACT_KNN_ROWS = 200_000
 
 
@@ -266,8 +266,8 @@ def _knn_map(points: DataFrame, l_nbrs: int, scope: str, *, packed: bool, n_rows
         if n > MAX_EXACT_KNN_ROWS:
             raise ValueError(
                 f"exact kNN collects all {n} rows and broadcasts them to every executor; beyond "
-                f"{MAX_EXACT_KNN_ROWS} rows use mode='partition_local' (the reference's own "
-                "cluster-scale semantics) or mode='lsh'"
+                f"{MAX_EXACT_KNN_ROWS} rows fit with MopsoConfig(fitness_mode='partition_local') "
+                "(neighbours within each partition, the reference Avg's cluster-scale semantics)"
             )
         rows = points.select("id", "features").collect()
         ids = np.array([r["id"] for r in rows], dtype=np.int64)
@@ -350,7 +350,7 @@ def knn_pairs_exact(
 
     Guarded by ``MAX_EXACT_KNN_ROWS``: the full-table collect + broadcast
     is a driver/executor memory foot-gun beyond ~10⁵ rows — callers with
-    bigger tables must use 'partition_local' or 'lsh'. Pass ``n_rows``
+    bigger tables must use 'partition_local'. Pass ``n_rows``
     when already known to skip the extra count job. ``exact_math`` ranks
     by ``assign._distances_exact``'s Σ(x−y)² (a SQL oracle's bits).
     """
@@ -363,116 +363,28 @@ def knn_pairs_partition_local(points: DataFrame, l_nbrs: int) -> DataFrame:
     rendering of ``with_neighbors(mode='partition_local')`` (same kernel,
     :func:`_knn_map`), so it reproduces the fit kernel's neighbor sets and
     ranks EXACTLY for any points table laid out the way the fit laid it
-    out. No collect, no broadcast, no shuffle — the rescore path for fits
-    beyond ``MAX_EXACT_KNN_ROWS`` (layout is semantics here: callers must
-    pass the same deterministic layout the engine built, see
-    ``MopsoEngine.fit``)."""
+    out. No collect, no broadcast, no shuffle — the rescore path of
+    partition_local fits (layout is semantics here: callers must pass the
+    same layout the fit scored, see ``MopsoEngine.fit``)."""
     return _knn_map(points, l_nbrs, "partition_local", packed=False)
 
 
-def knn_pairs_crossjoin(
-    points: DataFrame, l_nbrs: int, *, dim: int | None = None
-) -> DataFrame:
+def knn_pairs_crossjoin(points: DataFrame, l_nbrs: int) -> DataFrame:
     """Exact top-L pairs, pure DataFrame rendering (J2 + O4): broadcast
     self-cross-join + windowed row_number ≤ L. The declarative twin of
-    :func:`knn_pairs_exact`, oracle-checkable in SQL; quadratic, so use on
-    samples/small N.
-
-    ``dim``: pass the feature width to UNROLL the distance into codegen'd
-    scalar arithmetic (bit-identical to the fold — see
-    functions.euclidean_expr) when the pair volume is large enough to pay
-    for it (the recall gate's ~1.5M-pair exact arm). The default keeps
-    the HOF fold WITHOUT any width probe: unconditionally probing +
-    unrolling here made the knn_top5/conn_objective queries (≈10-20k
-    pairs of mostly fixed cost) run 2-2.6× slower — the probe job plus
-    the 64-term expression's per-query codegen cost more than the fold
-    saves at sample size (measured with an interleaved A/B)."""
+    :func:`knn_pairs_exact` and its test oracle, checkable in SQL;
+    quadratic, so use on samples/small N."""
     from pyspark.sql.window import Window
 
     from mopso_engine.functions import euclidean_expr
 
     a = points.select(F.col("id"), F.col("features"))
     b = points.select(F.col("id").alias("nbr_id"), F.col("features").alias("nbr_features"))
-    dist = euclidean_expr("features", "nbr_features", dim=dim)
+    dist = euclidean_expr("features", "nbr_features")
     pairs = (
         a.crossJoin(F.broadcast(b))
         .where(F.col("id") != F.col("nbr_id"))
         .select("id", "nbr_id", dist.alias("nbr_dist"))
-    )
-    w = Window.partitionBy("id").orderBy(F.col("nbr_dist").asc(), F.col("nbr_id").asc())
-    return (
-        pairs.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= l_nbrs)
-        .select("id", "nbr_id", "rank", "nbr_dist")
-    )
-
-
-def knn_pairs_lsh(points: DataFrame, l_nbrs: int, *, bucket_length: float = 2.0, num_tables: int = 3, oversample: int = 3) -> DataFrame:
-    """Approximate top-L pairs via BucketedRandomProjectionLSH — the scale
-    path (SURVEY §7.4.1): candidate pairs come from an LSH bucket join
-    instead of the N² cross product, then a window keeps the L best. With
-    too few candidates a point may return < L neighbors (documented
-    approximation).
-
-    The seeded ml model supplies ONLY the hyperplane hashes (one
-    ``transform`` pass); the bucket join, exact-distance re-rank and
-    tie-break run as pure DataFrame expressions inside whole-stage
-    codegen instead of ``approxSimilarityJoin``'s encoder/UDF pair path
-    — measured ~8× on the candidate-heavy sf0.1 embeddings table
-    (the join was 42s of an 80s LSH fit). The output
-    is BIT-identical to the approxSimilarityJoin rendering: the
-    candidate set is the same pairs-sharing-≥1-(table, bucket) relation
-    (ml's processDataset posexplode + equality join + distinct), and
-    ``euclidean_expr``'s left fold adds the same squared diffs in the
-    same dimension order as ``Vectors.sqdist`` before the same sqrt."""
-    from pyspark.ml.feature import BucketedRandomProjectionLSH
-    from pyspark.ml.functions import array_to_vector, vector_to_array
-    from pyspark.sql.window import Window
-
-    from mopso_engine.functions import euclidean_expr
-
-    vecs = points.select("id", array_to_vector("features").alias("vec"))
-    lsh = BucketedRandomProjectionLSH(
-        inputCol="vec", outputCol="hashes", bucketLength=bucket_length, numHashTables=num_tables, seed=42
-    )
-    model = lsh.fit(vecs)
-    # (id, table, bucket): one row per hash table per point
-    hx = (
-        model.transform(vecs)
-        .select("id", F.posexplode("hashes").alias("tbl", "hv"))
-        .select("id", "tbl", vector_to_array("hv").getItem(0).alias("h"))
-    )
-    cand = (
-        hx.alias("a")
-        .join(
-            hx.alias("b"),
-            (F.col("a.tbl") == F.col("b.tbl"))
-            & (F.col("a.h") == F.col("b.h"))
-            & (F.col("a.id") != F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id"), F.col("b.id").alias("nbr_id"))
-        .distinct()
-    )
-    feats = points.select("id", "features")
-    # unrolled distance (bit-identical to the HOF fold, see
-    # functions.euclidean_expr): the candidate set is the heavy side
-    # here — every pair sharing a (table, bucket) — so the per-pair
-    # expression cost is the stage; one head() probe buys the width
-    first = feats.select(F.size("features").alias("d")).first()
-    dim = int(first["d"]) if first is not None else None
-    pairs = (
-        cand.join(feats, "id")
-        .join(
-            feats.select(
-                F.col("id").alias("nbr_id"), F.col("features").alias("nbr_features")
-            ),
-            "nbr_id",
-        )
-        .select(
-            "id",
-            "nbr_id",
-            euclidean_expr("features", "nbr_features", dim=dim).alias("nbr_dist"),
-        )
     )
     w = Window.partitionBy("id").orderBy(F.col("nbr_dist").asc(), F.col("nbr_id").asc())
     return (
@@ -488,54 +400,32 @@ def with_neighbors(
     """points → (id, label, self_nbr_flat, nbr_n), the cached input of the
     per-iteration fitness kernel.
 
-    ``self_nbr_flat`` is ONE fixed-width array<double> of (1+L)·d values:
+    ``self_nbr_flat`` is ONE fixed-width binary value of (1+L)·d float64s:
     the point's own vector followed by its L neighbors' vectors, padded
     with self-copies when fewer than L neighbors exist (``nbr_n`` is the
-    real count; padding gets weight 0 in the kernel). One uniform numeric
-    column Arrow-transfers an order of magnitude faster than nested
+    real count; padding gets weight 0 in the kernel). One uniform column
+    Arrow-transfers an order of magnitude faster than nested
     per-neighbor lists, and the fitness kernel gets the whole batch with
     a single reshape.
 
-    Modes:
-    * 'exact' — global kNN via a broadcast of all features; the kernel
-      emits neighbor features directly, so the whole precompute is ONE
-      map stage, zero shuffles (to ~10⁵ rows: the broadcast is N·d·8 B).
+    Modes (the fit passes ``MopsoConfig.fitness_mode``), the two scopes
+    of :func:`_knn_map`, each ONE map stage with zero shuffles:
+    * 'exact' — global kNN via a broadcast of all features (to
+      ``MAX_EXACT_KNN_ROWS`` rows: the broadcast is N·d·8 B).
     * 'partition_local' — neighbors within each input partition only: the
-      reference Avg's semantics (Spark_MOPSO_Avg.scala:843-865) and the
-      unbounded-scale path (no broadcast, no shuffle).
-    * 'crossjoin'/'lsh' — build a (id, nbr_id, rank) pair table, then
-      join neighbor features back (one shuffle, once per fit); 'lsh' is
-      the approximate big-N path.
-    'exact'/'partition_local' are the two scopes of :func:`_knn_map`.
+      reference Avg's semantics (Spark_MOPSO_Avg.scala:843-865), no
+      broadcast.
     """
-    if mode in ("exact", "partition_local"):
-        return _knn_map(points, l_nbrs, mode, packed=True, n_rows=n_rows)
-    if mode == "crossjoin":
-        pairs = knn_pairs_crossjoin(points, l_nbrs)
-    elif mode == "lsh":
-        pairs = knn_pairs_lsh(points, l_nbrs)
-    else:
-        raise ValueError(f"unknown knn mode: {mode}")
-
-    nbr_feats = pairs.join(
-        points.select(F.col("id").alias("nbr_id"), F.col("features").alias("nbr_f")), "nbr_id"
-    )
-    agg = nbr_feats.groupBy("id").agg(
-        F.array_sort(F.collect_list(F.struct("rank", "nbr_f"))).alias("nbrs")
-    )
-    m = F.size(F.col("nbrs.nbr_f"))
-    pad = F.flatten(F.array_repeat(F.col("features"), F.greatest(F.lit(l_nbrs) - m, F.lit(0))))
-    return points.join(agg, "id").select(
-        "id",
-        F.col("label"),
-        F.concat(F.col("features"), F.flatten(F.col("nbrs.nbr_f")), pad).alias("self_nbr_flat"),
-        F.least(m, F.lit(l_nbrs)).cast("int").alias("nbr_n"),
-    )
+    if mode not in ("exact", "partition_local"):
+        raise ValueError(f"unknown knn mode: {mode!r} (expected 'exact' or 'partition_local')")
+    return _knn_map(points, l_nbrs, mode, packed=True, n_rows=n_rows)
 
 
-#: fitness-kernel reduction block: matches the exact-mode layout's ~2k-row
-#: partition sizing (engine.py), so engine-owned layouts reduce in one
-#: block exactly as before; only oversized caller-owned partitions split.
+#: fitness-kernel reduction block: a partition of up to 2048 rows reduces
+#: in one block. The exact-mode layout (engine.py) has ~256 rows per
+#: partition but at most 4×cores partitions, so above 2048·4·cores rows
+#: its partitions reduce in several blocks, as does any caller-owned
+#: partition_local partition over 2048 rows.
 #: NOTE the block size is part of the float-summation grouping, so
 #: changing it changes seeded fit trajectories in the last ulps
 #: (regenerate the recorded oracles with tools/fit_oracle.py).
@@ -584,7 +474,7 @@ def evaluate_solutions(nbr_df: DataFrame, centers_stack: np.ndarray, *, partitio
     Physical shape: MapInPandas (numpy batch kernel) emits S partial rows
     per Arrow batch → HashAggregate(partial) → single tiny Exchange →
     HashAggregate(final) → S-row collect. The data never shuffles; only
-    S·num_batches partial rows do. This is the plan that survives 100 TB.
+    S·num_batches partial rows do.
 
     ``partition_weighted=True`` reproduces the reference Avg's weighted
     partial fitness: each partition's [Dev_p, Conn_p] scaled by |p|/N and
@@ -618,12 +508,9 @@ def evaluate_solutions(nbr_df: DataFrame, centers_stack: np.ndarray, *, partitio
         acc_n = 0
         for pdf in _fixed_blocks(batches, _REDUCE_BLOCK_ROWS):
             col = pdf["self_nbr_flat"]
-            if isinstance(col.iat[0], (bytes, bytearray)):
-                # kernel-built modes ship raw float64 bytes: one frombuffer
-                # per block, zero per-row object churn
-                packed = np.frombuffer(b"".join(col), dtype=np.float64).reshape(len(col), -1)
-            else:  # relational modes keep the array<double> column
-                packed = np.stack(col.to_numpy()).astype(np.float64)
+            # raw float64 bytes: one frombuffer per block, zero per-row
+            # object churn
+            packed = np.frombuffer(b"".join(col), dtype=np.float64).reshape(len(col), -1)
             n = packed.shape[0]
             l_tot = packed.shape[1] // d_ - 1  # = L (uniform padding)
             nbr_n = pdf["nbr_n"].to_numpy()

@@ -39,19 +39,19 @@ def rescore_archive(
     relationally with exact-math distances (oracle-reproducible).
 
     Dev = Σ nearest-center distance; Conn = Σ 1/rank over same-cluster
-    top-``knn_l`` neighbors. ``knn_mode`` must be the mode the fit
-    ACTUALLY used (``MopsoResult.knn_mode_used``):
+    top-``knn_l`` neighbors. ``knn_mode`` must be the fit's scope
+    (``MopsoResult.knn_mode_used``, which is its ``fitness_mode``):
 
     * ``'exact'`` — global neighbors via the collect+broadcast block
-      kernel (valid to ``MAX_EXACT_KNN_ROWS``; the engine's own fallback
-      guarantees no real fit exceeds it in this mode);
+      kernel (valid to ``MAX_EXACT_KNN_ROWS``, the same cap an exact fit
+      is held to);
     * ``'partition_local'`` — neighbors from
-      :func:`knn_pairs_partition_local` over the fit's deterministic
-      layout, rebuilt here from ``layout_partitions``
-      (``MopsoResult.layout_partitions``): no collect, no broadcast —
-      the unbounded-scale path, and the ONLY semantics that can agree
-      with a big fit's kernel (an exact global rescore of a
-      partition-local fit would disagree by construction).
+      :func:`knn_pairs_partition_local` over the layout
+      ``repartition(layout_partitions, "id").sortWithinPartitions("id")``,
+      rebuilt here: no collect, no broadcast. It is the relational oracle
+      of the partition-local neighbor sets on that layout (an exact
+      global rescore of a partition-local fit would disagree by
+      construction).
 
     Eager: persists the multi-solution assignment for its two uses and
     releases it, and the exact scope's broadcast, before returning.

@@ -36,7 +36,6 @@ _CHOICES = {
     "w_schedule": ("decreasing", "increasing"),
     "crowding_formula": ("avg", "product"),
     "fitness_mode": ("exact", "partition_local"),
-    "knn_mode": ("exact", "partition_local", "crossjoin", "lsh"),
     "select_best": ("knee", "silhouette"),
     "init": ("maximin", "random", "random_point"),
 }
@@ -100,17 +99,15 @@ class MopsoConfig:
     #:             (MOPSO_Single.scala:994-1020, Spark_MOPSO_Particle.scala:677-703).
     crowding_formula: str = "avg"
 
+    #: The fitness scope, and with it the Conn neighbourhood:
     #: 'exact'           — global Dev + global-kNN Conn (default; the
-    #:                     reference's Particle variant semantics);
+    #:                     reference's Single/Particle semantics). The kNN
+    #:                     build broadcasts every row, so a fit above
+    #:                     objectives.MAX_EXACT_KNN_ROWS rows raises;
     #: 'partition_local' — per-partition partials weighted by |p|/N and
     #:                     summed on the driver, Conn restricted to the
     #:                     partition (Avg variant, Spark_MOPSO_Avg.scala:843-865).
     fitness_mode: str = "exact"
-
-    #: kNN backend for Conn: 'exact' (broadcast cdist; fine to ~100k rows),
-    #: 'partition_local' (reference Avg semantics; embarrassingly parallel),
-    #: 'lsh' (BucketedRandomProjectionLSH approx; the 100 TB path).
-    knn_mode: str = "exact"
 
     #: AvgLabel layout (Spark_MOPSO_Avg_labelPartition.scala:77-85): in
     #: partition_local mode, hash-repartition the points by ground-truth

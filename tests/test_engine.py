@@ -70,7 +70,6 @@ def test_variant_avg_runs_e2e(blobs_df):
     "field,bad",
     [
         ("fitness_mode", "global"),
-        ("knn_mode", "brute"),
         ("w_schedule", "decreasng"),
         ("crowding_formula", "sum"),
         ("select_best", "Silhouette"),
@@ -84,6 +83,12 @@ def test_config_rejects_unknown_choice(make, field, bad):
     never (select_best falls back to the knee)."""
     with pytest.raises(ValueError, match=field):
         make(**{field: bad})
+
+
+def test_config_has_one_scope_field():
+    """fitness_mode alone picks the kNN scope: there is no knn_mode."""
+    with pytest.raises(TypeError, match="knn_mode"):
+        MopsoConfig(knn_mode="exact")
 
 
 def test_w_schedules():
@@ -127,14 +132,6 @@ def test_avg_label_layout_reproducible(blobs_df):
     )
 
 
-def test_lsh_knn_mode_fit_runs(blobs_df):
-    """knn_mode='lsh' — the approximate big-N Conn path — end to end."""
-    cfg = MopsoConfig(n_particles=3, iter_max=1, knn_l=5, knn_mode="lsh", seed=5)
-    res = MopsoEngine(cfg).fit(blobs_df)
-    assert len(res.archive_positions) >= 1
-    assert np.isfinite(res.archive_fitness).all()
-
-
 def test_partition_local_survives_empty_and_singleton_partitions(spark):
     """More partitions than rows → empty partitions and 1-row partitions
     (no neighbors) must not crash the local-kNN kernel."""
@@ -158,34 +155,58 @@ def test_avg_label_engine_affordance_replays_identically(blobs_df):
         np.testing.assert_array_equal(p1, p2)
 
 
-def test_rescore_agrees_beyond_exact_knn_ceiling(blobs_df, small_cfg, monkeypatch):
-    """VERDICT r2 #4: a fit whose N exceeds MAX_EXACT_KNN_ROWS falls back
-    to partition-local neighbors — the rescore must replay THOSE
-    semantics (same layout, same pair generator) instead of raising in
-    knn_pairs_exact. Force the fallback by shrinking the ceiling, then
-    check the relational rescore agrees with the fitness kernel."""
+def test_rescore_partition_local_agrees_with_kernel(blobs_df, blobs):
+    """The partition_local rescore is the relational oracle of the
+    partition-local neighbor sets: on the hash layout it rebuilds from
+    ``layout_partitions``, its Dev/Conn agree with the fitness kernel's
+    (unweighted) over the same layout."""
     import math
 
-    import mopso_engine.objectives as obj
+    from mopso_engine.objectives import evaluate_solutions, with_neighbors
     from mopso_engine.rescore import rescore_archive
 
-    monkeypatch.setattr(obj, "MAX_EXACT_KNN_ROWS", 50)  # blobs >> 50 rows
-    res = MopsoEngine(small_cfg).fit(blobs_df)
-    assert res.knn_mode_used == "partition_local"
-    assert res.layout_partitions is not None
-    rows = rescore_archive(
-        blobs_df,
-        res.archive_positions,
-        knn_l=small_cfg.knn_l,
-        n_rows=res.n_points,
-        knn_mode=res.knn_mode_used,
-        layout_partitions=res.layout_partitions,
-    )
-    assert len(rows) == len(res.archive_positions)
+    _, _, _, c = blobs
+    rng = np.random.default_rng(4)
+    stack = np.stack([c, c + rng.normal(scale=0.5, size=c.shape), rng.normal(scale=5.0, size=c.shape)])
+    m = 3
+    layout = blobs_df.repartition(m, "id").sortWithinPartitions("id")
+    kernel = evaluate_solutions(with_neighbors(layout, 5, mode="partition_local"), stack)
+    rows = rescore_archive(blobs_df, list(stack), knn_l=5, knn_mode="partition_local", layout_partitions=m)
+    assert [s for s, _, _ in rows] == [0, 1, 2]
     for s, dev, conn in rows:
-        kd, kc = (float(v) for v in res.archive_fitness[s])
-        assert math.isclose(kd, dev, rel_tol=1e-6)
-        assert math.isclose(kc, conn, rel_tol=1e-6)
+        assert math.isclose(kernel[s, 0], dev, rel_tol=1e-6)
+        assert math.isclose(kernel[s, 1], conn, rel_tol=1e-6)
+
+
+def test_exact_fit_above_the_cap_fails_before_the_knn_build(spark, blobs_df, small_cfg, monkeypatch):
+    """An exact fit above MAX_EXACT_KNN_ROWS raises, naming the
+    partition-local scope, and runs no job after the set-up pass: neither
+    the kNN collect nor the kNN map. It does not turn partition-local."""
+    import mopso_engine.engine as eng_mod
+    import mopso_engine.init as init_mod
+    import mopso_engine.objectives as obj
+
+    sc = spark.sparkContext
+    group = "exact-above-cap"
+    setup = init_mod.corpus_stats
+
+    def setup_then_watch(*a, **kw):
+        out = setup(*a, **kw)
+        sc.setJobGroup(group, "jobs after the set-up pass")
+        return out
+
+    def later_job(*a, **kw):
+        raise AssertionError("a fitness pass ran")
+
+    monkeypatch.setattr(obj, "MAX_EXACT_KNN_ROWS", 50)  # blobs >> 50 rows
+    monkeypatch.setattr(init_mod, "corpus_stats", setup_then_watch)
+    monkeypatch.setattr(eng_mod, "evaluate_solutions", later_job)
+    try:
+        with pytest.raises(ValueError, match=r"300 rows .*fitness_mode='partition_local'"):
+            MopsoEngine(small_cfg).fit(blobs_df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
 @pytest.fixture
@@ -309,10 +330,10 @@ class TestCheckpointResume:
         assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
-def _ingest_fit(spark, rows, monkeypatch):
+def _ingest_fit(spark, rows, monkeypatch, **cfg):
     """Fit ``rows`` with every job after the set-up pass disabled: an
-    ingest error must come from ``init.corpus_stats`` itself, before the
-    kNN build (the fit's next job)."""
+    ingest error must come from ``init.corpus_stats`` or the fit's checks
+    of its figures, before the kNN build (the fit's next job)."""
     import mopso_engine.engine as eng_mod
 
     def later_job(*a, **kw):
@@ -320,7 +341,7 @@ def _ingest_fit(spark, rows, monkeypatch):
 
     monkeypatch.setattr(eng_mod, "with_neighbors", later_job)
     df = spark.createDataFrame(rows, "id long, features array<double>, label int")
-    MopsoEngine(MopsoConfig(n_particles=4, iter_max=2, knn_l=3, k=2)).fit(df)
+    MopsoEngine(MopsoConfig(**(dict(n_particles=4, iter_max=2, knn_l=3, k=2) | cfg))).fit(df)
 
 
 @pytest.mark.parametrize("bad", [float("nan"), float("inf"), float("-inf")], ids=["nan", "inf", "-inf"])
@@ -349,6 +370,29 @@ def test_fit_rejects_null_features_at_ingest(spark, monkeypatch, bad):
     rows[3], rows[11] = (3, bad, 2), (11, bad, 1)
     with pytest.raises(ValueError, match="null features in 2 rows"):
         _ingest_fit(spark, rows, monkeypatch)
+
+
+@pytest.mark.parametrize("init", ["maximin", "random", "random_point"])
+def test_fit_rejects_k_above_n_at_ingest(spark, monkeypatch, init):
+    """k above the row count fails after the set-up pass, before the kNN
+    build, for every init: not in random_point's sampler after the kNN
+    build, and not as maximin's degenerate front."""
+    rows = [(i, [float(i), float(i % 2)], 1 + i % 2) for i in range(5)]
+    with pytest.raises(ValueError, match="k=8 clusters but the points table has n=5 rows"):
+        _ingest_fit(spark, rows, monkeypatch, k=8, init=init)
+
+
+@pytest.mark.parametrize("init", ["maximin", "random", "random_point"])
+def test_fit_with_k_above_distinct_points(spark, init):
+    """k between the number of distinct points and n still fits: 12 rows
+    of 2 distinct points, k=4, every init, a finite front."""
+    rows = [(i, [float(i % 2), 2.0 * (i % 2)], 1 + i % 2) for i in range(12)]
+    df = spark.createDataFrame(rows, "id long, features array<double>, label int")
+    cfg = MopsoConfig(k=4, n_particles=4, iter_max=2, knn_l=3, seed=3, init=init)
+    res = MopsoEngine(cfg).fit(df)
+    assert res.k == 4 and len(res.archive_positions) >= 1
+    assert np.isfinite(res.archive_fitness).all()
+    assert all(np.isfinite(p).all() for p in res.archive_positions)
 
 
 @pytest.mark.parametrize("mode", ["exact", "partition_local"])

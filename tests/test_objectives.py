@@ -172,28 +172,17 @@ def test_partition_local_mode_weighted_sum(spark, blobs):
     assert fit[0, 1] == pytest.approx(exp_conn, rel=1e-9)
 
 
-def test_pairs_based_neighbors_match_broadcast_path(blobs_df, blobs):
-    """The join-based with_neighbors tail ('crossjoin' mode) must produce
-    the same fitness as the broadcast-exact path."""
-    _, x, _, c = blobs
-    stack = np.stack([c])
-    f_exact = evaluate_solutions(with_neighbors(blobs_df, 5, mode="exact"), stack)
-    f_pairs = evaluate_solutions(with_neighbors(blobs_df, 5, mode="crossjoin"), stack)
-    np.testing.assert_allclose(f_exact, f_pairs, rtol=1e-9)
+@pytest.mark.parametrize("mode", ["lsh", "crossjoin"])
+def test_with_neighbors_has_two_scopes(blobs_df, mode):
+    """Only the two scopes build a neighbour table: a removed mode name
+    raises instead of running partition-local."""
+    with pytest.raises(ValueError, match="unknown knn mode"):
+        with_neighbors(blobs_df, 5, mode=mode)
 
 
 def test_exact_mode_refuses_oversized_broadcast(blobs_df):
     with pytest.raises(ValueError, match="partition_local"):
         with_neighbors(blobs_df, 5, mode="exact", n_rows=10**9)
-
-
-def test_lsh_knn_mostly_agrees_with_exact(blobs_df):
-    from mopso_engine.objectives import knn_pairs_lsh
-
-    exact = {(r["id"], r["nbr_id"]) for r in knn_pairs_exact(blobs_df, 5).collect()}
-    approx = {(r["id"], r["nbr_id"]) for r in knn_pairs_lsh(blobs_df, 5).collect()}
-    # approximate: demand high recall on well-separated blobs
-    assert len(exact & approx) / len(exact) > 0.9
 
 
 def test_knn_pairs_exact_refuses_oversized_collect(blobs_df):
@@ -202,21 +191,3 @@ def test_knn_pairs_exact_refuses_oversized_collect(blobs_df):
     with pytest.raises(ValueError, match="partition_local"):
         knn_pairs_exact(blobs_df, 5, n_rows=10**9)
 
-
-def test_crossjoin_unroll_matches_fold_bitexact(blobs_df):
-    """knn_pairs_crossjoin's opt-in unrolled distance (dim=) must be
-    BIT-identical to the default HOF fold — the r17 settle keeps the
-    fold on sample-sized callers and the unroll on the recall gate's
-    big-pair arm, so the two renderings must never diverge."""
-    from pyspark.sql import functions as F
-
-    from mopso_engine.objectives import knn_pairs_crossjoin
-
-    pts = blobs_df.where(F.col("id") < 60)
-    dim = len(pts.select("features").first()["features"])
-    fold = knn_pairs_crossjoin(pts, 5).collect()
-    unroll = knn_pairs_crossjoin(pts, 5, dim=dim).collect()
-    key = lambda r: (r["id"], r["rank"])  # noqa: E731
-    fold_m = {key(r): (r["nbr_id"], r["nbr_dist"]) for r in fold}
-    unroll_m = {key(r): (r["nbr_id"], r["nbr_dist"]) for r in unroll}
-    assert fold_m == unroll_m  # exact equality, doubles included

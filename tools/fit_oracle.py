@@ -57,19 +57,6 @@ def _fit_embeddings_full(spark: SparkSession, sf: str):
     return MopsoEngine(cfg).fit(pts), pts
 
 
-def _fit_embeddings_lsh(spark: SparkSession, sf: str):
-    """The tiny-budget seeded fit on the LSH Conn backend (VERDICT r6
-    #6): identical budget to _fit_embeddings but knn_mode='lsh' — the
-    approximate-kNN path (BucketedRandomProjectionLSH candidate join,
-    seed-pinned, re-ranked by a deterministic window) composed with the
-    FULL fit loop end-to-end."""
-    from mopso_engine.engine import MopsoEngine
-
-    pts = points_from_embeddings(spark, sf)
-    cfg = MopsoConfig(n_particles=6, iter_max=2, knn_l=5, seed=42, knn_mode="lsh")
-    return MopsoEngine(cfg).fit(pts), pts
-
-
 def _fit_lineitem(spark: SparkSession, sf: str):
     """The SCALE demonstration fit: partition-local fitness over a
     lineitem-derived points table (~600k rows at sf0.1) — the reference
@@ -190,7 +177,6 @@ def main() -> None:
     res_e, _ = _fit_embeddings(spark, sf)
     res_f, _ = _fit_embeddings_full(spark, sf)
     res_l, _ = _fit_lineitem(spark, sf)
-    res_lsh, _ = _fit_embeddings_lsh(spark, sf)
     from mopso_engine.objectives import _REDUCE_BLOCK_ROWS
 
     data = {
@@ -211,10 +197,6 @@ def main() -> None:
             "positions": [p.tolist() for p in res_l.archive_positions],
             "fitness": res_l.archive_fitness.tolist(),
             "conn_rounded": [round(float(f[1]), 4) for f in res_l.archive_fitness],
-        },
-        "mopso_fit_lsh": {
-            "positions": [p.tolist() for p in res_lsh.archive_positions],
-            "fitness": res_lsh.archive_fitness.tolist(),
         },
     }
     out = sys.argv[2] if len(sys.argv) > 2 else _FIT_ORACLE_PATH
