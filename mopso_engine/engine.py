@@ -266,8 +266,10 @@ class MopsoEngine:
 
         # kNN precompute: solution-independent, reused by every iteration.
         # fitness_mode is the scope; an exact fit above MAX_EXACT_KNN_ROWS
-        # fails here, before the kNN map's collect.
-        nbr = with_neighbors(pts_k, cfg.knn_l, mode=cfg.fitness_mode, n_rows=n).persist()
+        # fails here, before the kNN map's collect. The exact scope
+        # collects its reference set from the input, not from pts_k: the
+        # broadcast is sorted by id, so the layout's shuffle runs once.
+        nbr = with_neighbors(pts_k, cfg.knn_l, mode=cfg.fitness_mode, n_rows=n, collect_from=pts).persist()
         try:
             # materialize the cache as its own timed step, so neither the
             # init fitness pass nor a resumed fit's first iteration absorbs

@@ -37,6 +37,12 @@ from pyspark.sql.window import Window
 
 from mopso_engine.worker import prepare
 
+#: cells of ``silhouette_exact``'s (block, n, d) difference tensor per row
+#: block: 4M cells, a 32 MB tensor touched once, so memory bandwidth is
+#: not the limit here, and wide tables do not fall to 1-row blocks (a
+#: Python step per row).
+_BLOCK_CELLS_EXACT = 4_000_000
+
 
 def cluster_sizes(assigned: DataFrame) -> DataFrame:
     """A8: cluster-size histogram."""
@@ -289,7 +295,7 @@ def silhouette_exact(points: DataFrame, assigned: DataFrame, *, include_self: bo
     (squared-euclidean silhouette).
     """
     from mopso_engine.assign import _distances_exact
-    from mopso_engine.objectives import _BLOCK_CELLS_EXACT, MAX_EXACT_KNN_ROWS
+    from mopso_engine.objectives import MAX_EXACT_KNN_ROWS
 
     rows = points.select("id", "features").join(assigned.select("id", "cluster"), "id").collect()
     n = len(rows)

@@ -57,17 +57,19 @@ from mopso_engine.worker import prepare
 #: ``_REDUCE_BLOCK_ROWS`` is part of the fitness sums: OpenBLAS rounds the
 #: ``2x·y`` product differently for different operand shapes (a 1-row
 #: block goes through gemv; at d ≥ 8 any other row subset can differ
-#: too), and a changed distance can change a rank at a tie.
+#: too), and a changed distance can change a rank at a tie. The
+#: exact-math ranks (``_topl_blocked(exact_math=True)``) follow no block.
 _BLOCK_CELLS = 262_144
-#: block cap for the exact Σ(x−y)² path (dist_fn given): that formula
-#: materializes a (block, n_ref, d) DIFFERENCE tensor, so cells here are
-#: divided by n_ref·d — keeping the old 4M (32 MB tensor) avoids
-#: degenerating to 1-row blocks (per-block Python overhead × n rows) on
-#: wide-d reference sets; the tensor is touched once, so the bandwidth
-#: argument above does not apply to it.
-_BLOCK_CELLS_EXACT = 4_000_000
 _EPS = np.finfo(np.float64).eps
 _TINY = np.finfo(np.float64).tiny
+
+
+def _margin(bound: np.ndarray, dim: int) -> np.ndarray:
+    """m = √((64 + 4d)·eps·bound + tiny) for ``bound`` = ‖x‖² + max‖y‖²
+    (as computed): a bound on the rounding error of a computed distance,
+    proved where it is used (:class:`_ProjectionWindows`,
+    :func:`_exact_candidates`)."""
+    return np.sqrt((64.0 + 4.0 * dim) * _EPS * bound + _TINY)
 
 
 def _mask_self(d: np.ndarray, self_pos: np.ndarray) -> np.ndarray:
@@ -124,7 +126,6 @@ class _ProjectionWindows:
         self.order = np.argsort(ref[:, self.c], kind="stable")
         self.proj = ref[self.order, self.c]
         self.n_adj = min(n_ref, 2 * (l_eff + 1))
-        self.k_ulp = 64.0 + 4.0 * dim
 
     def distances(self, xb: np.ndarray, self_pos: np.ndarray):
         """(d, cols) for one row block, self excluded (inf): ``cols`` are
@@ -142,7 +143,7 @@ class _ProjectionWindows:
             d_adj = _dist_from_product(xn, np.take_along_axis(prod, adj, axis=1), self.rn[adj])
             d_adj[adj == self_pos[:, None]] = np.inf
             r = np.partition(d_adj, self.l_eff - 1, axis=1)[:, self.l_eff - 1]
-            half = r + 2.0 * np.sqrt(self.k_ulp * _EPS * bound + _TINY)
+            half = r + 2.0 * _margin(bound, xb.shape[1])
             lo = np.searchsorted(self.proj, xc - half, "left")
             hi = np.searchsorted(self.proj, xc + half, "right")
             # at least L+1 columns, as _select_topl needs (x may be foreign to ref)
@@ -156,6 +157,65 @@ class _ProjectionWindows:
         return _mask_self(_dist_from_product(xn, prod, self.rn), self_pos), None
 
 
+def _exact_candidates(xb: np.ndarray, ref: np.ndarray, rn: np.ndarray, self_pos: np.ndarray, l_eff: int):
+    """(d, cols) for one row block of the exact-math path of
+    ``_topl_blocked``: ``d`` holds ``_distances_exact``'s bytes for the
+    ref positions ``cols`` (self excluded, inf), a superset of each row's
+    top L by (exact distance, id). ``cols`` is None when ``d`` is the
+    full-width brute-force matrix (values that are not finite).
+
+    Filter with gemm, refine exactly. Let g be the gemm distance of a
+    pair (``_distances``' form), e its exact-math distance (Σ(x−y)²), D
+    the true distance, B = ‖x‖² + ‖y‖², u = eps/2 and γ_n = nu/(1 − nu).
+    In g², the norms and the dot product are sums of d products, so each
+    carries an error ≤ γ_d times its sum of |terms| (any summation order,
+    FMA or not): ≤ 2γ_d·B together; the two additions add ≤ 6u·B. The
+    clamp at 0 only moves g² toward D² ≥ 0, and |√a − √b| ≤ √|a − b|, so
+    |√g² − D| ≤ √((d + 3)·eps·B); the rounded root adds ≤ u·(D + that).
+    e² sums d non-negative terms, each rounded twice, so e² = D²(1 + θ),
+    |θ| ≤ γ_{d+2}, and |e − D| ≤ (d + 3)·eps·D with D ≤ √(2B). Together
+    |g − e| ≤ √((d + 3)·eps·B) + (d + 5)·eps·√(2B), below
+    m = √((64 + 4d)·eps·B) = 2√((d + 16)·eps·B) by more than a factor of
+    1.9 for any d below 10¹². The slack covers computing B (as ‖x‖² +
+    max‖y‖², from computed norms), m itself and the sum r + 2m below;
+    the tiny term covers underflow (each an absolute error ≤ 2⁻¹⁰⁷⁴ in a
+    square). So |g − e| ≤ m for every pair.
+
+    Let r be the row's L-th smallest g. Its L columns at or below r have
+    e ≤ r + m, so the row's L-th smallest e is ≤ r + m, and so is the e
+    of every column of its top L by (e, id), ties included: each has
+    g ≤ r + 2m and is kept. Recomputing the kept columns exactly and
+    ranking them by (e, id) gives the brute-force ranks and distances.
+
+    The recompute gathers a (rows, width, d) tensor and reduces it with
+    ``_distances_exact``'s own ``einsum("nkd,nkd->nk")``: a distance then
+    has the bytes of the same cell of the brute-force matrix (a reduction
+    of another shape may round differently), and neither depends on the
+    row block."""
+    n_ref, dim = ref.shape
+    xn = (xb * xb).sum(axis=1)
+    bound = xn + rn.max()
+    if not np.isfinite(2.0 * bound).all():
+        return _mask_self(_distances_exact(xb, ref), self_pos), None
+    g = _mask_self(_dist_from_product(xn, 2.0 * xb @ ref.T, rn), self_pos)
+    r = np.partition(g, l_eff - 1, axis=1)[:, l_eff - 1]
+    kept = (g <= (r + 2.0 * _margin(bound, dim))[:, None]).sum(axis=1)
+    # at least L+1 columns, as _select_topl needs (x may be foreign to ref)
+    width = min(max(int(kept.max()), l_eff + 1), n_ref)
+    # the width smallest g of a row hold every kept column of it
+    if width < n_ref:
+        cols = np.argpartition(g, width - 1, axis=1)[:, :width]
+    else:
+        cols = np.broadcast_to(np.arange(n_ref), g.shape)
+    d = np.empty(cols.shape)
+    step = max(1, _BLOCK_CELLS // max(1, width * dim))  # the tensor stays ≤ 2 MB
+    for s in range(0, len(xb), step):
+        diff = xb[s : s + step, None, :] - ref[cols[s : s + step]]
+        d[s : s + step] = np.sqrt(np.einsum("nkd,nkd->nk", diff, diff))
+    d[cols == self_pos[:, None]] = np.inf
+    return d, cols
+
+
 def _topl_blocked(
     x: np.ndarray,
     ref: np.ndarray,
@@ -163,7 +223,7 @@ def _topl_blocked(
     x_ids: np.ndarray,
     l_nbrs: int,
     *,
-    dist_fn=None,
+    exact_math: bool = False,
 ):
     """Top-L neighbors of each row of x against ref (ids sorted), by
     (dist, id), computed in row blocks so the (rows × |ref|) distance
@@ -171,33 +231,32 @@ def _topl_blocked(
     ref exclude themselves. Returns (nbr_pos, nbr_dist) of shape
     (len(x), l_eff), l_eff = min(L, |ref| − 1).
 
-    ``dist_fn`` defaults to the BLAS gemm form, which the projection
+    By default the distances are the BLAS gemm form, which the projection
     windows of :class:`_ProjectionWindows` prune exactly: the result is
     byte-identical to brute-force ``_distances`` over the same row blocks.
-    Pass assign._distances_exact when ranks must reproduce a SQL oracle's
-    Σ(x−y)² distances bit-for-bit (brute force, no pruning)."""
+    ``exact_math=True`` ranks by ``assign._distances_exact``'s Σ(x−y)²
+    (a SQL oracle's distances) at gemm cost, by the filter and refine of
+    :func:`_exact_candidates`: the result is byte-identical to brute-force
+    ``_distances_exact`` ranking, whatever the row blocks."""
     n_ref = ref.shape[0]
     l_eff = min(l_nbrs, n_ref - 1)
     out_pos = np.empty((len(x), l_eff), dtype=np.int64)
     out_d = np.empty((len(x), l_eff), dtype=np.float64)
     if l_eff == 0:
         return out_pos, out_d
-    if dist_fn is None:
-        windows = _ProjectionWindows(ref, l_eff)
-        block = max(1, _BLOCK_CELLS // max(1, n_ref))
+    if exact_math:
+        rn = (ref * ref).sum(axis=1)
     else:
-        # the exact Σ(x−y)² formula materializes a (block, n_ref, d)
-        # difference tensor — size the block so THAT stays ~32 MB, not
-        # just the (block, n_ref) output matrix
-        block = max(1, _BLOCK_CELLS_EXACT // max(1, n_ref * ref.shape[1]))
+        windows = _ProjectionWindows(ref, l_eff)
+    block = max(1, _BLOCK_CELLS // max(1, n_ref))
     for s in range(0, len(x), block):
         e = min(s + block, len(x))
         pos = np.clip(np.searchsorted(ref_ids, x_ids[s:e]), 0, n_ref - 1)
         self_pos = np.where(ref_ids[pos] == x_ids[s:e], pos, -1)
-        if dist_fn is None:
-            d, cols = windows.distances(x[s:e], self_pos)
+        if exact_math:
+            d, cols = _exact_candidates(x[s:e], ref, rn, self_pos, l_eff)
         else:
-            d, cols = _mask_self(dist_fn(x[s:e], ref), self_pos), None
+            d, cols = windows.distances(x[s:e], self_pos)
         if cols is None:
             out_pos[s:e], out_d[s:e] = _select_topl(d, np.broadcast_to(ref_ids, d.shape), l_eff)
         else:
@@ -250,30 +309,61 @@ PAIRS_SCHEMA = StructType(
 MAX_EXACT_KNN_ROWS = 200_000
 
 
-def _knn_map(points: DataFrame, l_nbrs: int, scope: str, *, packed: bool, n_rows: int | None = None, dist_fn=None) -> DataFrame:
-    """The one kernel-built kNN table: ONE map stage, no shuffle, each
+def _broadcast_ref(points: DataFrame, n_rows: int | None):
+    """The broadcast id-sorted (ids, features) of an exact-scope kNN
+    table: all rows collected once, refused above ``MAX_EXACT_KNN_ROWS``
+    (``n_rows``, or a count) before the collect."""
+    n = n_rows if n_rows is not None else points.count()
+    if n > MAX_EXACT_KNN_ROWS:
+        raise ValueError(
+            f"exact kNN collects all {n} rows and broadcasts them to every executor; beyond "
+            f"{MAX_EXACT_KNN_ROWS} rows fit with MopsoConfig(fitness_mode='partition_local') "
+            "(neighbours within each partition, the reference Avg's cluster-scale semantics)"
+        )
+    rows = points.select("id", "features").collect()
+    ids = np.array([r["id"] for r in rows], dtype=np.int64)
+    feats = np.array([r["features"] for r in rows], dtype=np.float64)
+    order = np.argsort(ids)
+    return points.sparkSession.sparkContext.broadcast((ids[order], feats[order]))
+
+
+def _pair_rows(ids: np.ndarray, ref_ids: np.ndarray, nbr_pos: np.ndarray, nbr_d: np.ndarray) -> pd.DataFrame:
+    """``PAIRS_SCHEMA`` rows of one scored block."""
+    n, l_eff = nbr_pos.shape
+    return pd.DataFrame(
+        {
+            "id": np.repeat(ids, l_eff),
+            "nbr_id": ref_ids[nbr_pos].ravel(),
+            "rank": np.tile(np.arange(1, l_eff + 1, dtype=np.int32), n),
+            "nbr_dist": nbr_d.ravel(),
+        }
+    )
+
+
+def _knn_map(
+    points: DataFrame,
+    l_nbrs: int,
+    scope: str,
+    *,
+    packed: bool,
+    n_rows: int | None = None,
+    collect_from: DataFrame | None = None,
+) -> DataFrame:
+    """The one kernel-built gemm kNN table: ONE map stage, no shuffle, each
     scored block against an id-sorted reference set via ``_topl_blocked``.
-    ``scope='exact'`` collects + broadcasts all (id, features) once and
-    scores each non-empty Arrow batch; ``'partition_local'`` scores the
-    whole partition against itself (the reference Avg's semantics,
-    Spark_MOPSO_Avg.scala:843-865). ``packed=True`` emits the fit's
-    ``_NBR_SCHEMA_BIN`` rows, else ``PAIRS_SCHEMA`` rows — both from the
-    same neighbor positions, so the same neighbors at the same ranks. A
-    row with no neighbor (1-row partition) packs as 1+L self-copies with
-    ``nbr_n = 0`` and emits no pair."""
+    ``scope='exact'`` collects + broadcasts all (id, features) once, from
+    ``collect_from`` when given (the same rows as ``points`` in another
+    layout: the fit collects its input, not the re-laid-out table, so the
+    collect runs no shuffle), and scores each non-empty Arrow batch;
+    ``'partition_local'`` scores the whole partition against itself (the
+    reference Avg's semantics, Spark_MOPSO_Avg.scala:843-865).
+    ``packed=True`` emits the fit's ``_NBR_SCHEMA_BIN`` rows, else
+    ``PAIRS_SCHEMA`` rows — both from the same neighbor positions, so the
+    same neighbors at the same ranks. A row with no neighbor (1-row
+    partition) packs as 1+L self-copies with ``nbr_n = 0`` and emits no
+    pair."""
     if scope == "exact":
-        n = n_rows if n_rows is not None else points.count()
-        if n > MAX_EXACT_KNN_ROWS:
-            raise ValueError(
-                f"exact kNN collects all {n} rows and broadcasts them to every executor; beyond "
-                f"{MAX_EXACT_KNN_ROWS} rows fit with MopsoConfig(fitness_mode='partition_local') "
-                "(neighbours within each partition, the reference Avg's cluster-scale semantics)"
-            )
-        rows = points.select("id", "features").collect()
-        ids = np.array([r["id"] for r in rows], dtype=np.int64)
-        feats = np.array([r["features"] for r in rows], dtype=np.float64)
-        order = np.argsort(ids)
-        bc = points.sparkSession.sparkContext.broadcast((ids[order], feats[order]))
+        bc = _broadcast_ref(collect_from if collect_from is not None else points, n_rows)
 
     def scored_blocks(batches: Iterable[pd.DataFrame]):
         """(pdf, x, ref, ref_ids) per scored block."""
@@ -294,8 +384,7 @@ def _knn_map(points: DataFrame, l_nbrs: int, scope: str, *, packed: bool, n_rows
         prepare()
         for pdf, x, ref, ref_ids in scored_blocks(batches):
             ids = pdf["id"].to_numpy()
-            nbr_pos, nbr_d = _topl_blocked(x, ref, ref_ids, ids, l_nbrs, dist_fn=dist_fn)
-            n, l_eff = nbr_pos.shape
+            nbr_pos, nbr_d = _topl_blocked(x, ref, ref_ids, ids, l_nbrs)
             if packed:
                 flat = _pack_self_nbrs(x, ref, nbr_pos, l_nbrs)
                 yield pd.DataFrame(
@@ -303,18 +392,11 @@ def _knn_map(points: DataFrame, l_nbrs: int, scope: str, *, packed: bool, n_rows
                         "id": ids,
                         "label": pdf["label"],
                         "self_nbr_flat": [r.tobytes() for r in np.ascontiguousarray(flat)],
-                        "nbr_n": np.full(n, l_eff, dtype=np.int32),
+                        "nbr_n": np.full(len(ids), nbr_pos.shape[1], dtype=np.int32),
                     }
                 )
             else:
-                yield pd.DataFrame(
-                    {
-                        "id": np.repeat(ids, l_eff),
-                        "nbr_id": ref_ids[nbr_pos].ravel(),
-                        "rank": np.tile(np.arange(1, l_eff + 1, dtype=np.int32), n),
-                        "nbr_dist": nbr_d.ravel(),
-                    }
-                )
+                yield _pair_rows(ids, ref_ids, nbr_pos, nbr_d)
 
     if packed:
         out = points.select("id", "features", "label").mapInPandas(kernel, schema=_NBR_SCHEMA_BIN)
@@ -326,10 +408,11 @@ def _knn_map(points: DataFrame, l_nbrs: int, scope: str, *, packed: bool, n_rows
 
 
 def _release_knn(table: DataFrame) -> None:
-    """Destroy the exact-scope broadcast behind a :func:`_knn_map` table
-    (N·d·8 bytes on the driver and every executor). Call it once nothing
-    will compute the table again: after its cache is unpersisted, or
-    after its last job. No-op for a partition-local table."""
+    """Destroy the exact-scope broadcast behind a :func:`_knn_map` or
+    :func:`knn_pairs_exact` table (N·d·8 bytes on the driver and every
+    executor). Call it once nothing will compute the table again: after
+    its cache is unpersisted, or after its last job. No-op for a
+    partition-local table."""
     bc = getattr(table, "_knn_broadcast", None)
     if bc is not None:
         bc.destroy()
@@ -342,20 +425,49 @@ def knn_pairs_exact(
     """Exact top-L neighbor pairs via broadcast block-distance.
 
     All (id, features) are collected once into a numpy block that ships to
-    executors via Spark broadcast; each partition computes cdist(batch, all)
-    and keeps the L smallest — O(N²/P) vectorized work, no shuffle. Ties
-    break by (dist, nbr_id) for determinism (the reference relied on sort
-    stability, Spark_MOPSO_Avg.scala:1050-1052). Same kernel as
-    ``with_neighbors(mode='exact')``.
+    executors via Spark broadcast, and each row's L nearest others are
+    kept — O(N²/P) vectorized work, no shuffle. Ties break by (dist,
+    nbr_id) for determinism (the reference relied on sort stability,
+    Spark_MOPSO_Avg.scala:1050-1052).
 
-    Guarded by ``MAX_EXACT_KNN_ROWS``: the full-table collect + broadcast
-    is a driver/executor memory foot-gun beyond ~10⁵ rows — callers with
-    bigger tables must use 'partition_local'. Pass ``n_rows``
-    when already known to skip the extra count job. ``exact_math`` ranks
-    by ``assign._distances_exact``'s Σ(x−y)² (a SQL oracle's bits).
+    By default the distances are the gemm form and the table is the
+    fit's: the same kernel as ``with_neighbors(mode='exact')``, over
+    ``points``' own Arrow batches (the gemm's rounding follows the row
+    blocks). ``exact_math=True`` ranks by ``assign._distances_exact``'s
+    Σ(x−y)² (a SQL oracle's bits) by filter and refine
+    (:func:`_exact_candidates`); those bytes follow no blocking, so the
+    table scores fixed row blocks of the id-sorted broadcast over
+    ``spark.range(n_blocks)``, as ``metrics.silhouette_exact`` does, and
+    the input is read only by the collect.
+
+    Guarded by ``MAX_EXACT_KNN_ROWS``, before the collect: the
+    full-table collect + broadcast is a driver/executor memory foot-gun
+    beyond ~10⁵ rows — callers with bigger tables must use
+    'partition_local'. Pass ``n_rows`` when already known to skip the
+    extra count job. Release the broadcast with :func:`_release_knn`.
     """
-    dist_fn = _distances_exact if exact_math else None
-    return _knn_map(points, l_nbrs, "exact", packed=False, n_rows=n_rows, dist_fn=dist_fn)
+    if not exact_math:
+        return _knn_map(points, l_nbrs, "exact", packed=False, n_rows=n_rows)
+    bc = _broadcast_ref(points, n_rows)
+    n = len(bc.value[0])
+    block = max(1, _BLOCK_CELLS // max(1, n))  # one _topl_blocked block per range row
+    n_blocks = -(-n // block)
+
+    def kernel(batches: Iterable[pd.DataFrame]):
+        prepare()
+        ref_ids, ref = bc.value
+        for pdf in batches:
+            for b in pdf["id"].to_numpy():
+                lo, hi = int(b) * block, min(n, (int(b) + 1) * block)
+                nbr_pos, nbr_d = _topl_blocked(ref[lo:hi], ref, ref_ids, ref_ids[lo:hi], l_nbrs, exact_math=True)
+                yield _pair_rows(ref_ids[lo:hi], ref_ids, nbr_pos, nbr_d)
+
+    spark = points.sparkSession
+    out = spark.range(
+        n_blocks, numPartitions=max(1, min(n_blocks, spark.sparkContext.defaultParallelism))
+    ).mapInPandas(kernel, schema=PAIRS_SCHEMA)
+    out._knn_broadcast = bc
+    return out
 
 
 def knn_pairs_partition_local(points: DataFrame, l_nbrs: int) -> DataFrame:
@@ -395,7 +507,12 @@ def knn_pairs_crossjoin(points: DataFrame, l_nbrs: int) -> DataFrame:
 
 
 def with_neighbors(
-    points: DataFrame, l_nbrs: int, mode: str = "exact", *, n_rows: int | None = None
+    points: DataFrame,
+    l_nbrs: int,
+    mode: str = "exact",
+    *,
+    n_rows: int | None = None,
+    collect_from: DataFrame | None = None,
 ) -> DataFrame:
     """points → (id, label, self_nbr_flat, nbr_n), the cached input of the
     per-iteration fitness kernel.
@@ -411,14 +528,16 @@ def with_neighbors(
     Modes (the fit passes ``MopsoConfig.fitness_mode``), the two scopes
     of :func:`_knn_map`, each ONE map stage with zero shuffles:
     * 'exact' — global kNN via a broadcast of all features (to
-      ``MAX_EXACT_KNN_ROWS`` rows: the broadcast is N·d·8 B).
+      ``MAX_EXACT_KNN_ROWS`` rows: the broadcast is N·d·8 B), collected
+      from ``collect_from`` when given: the same rows as ``points`` in
+      the layout they came in, before a re-layout.
     * 'partition_local' — neighbors within each input partition only: the
       reference Avg's semantics (Spark_MOPSO_Avg.scala:843-865), no
       broadcast.
     """
     if mode not in ("exact", "partition_local"):
         raise ValueError(f"unknown knn mode: {mode!r} (expected 'exact' or 'partition_local')")
-    return _knn_map(points, l_nbrs, mode, packed=True, n_rows=n_rows)
+    return _knn_map(points, l_nbrs, mode, packed=True, n_rows=n_rows, collect_from=collect_from)
 
 
 #: fitness-kernel reduction block: a partition of up to 2048 rows reduces

@@ -42,9 +42,9 @@ def rescore_archive(
     top-``knn_l`` neighbors. ``knn_mode`` must be the fit's scope
     (``MopsoResult.knn_mode_used``, which is its ``fitness_mode``):
 
-    * ``'exact'`` — global neighbors via the collect+broadcast block
-      kernel (valid to ``MAX_EXACT_KNN_ROWS``, the same cap an exact fit
-      is held to);
+    * ``'exact'`` — global neighbors from :func:`knn_pairs_exact`'s
+      exact-math pair table (valid to ``MAX_EXACT_KNN_ROWS``, the same
+      cap an exact fit is held to, checked before its collect);
     * ``'partition_local'`` — neighbors from
       :func:`knn_pairs_partition_local` over the layout
       ``repartition(layout_partitions, "id").sortWithinPartitions("id")``,
@@ -53,8 +53,14 @@ def rescore_archive(
       global rescore of a partition-local fit would disagree by
       construction).
 
-    Eager: persists the multi-solution assignment for its two uses and
-    releases it, and the exact scope's broadcast, before returning.
+    Plan: the exact-math multi-solution assignment is joined to both
+    ends of each neighbor pair; its Dev rows and the pairs' Conn terms
+    are summed in ONE ``groupBy("solution")``. In the exact scope the
+    S·N assignment is broadcast into both joins and the pair table
+    reads only the kNN collect, so the input is neither re-laid-out nor
+    persisted: 5 Spark jobs (the collect, two assignment broadcasts, the
+    aggregate's two stages). Eager; the kNN broadcast is released before
+    returning.
     """
     stack = np.stack(positions)
     if knn_mode == "partition_local":
@@ -68,50 +74,42 @@ def rescore_archive(
         # in-partition sort is a pure function of (data, partition count)
         pts = pts.repartition(layout_partitions, "id").sortWithinPartitions("id")
         pairs = knn_pairs_partition_local(pts, knn_l)
+        asg = assign_all_solutions(pts, stack, exact_math=True)
     elif knn_mode == "exact":
-        # spread the CPU-bound exact kNN + multi-solution assignment
-        # kernels: a small parquet corpus arrives as one scan partition,
-        # which would serialize the quadratic work (results are
-        # layout-independent; the grouped sums absorb reorder noise well
-        # below the oracle rounding)
-        dp = pts.sparkSession.sparkContext.defaultParallelism
-        pts = pts.repartition(dp, "id")
         pairs = knn_pairs_exact(pts, knn_l, n_rows=n_rows, exact_math=True)
+        # S·N rows of (id, solution, cluster, dist): small enough to ship
+        # to every task, so neither join shuffles the pair table
+        asg = F.broadcast(assign_all_solutions(pts, stack, exact_math=True))
     else:
         raise ValueError(f"unknown rescore knn_mode: {knn_mode}")
-    # the laid-out points feed THREE jobs (the kNN collect, the
-    # assignment kernel and the pair kernel) — persist the layout once
-    # so each consumer reads the cache instead of re-running the parquet
-    # scan + repartition (2 scans + 2 exchanges removed; kernel rows are
-    # row-independent, so values are unchanged). Released below.
-    pts = pts.persist()
-    asg = assign_all_solutions(pts, stack, exact_math=True).persist()
     try:
-        dev_rows = asg.groupBy("solution").agg(F.sum("dist").alias("dev")).collect()
-        a = asg.select("id", "solution", F.col("cluster").alias("c_i"))
-        b = asg.select(
-            F.col("id").alias("nbr_id_b"),
-            F.col("solution").alias("sol_j"),
-            F.col("cluster").alias("c_j"),
-        )
-        conn_rows = (
-            pairs.join(a, "id")
-            .join(b, (F.col("nbr_id") == F.col("nbr_id_b")) & (F.col("solution") == F.col("sol_j")))
-            .groupBy("solution")
-            .agg(
-                F.sum(
-                    F.when(F.col("c_i") == F.col("c_j"), 1.0 / F.col("rank")).otherwise(0.0)
-                ).alias("conn")
-            )
-            .collect()
-        )
+        rows = _dev_conn(pairs, asg).collect()
     finally:
-        asg.unpersist()
-        pts.unpersist()
         _release_knn(pairs)
-    dev = {r["solution"]: r["dev"] for r in dev_rows}
-    conn = {r["solution"]: r["conn"] for r in conn_rows}
-    return [(s, float(dev[s]), float(conn.get(s, 0.0))) for s in sorted(dev)]
+    return sorted((r["solution"], float(r["dev"]), float(r["conn"])) for r in rows)
+
+
+def _dev_conn(pairs: DataFrame, asg: DataFrame) -> DataFrame:
+    """(solution, dev, conn): the assignment's distances and the
+    same-cluster 1/rank terms of the pairs (both ends joined to their
+    cluster), unioned into one grouped sum."""
+    a = asg.select("id", "solution", F.col("cluster").alias("c_i"))
+    b = asg.select(
+        F.col("id").alias("nbr_id_b"),
+        F.col("solution").alias("sol_j"),
+        F.col("cluster").alias("c_j"),
+    )
+    conn = (
+        pairs.join(a, "id")
+        .join(b, (F.col("nbr_id") == F.col("nbr_id_b")) & (F.col("solution") == F.col("sol_j")))
+        .select(
+            "solution",
+            F.lit(0.0).alias("dev"),
+            F.when(F.col("c_i") == F.col("c_j"), 1.0 / F.col("rank")).otherwise(0.0).alias("conn"),
+        )
+    )
+    dev = asg.select("solution", F.col("dist").alias("dev"), F.lit(0.0).alias("conn"))
+    return dev.unionByName(conn).groupBy("solution").agg(F.sum("dev").alias("dev"), F.sum("conn").alias("conn"))
 
 
 def rescore_dev(pts: DataFrame, positions: list[np.ndarray]) -> list[tuple[int, float]]:

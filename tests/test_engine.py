@@ -178,6 +178,29 @@ def test_rescore_partition_local_agrees_with_kernel(blobs_df, blobs):
         assert math.isclose(kernel[s, 1], conn, rel_tol=1e-6)
 
 
+def test_rescore_exact_runs_five_jobs_and_persists_nothing(spark, blobs_df, blobs):
+    """The exact rescore is one collect (the kNN reference set), two
+    broadcasts of the multi-solution assignment and the one aggregate's
+    two stages: at most 5 Spark jobs, counted by job group. It re-lays
+    out and persists nothing, so no RDD is left persisted."""
+    from mopso_engine.rescore import rescore_archive
+
+    _, _, _, c = blobs
+    rng = np.random.default_rng(4)
+    stack = [c, c + rng.normal(scale=5.0, size=c.shape)]
+    sc = spark.sparkContext
+    persisted = set(sc._jsc.getPersistentRDDs().keySet())
+    group = "rescore-exact-jobs"
+    sc.setJobGroup(group, "exact rescore")
+    try:
+        rows = rescore_archive(blobs_df, stack, knn_l=5, n_rows=300, knn_mode="exact")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert [s for s, _, _ in rows] == [0, 1]
+    assert 0 < len(sc.statusTracker().getJobIdsForGroup(group)) <= 5
+    assert set(sc._jsc.getPersistentRDDs().keySet()) == persisted
+
+
 def test_exact_fit_above_the_cap_fails_before_the_knn_build(spark, blobs_df, small_cfg, monkeypatch):
     """An exact fit above MAX_EXACT_KNN_ROWS raises, naming the
     partition-local scope, and runs no job after the set-up pass: neither

@@ -191,3 +191,63 @@ def test_knn_pairs_exact_refuses_oversized_collect(blobs_df):
     with pytest.raises(ValueError, match="partition_local"):
         knn_pairs_exact(blobs_df, 5, n_rows=10**9)
 
+
+
+def test_knn_pairs_exact_math_refuses_before_the_collect(spark, blobs_df):
+    """The exact-math pair table checks MAX_EXACT_KNN_ROWS before its
+    collect: no Spark job runs."""
+    sc = spark.sparkContext
+    group = "exact-math-above-cap"
+    sc.setJobGroup(group, "oversized exact-math pair table")
+    try:
+        with pytest.raises(ValueError, match="partition_local"):
+            knn_pairs_exact(blobs_df, 5, n_rows=10**9, exact_math=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+@pytest.mark.parametrize("partitions", [1, 7])
+def test_exact_math_pairs_equal_brute_force(spark, partitions):
+    """The exact-math pair table is brute-force ``_distances_exact``
+    ranking by (dist, id), distances byte for byte, on an integer grid
+    with duplicates and ties, whatever the input's layout; its neighbour
+    sets and ranks are the crossjoin oracle's."""
+    from mopso_engine.assign import _distances_exact
+    from mopso_engine.objectives import _release_knn
+
+    rng = np.random.default_rng(5)
+    grid = rng.integers(0, 5, size=(120, 3)).astype(np.float64) * 0.1
+    ids = np.sort(rng.choice(10_000, size=120, replace=False))
+    df = spark.createDataFrame(
+        [(int(i), [float(v) for v in p], 0) for i, p in zip(ids, grid)],
+        "id long, features array<double>, label int",
+    ).repartition(partitions)
+    d = _distances_exact(grid, grid)
+    np.fill_diagonal(d, np.inf)
+    order = np.lexsort((np.broadcast_to(ids, d.shape), d), axis=1)[:, :5]
+    want = {
+        (int(ids[i]), rank + 1): (int(ids[j]), d[i, j].tobytes())
+        for i in range(len(ids))
+        for rank, j in enumerate(order[i])
+    }
+    pairs = knn_pairs_exact(df, 5, n_rows=120, exact_math=True)
+    got = {(r["id"], r["rank"]): (r["nbr_id"], np.float64(r["nbr_dist"]).tobytes()) for r in pairs.collect()}
+    _release_knn(pairs)
+    assert got == want
+    cross = {(r["id"], r["rank"]): r["nbr_id"] for r in knn_pairs_crossjoin(df, 5).collect()}
+    assert {k: v[0] for k, v in got.items()} == cross
+
+
+def test_exact_knn_collected_from_the_input_keeps_the_bytes(blobs_df):
+    """An exact fit collects the kNN reference set from its input rather
+    than from the re-laid-out table; the packed neighbour rows are the
+    same bytes."""
+    from mopso_engine.objectives import _release_knn
+
+    layout = blobs_df.repartition(3, "id").sortWithinPartitions("id")
+    tables = [with_neighbors(layout, L, mode="exact"), with_neighbors(layout, L, mode="exact", collect_from=blobs_df)]
+    rows = [sorted((r["id"], r["self_nbr_flat"], r["nbr_n"]) for r in t.collect()) for t in tables]
+    for t in tables:
+        _release_knn(t)
+    assert rows[0] == rows[1]

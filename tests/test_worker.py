@@ -121,6 +121,12 @@ def _knn(df, scope, packed):
     O._release_knn(table)
 
 
+def _exact_math_pairs(df):
+    table = O.knn_pairs_exact(df, 5, exact_math=True)
+    table.collect()
+    O._release_knn(table)
+
+
 def _evaluate(df, stack):
     table = O._knn_map(df, 5, "exact", packed=True)
     O.evaluate_solutions(table, stack)
@@ -133,6 +139,7 @@ _KERNEL_CALLS = {
     "assign_all_solutions": lambda df, c, stack: A.assign_all_solutions(df, stack).collect(),
     "knn_exact_packed": lambda df, c, stack: _knn(df, "exact", True),
     "knn_partition_local_pairs": lambda df, c, stack: _knn(df, "partition_local", False),
+    "knn_exact_math_pairs": lambda df, c, stack: _exact_math_pairs(df),
     "evaluate_solutions": lambda df, c, stack: _evaluate(df, stack),
     "assignment_report": lambda df, c, stack: M.assignment_report(df, c, df.count()),
     "silhouette_exact": lambda df, c, stack: M.silhouette_exact(df, A.assign(df, c)),

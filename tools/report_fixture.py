@@ -19,7 +19,10 @@ Inputs, each scored against a fixed set of centers:
 Recorded per input: ``MopsoEngine.evaluate`` with the reference's DBI
 ``max`` reset and not reset, ``metrics.silhouette_exact`` with and
 without the point itself in its own cluster, and the k-means baseline's
-purity and inertia from ``report.build_report``.
+purity and inertia from ``report.build_report``. On ``blobs`` (L=5) and
+``embeddings`` (L=10) also the exact-scope relational re-score
+(``rescore.rescore_archive``) of a three-solution archive: the centers
+and two seeded perturbations of them.
 
 Re-run only for a change that is meant to move a report value, and say
 so where the change is recorded:
@@ -43,14 +46,17 @@ from mopso_engine.assign import assign  # noqa: E402
 from mopso_engine.engine import MopsoEngine, MopsoResult  # noqa: E402
 from mopso_engine.io import points_from_embeddings  # noqa: E402
 from mopso_engine.report import build_report  # noqa: E402
+from mopso_engine.rescore import rescore_archive  # noqa: E402
 from mopso_engine.schema import BugCompat, MopsoConfig  # noqa: E402
 from tests.conftest import make_blobs, make_spark  # noqa: E402
 
 FIXTURE_PATH = os.path.join(ROOT, "tests", "data", "report_values.json")
 EMBEDDINGS_DIR = os.path.join(ROOT, "perfbench", "data", "sf0.01")
 CASES = ("blobs", "blobs_empty", "embeddings")
-#: seeds the pick of the embeddings' centers
+#: seeds the pick of the embeddings' centers and the rescore's perturbations
 CENTER_SEED = 2024
+#: the kNN size L of each input's exact rescore
+RESCORE_L = {"blobs": 5, "embeddings": 10}
 
 
 def case_input(spark, case: str):
@@ -87,6 +93,16 @@ def _result(centers: np.ndarray, n: int) -> MopsoResult:
     )
 
 
+def rescore_positions(centers: np.ndarray) -> list[np.ndarray]:
+    """The rescored archive: ``centers`` and two seeded perturbations,
+    each shifted per coordinate by a normal draw as wide as the
+    centers' spread (on the embeddings, points change cluster and Conn
+    moves; each blob stays whole in one cluster)."""
+    rng = np.random.default_rng(CENTER_SEED)
+    scale = float(centers.std())
+    return [centers] + [centers + rng.normal(scale=scale, size=centers.shape) for _ in range(2)]
+
+
 def report_values(spark, case: str) -> dict:
     """The report's values on one recorded input, as JSON would hold them."""
     pts, centers = case_input(spark, case)
@@ -105,6 +121,10 @@ def report_values(spark, case: str) -> dict:
         asg.unpersist()
         km = build_report(MopsoEngine(MopsoConfig(k=len(centers))), pts, res)["kmeans_baseline"]
         out["kmeans_baseline"] = {key: km[key] for key in ("purity", "purity_accepted", "inertia")}
+        if case in RESCORE_L:
+            out["rescore_archive"] = rescore_archive(
+                pts, rescore_positions(centers), RESCORE_L[case], n_rows=res.n_points, knn_mode="exact"
+            )
     finally:
         pts.unpersist()
     return json.loads(json.dumps(out))
