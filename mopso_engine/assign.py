@@ -25,19 +25,10 @@ from mopso_engine.worker import prepare
 
 
 def _distances(block: np.ndarray, centers: np.ndarray) -> np.ndarray:
-    """(n,d) × (k,d) → (n,k) euclidean distances, one BLAS gemm."""
-    return _dist_from_product(
-        (block * block).sum(axis=1), 2.0 * block @ centers.T, (centers * centers).sum(axis=1)
-    )
-
-
-def _dist_from_product(xn: np.ndarray, prod: np.ndarray, cn: np.ndarray) -> np.ndarray:
-    """``_distances``' elementwise tail, √max(‖x‖² − 2x·c + ‖c‖², 0) — the
-    clamp drops tiny negatives from FP error. ``prod`` is the gemm
-    ``2.0 * block @ centers.T`` or a gather of its cells (``cn`` then the
-    matching ‖c‖²): elementwise IEEE ops, so a gathered cell is
-    bit-identical to the same cell of the full matrix."""
-    sq = xn[:, None] - prod + cn
+    """(n,d) × (k,d) → (n,k) euclidean distances, one BLAS gemm:
+    √max(‖x‖² − 2x·c + ‖c‖², 0) — the clamp drops tiny negatives from FP
+    error."""
+    sq = (block * block).sum(axis=1)[:, None] - 2.0 * block @ centers.T + (centers * centers).sum(axis=1)
     np.maximum(sq, 0.0, out=sq)
     return np.sqrt(sq, out=sq)
 

@@ -233,7 +233,7 @@ class MopsoEngine:
         # NOT independent of the cpu count: above 1024 rows per core the
         # 4×cores cap sets the partition count, so the summation order
         # (and the fitness's last bits) follow the core count (ROADMAP
-        # item 1). Below that a seeded fit is bit-reproducible across
+        # item 6). Below that a seeded fit is bit-reproducible across
         # session configs (the property the post-hoc fit oracle pins).
         # partition_local mode keeps the
         # caller's layout — there partitioning IS the semantics (AvgLabel

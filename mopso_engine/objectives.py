@@ -40,36 +40,22 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from mopso_engine.assign import _dist_from_product, _distances, _distances_exact
+from mopso_engine.assign import _distances, _distances_exact
 from mopso_engine.worker import prepare
 
-#: cap on the scratch distance-matrix cells per block for the BLAS/gemm
-#: path (262_144 cells = 2 MB of float64): sized to stay CACHE-resident
-#: per worker, not merely to bound memory. The old 4M-cell (32 MB) block
-#: streamed every distance matrix through RAM; with 32 concurrent Python
-#: workers the aggregate traffic saturated memory bandwidth — measured on
-#: the 600k-row lineitem fit layout (64 partitions × 9.4k rows, d=4):
-#: 32 MB blocks → 22.7s wall / 558 task-core-s; 2 MB → 6.8s / 155; the
-#: same kernel single-task isolated runs 2.0s either way. NOTE the
-#: row-block rule, and which rows the shared kernel ``_knn_map`` scores
-#: as one block (an Arrow batch when exact, the whole partition when
-#: partition_local), is part of the neighbor table's BYTES, as
-#: ``_REDUCE_BLOCK_ROWS`` is part of the fitness sums: OpenBLAS rounds the
-#: ``2x·y`` product differently for different operand shapes (a 1-row
-#: block goes through gemv; at d ≥ 8 any other row subset can differ
-#: too), and a changed distance can change a rank at a tie. The
-#: exact-math ranks (``_topl_blocked(exact_math=True)``) follow no block.
+#: cap on the scratch cells per block of the kNN kernel (262_144 cells =
+#: 2 MB of float64): a window tensor (rows × width × d) or a gemm filter
+#: matrix (rows × |ref|). Sized to stay CACHE-resident per worker, not
+#: merely to bound memory. The old 4M-cell (32 MB) block streamed every
+#: distance matrix through RAM; with 32 concurrent Python workers the
+#: aggregate traffic saturated memory bandwidth — measured on the
+#: 600k-row lineitem fit layout (64 partitions × 9.4k rows, d=4): 32 MB
+#: blocks → 22.7s wall / 558 task-core-s; 2 MB → 6.8s / 155; the same
+#: kernel single-task isolated runs 2.0s either way. The neighbour table
+#: does not depend on it: every distance is an exact-math one.
 _BLOCK_CELLS = 262_144
 _EPS = np.finfo(np.float64).eps
 _TINY = np.finfo(np.float64).tiny
-
-
-def _margin(bound: np.ndarray, dim: int) -> np.ndarray:
-    """m = √((64 + 4d)·eps·bound + tiny) for ``bound`` = ‖x‖² + max‖y‖²
-    (as computed): a bound on the rounding error of a computed distance,
-    proved where it is used (:class:`_ProjectionWindows`,
-    :func:`_exact_candidates`)."""
-    return np.sqrt((64.0 + 4.0 * dim) * _EPS * bound + _TINY)
 
 
 def _mask_self(d: np.ndarray, self_pos: np.ndarray) -> np.ndarray:
@@ -99,70 +85,98 @@ def _select_topl(d: np.ndarray, col_ids: np.ndarray, l_eff: int):
     return np.take_along_axis(part, order, axis=1), np.take_along_axis(pd_d, order, axis=1)
 
 
+def _exact_distances(xb: np.ndarray, ref: np.ndarray, cols: np.ndarray) -> np.ndarray:
+    """``_distances_exact``'s bytes for the ref positions ``cols`` (rows ×
+    width) of each row of xb. The (rows, width, d) gather is reduced with
+    ``_distances_exact``'s own ``einsum("nkd,nkd->nk")``, so a distance
+    has the bytes of the same cell of the brute-force matrix (a reduction
+    of another shape may round differently) and depends on no row block.
+    Row steps keep the tensor within ``_BLOCK_CELLS``."""
+    d = np.empty(cols.shape)
+    step = max(1, _BLOCK_CELLS // max(1, cols.shape[1] * ref.shape[1]))
+    for s in range(0, len(xb), step):
+        diff = xb[s : s + step, None, :] - ref[cols[s : s + step]]
+        d[s : s + step] = np.sqrt(np.einsum("nkd,nkd->nk", diff, diff))
+    return d
+
+
 class _ProjectionWindows:
-    """Exact candidate windows for the gemm path of ``_topl_blocked``.
+    """Exact candidate windows of ``_topl_blocked``, found with no gemm.
 
-    ``ref`` is sorted once on its highest-variance coordinate c. As
-    |x_c − y_c| ≤ ‖x − y‖, the only points that can rank in a row's top-L
-    lie within r of x_c in that order, where r is any upper bound on the
-    row's L-th distance — here the L-th among its 2(L+1) projection
-    neighbors. The computed distances carry rounding error, bounded by
-    m = √(K·eps·(‖x‖² + max‖y‖²)) (K = 64 + 4d, several times the
-    gemm/norm error bound), so the window's half-width is r + 2m: every
-    point outside it has a computed distance above r, hence above the
-    row's L-th, ties included. Pruning is exact, not approximate.
+    ``ref`` is sorted once on its highest-variance coordinate c. Let e be
+    a computed exact-math distance (``_distances_exact``'s Σ(x−y)²), D the
+    true distance and u = eps/2. Each of the d squared differences
+    carries three roundings (the difference's, squared, and the
+    square's), and their sum at most d − 1 more in any order. All terms
+    are non-negative, so the computed sum is S ≥ (1 − u)^(d+2)·D² −
+    d·2⁻¹⁰⁷⁵: a square below the normal range loses at most 2⁻¹⁰⁷⁵, and
+    a difference or sum with a subnormal result is exact. The rounded
+    root gives e ≥ (1 − u)·√S. Hence D ≤ (e + f)·(1 + (d + 4)·eps/2) with
+    f = √(d·tiny). Overflow only raises e, which keeps the bound.
 
-    The distances inside a window are GATHERED from the block's
-    full-width product, never recomputed on a column subset: OpenBLAS
-    rounds a sub-matrix product differently (see ``_BLOCK_CELLS``)."""
+    Let r be the row's L-th smallest e among its 2(L+1) projection
+    neighbours, self excluded. These are L distinct columns with e ≤ r,
+    so the row's L-th smallest e over ref is ≤ r, and so is the e of
+    every column of its top L by (e, id), ties included. Each of those
+    has |y_c − x_c| ≤ D ≤ (r + f)·(1 + (d + 4)·eps/2). The half-width
+    h = (r + f)·(1 + (d + 4)·eps), computed with two roundings, is at
+    least that bound (for d below 10¹²); the window's ends x_c ∓ h are
+    rounded to nearest and then moved one ulp outward, which puts them at
+    or beyond the exact ends. Every top-L column lies in the window, so
+    ranking the window's exact distances by (e, id) gives the brute-force
+    ranks and distances. Pruning is exact, not approximate."""
 
     def __init__(self, ref: np.ndarray, l_eff: int):
         n_ref, dim = ref.shape
         self.ref = ref
         self.l_eff = l_eff
-        self.rn = (ref * ref).sum(axis=1)  # as _distances computes it
-        self.max_rn = self.rn.max()
+        self.finite = bool(np.isfinite(ref).all())
         self.c = int(np.argmax(ref.var(axis=0)))
         self.order = np.argsort(ref[:, self.c], kind="stable")
         self.proj = ref[self.order, self.c]
         self.n_adj = min(n_ref, 2 * (l_eff + 1))
+        self.floor = np.sqrt(dim * _TINY)
+        self.grow = 1.0 + (dim + 4) * _EPS
 
-    def distances(self, xb: np.ndarray, self_pos: np.ndarray):
-        """(d, cols) for one row block, self excluded (inf): ``cols`` are
-        the ref positions of d's columns, or None when d is the
-        full-width matrix — the block's windows cover over half of ref
-        (no pruning, e.g. at d=64) or its values are not finite."""
+    def bounds(self, x: np.ndarray, self_pos: np.ndarray):
+        """Each row's window ``order[lo:hi]``; (0, |ref|) for a row whose
+        values or ref's are not finite."""
         n_ref = len(self.proj)
-        xn = (xb * xb).sum(axis=1)
-        prod = 2.0 * xb @ self.ref.T
-        bound = xn + self.max_rn
-        if np.isfinite(2.0 * bound).all():
-            xc = xb[:, self.c]
-            lo = np.searchsorted(self.proj, xc) - (self.l_eff + 1)
-            adj = self.order[np.clip(lo, 0, n_ref - self.n_adj)[:, None] + np.arange(self.n_adj)]
-            d_adj = _dist_from_product(xn, np.take_along_axis(prod, adj, axis=1), self.rn[adj])
-            d_adj[adj == self_pos[:, None]] = np.inf
-            r = np.partition(d_adj, self.l_eff - 1, axis=1)[:, self.l_eff - 1]
-            half = r + 2.0 * _margin(bound, xb.shape[1])
-            lo = np.searchsorted(self.proj, xc - half, "left")
-            hi = np.searchsorted(self.proj, xc + half, "right")
-            # at least L+1 columns, as _select_topl needs (x may be foreign to ref)
-            width = max(int((hi - lo).max()), self.l_eff + 1)
-            if 2 * width <= n_ref:
-                idx = lo[:, None] + np.arange(width)
-                cols = self.order[np.minimum(idx, n_ref - 1)]
-                d = _dist_from_product(xn, np.take_along_axis(prod, cols, axis=1), self.rn[cols])
-                d[(idx >= hi[:, None]) | (cols == self_pos[:, None])] = np.inf
-                return d, cols
-        return _mask_self(_dist_from_product(xn, prod, self.rn), self_pos), None
+        lo = np.zeros(len(x), dtype=np.int64)
+        hi = np.full(len(x), n_ref, dtype=np.int64)
+        rows = np.flatnonzero(np.isfinite(x).all(axis=1)) if self.finite else np.empty(0, np.int64)
+        xc = x[rows, self.c]
+        start = np.clip(np.searchsorted(self.proj, xc) - (self.l_eff + 1), 0, n_ref - self.n_adj)
+        adj = self.order[start[:, None] + np.arange(self.n_adj)]
+        d_adj = _exact_distances(x[rows], self.ref, adj)
+        d_adj[adj == self_pos[rows, None]] = np.inf
+        r = np.partition(d_adj, self.l_eff - 1, axis=1)[:, self.l_eff - 1]
+        half = (r + self.floor) * self.grow
+        lo[rows] = np.searchsorted(self.proj, np.nextafter(xc - half, -np.inf), "left")
+        hi[rows] = np.searchsorted(self.proj, np.nextafter(xc + half, np.inf), "right")
+        return lo, hi
+
+    def distances(self, xb: np.ndarray, lo: np.ndarray, hi: np.ndarray, self_pos: np.ndarray):
+        """(d, cols) for one row block: the exact distances to the ref
+        positions ``cols`` of the block's windows, padded to the widest
+        (at least L+1 columns, as ``_select_topl`` needs); padding and
+        self are inf."""
+        n_ref = len(self.proj)
+        width = max(int((hi - lo).max()), self.l_eff + 1)
+        idx = lo[:, None] + np.arange(width)
+        cols = self.order[np.minimum(idx, n_ref - 1)]
+        d = _exact_distances(xb, self.ref, cols)
+        d[(idx >= hi[:, None]) | (cols == self_pos[:, None])] = np.inf
+        return d, cols
 
 
-def _exact_candidates(xb: np.ndarray, ref: np.ndarray, rn: np.ndarray, self_pos: np.ndarray, l_eff: int):
-    """(d, cols) for one row block of the exact-math path of
-    ``_topl_blocked``: ``d`` holds ``_distances_exact``'s bytes for the
+def _exact_candidates(xb: np.ndarray, ref: np.ndarray, rn_max: float, self_pos: np.ndarray, l_eff: int):
+    """(d, cols) for one row block whose windows would cover over half of
+    ref (e.g. at d=64): ``d`` holds ``_distances_exact``'s bytes for the
     ref positions ``cols`` (self excluded, inf), a superset of each row's
-    top L by (exact distance, id). ``cols`` is None when ``d`` is the
-    full-width brute-force matrix (values that are not finite).
+    top L by (exact distance, id). ``rn_max`` is max‖y‖² over ref, as
+    ``_distances`` computes it. Values that are not finite get the
+    full-width brute-force matrix.
 
     Filter with gemm, refine exactly. Let g be the gemm distance of a
     pair (``_distances``' form), e its exact-math distance (Σ(x−y)²), D
@@ -184,22 +198,17 @@ def _exact_candidates(xb: np.ndarray, ref: np.ndarray, rn: np.ndarray, self_pos:
     Let r be the row's L-th smallest g. Its L columns at or below r have
     e ≤ r + m, so the row's L-th smallest e is ≤ r + m, and so is the e
     of every column of its top L by (e, id), ties included: each has
-    g ≤ r + 2m and is kept. Recomputing the kept columns exactly and
-    ranking them by (e, id) gives the brute-force ranks and distances.
-
-    The recompute gathers a (rows, width, d) tensor and reduces it with
-    ``_distances_exact``'s own ``einsum("nkd,nkd->nk")``: a distance then
-    has the bytes of the same cell of the brute-force matrix (a reduction
-    of another shape may round differently), and neither depends on the
-    row block."""
+    g ≤ r + 2m and is kept. Recomputing the kept columns exactly
+    (:func:`_exact_distances`) and ranking them by (e, id) gives the
+    brute-force ranks and distances."""
     n_ref, dim = ref.shape
-    xn = (xb * xb).sum(axis=1)
-    bound = xn + rn.max()
+    bound = (xb * xb).sum(axis=1) + rn_max
     if not np.isfinite(2.0 * bound).all():
-        return _mask_self(_distances_exact(xb, ref), self_pos), None
-    g = _mask_self(_dist_from_product(xn, 2.0 * xb @ ref.T, rn), self_pos)
+        return _mask_self(_distances_exact(xb, ref), self_pos), np.broadcast_to(np.arange(n_ref), (len(xb), n_ref))
+    g = _mask_self(_distances(xb, ref), self_pos)
     r = np.partition(g, l_eff - 1, axis=1)[:, l_eff - 1]
-    kept = (g <= (r + 2.0 * _margin(bound, dim))[:, None]).sum(axis=1)
+    m = np.sqrt((64.0 + 4.0 * dim) * _EPS * bound + _TINY)
+    kept = (g <= (r + 2.0 * m)[:, None]).sum(axis=1)
     # at least L+1 columns, as _select_topl needs (x may be foreign to ref)
     width = min(max(int(kept.max()), l_eff + 1), n_ref)
     # the width smallest g of a row hold every kept column of it
@@ -207,61 +216,67 @@ def _exact_candidates(xb: np.ndarray, ref: np.ndarray, rn: np.ndarray, self_pos:
         cols = np.argpartition(g, width - 1, axis=1)[:, :width]
     else:
         cols = np.broadcast_to(np.arange(n_ref), g.shape)
-    d = np.empty(cols.shape)
-    step = max(1, _BLOCK_CELLS // max(1, width * dim))  # the tensor stays ≤ 2 MB
-    for s in range(0, len(xb), step):
-        diff = xb[s : s + step, None, :] - ref[cols[s : s + step]]
-        d[s : s + step] = np.sqrt(np.einsum("nkd,nkd->nk", diff, diff))
+    d = _exact_distances(xb, ref, cols)
     d[cols == self_pos[:, None]] = np.inf
     return d, cols
 
 
-def _topl_blocked(
-    x: np.ndarray,
-    ref: np.ndarray,
-    ref_ids: np.ndarray,
-    x_ids: np.ndarray,
-    l_nbrs: int,
-    *,
-    exact_math: bool = False,
-):
-    """Top-L neighbors of each row of x against ref (ids sorted), by
-    (dist, id), computed in row blocks so the (rows × |ref|) distance
-    matrix stays within ``_BLOCK_CELLS`` (2 MB). Rows whose id appears in
-    ref exclude themselves. Returns (nbr_pos, nbr_dist) of shape
-    (len(x), l_eff), l_eff = min(L, |ref| − 1).
+def _window_blocks(width: np.ndarray, dim: int):
+    """(start, stop) runs over rows sorted by window ``width``: each run's
+    (rows × widest × d) tensor stays within ``_BLOCK_CELLS`` (one row at
+    least)."""
+    s = 0
+    while s < len(width):
+        # a run's widest row is its last; the narrowest caps its length
+        w = width[s : s + max(1, _BLOCK_CELLS // max(1, int(width[s]) * dim))]
+        fits = np.arange(1, len(w) + 1) * w * dim <= _BLOCK_CELLS
+        stop = s + max(1, int(fits.sum()))
+        yield s, stop
+        s = stop
 
-    By default the distances are the BLAS gemm form, which the projection
-    windows of :class:`_ProjectionWindows` prune exactly: the result is
-    byte-identical to brute-force ``_distances`` over the same row blocks.
-    ``exact_math=True`` ranks by ``assign._distances_exact``'s Σ(x−y)²
-    (a SQL oracle's distances) at gemm cost, by the filter and refine of
-    :func:`_exact_candidates`: the result is byte-identical to brute-force
-    ``_distances_exact`` ranking, whatever the row blocks."""
-    n_ref = ref.shape[0]
+
+def _topl_blocked(x: np.ndarray, ref: np.ndarray, ref_ids: np.ndarray, x_ids: np.ndarray, l_nbrs: int):
+    """Top-L neighbors of each row of x against ref (ids sorted and
+    unique), ranked by (exact-math distance, id): ``assign._distances_exact``'s
+    Σ(x−y)², the distances a SQL oracle reproduces. Rows whose id appears
+    in ref exclude themselves. Returns (nbr_pos, nbr_dist) of shape
+    (len(x), l_eff), l_eff = min(L, |ref| − 1), byte-identical to
+    brute-force ``_distances_exact`` ranking whatever the row blocks.
+
+    Each row's candidates come from its :class:`_ProjectionWindows`
+    window when that covers at most half of ref; the other rows (and
+    values that are not finite) go through the gemm filter and exact
+    refine of :func:`_exact_candidates`. The data picks the path, row by
+    row; both are exact. Window rows are scored in blocks of similar
+    width, each block's tensor within ``_BLOCK_CELLS``."""
+    n_ref, dim = ref.shape
     l_eff = min(l_nbrs, n_ref - 1)
     out_pos = np.empty((len(x), l_eff), dtype=np.int64)
     out_d = np.empty((len(x), l_eff), dtype=np.float64)
-    if l_eff == 0:
+    if l_eff == 0 or not len(x):
         return out_pos, out_d
-    if exact_math:
-        rn = (ref * ref).sum(axis=1)
-    else:
-        windows = _ProjectionWindows(ref, l_eff)
-    block = max(1, _BLOCK_CELLS // max(1, n_ref))
-    for s in range(0, len(x), block):
-        e = min(s + block, len(x))
-        pos = np.clip(np.searchsorted(ref_ids, x_ids[s:e]), 0, n_ref - 1)
-        self_pos = np.where(ref_ids[pos] == x_ids[s:e], pos, -1)
-        if exact_math:
-            d, cols = _exact_candidates(x[s:e], ref, rn, self_pos, l_eff)
-        else:
-            d, cols = windows.distances(x[s:e], self_pos)
-        if cols is None:
-            out_pos[s:e], out_d[s:e] = _select_topl(d, np.broadcast_to(ref_ids, d.shape), l_eff)
-        else:
-            sel, out_d[s:e] = _select_topl(d, ref_ids[cols], l_eff)
-            out_pos[s:e] = np.take_along_axis(cols, sel, axis=1)
+    pos = np.clip(np.searchsorted(ref_ids, x_ids), 0, n_ref - 1)
+    self_pos = np.where(ref_ids[pos] == x_ids, pos, -1)
+    windows = _ProjectionWindows(ref, l_eff)
+    lo, hi = windows.bounds(x, self_pos)
+    width = np.maximum(hi - lo, l_eff + 1)
+    narrow = np.flatnonzero(2 * width <= n_ref)
+    narrow = narrow[np.argsort(width[narrow], kind="stable")]
+
+    def emit(rows, d, cols):
+        sel, out_d[rows] = _select_topl(d, ref_ids[cols], l_eff)
+        out_pos[rows] = np.take_along_axis(cols, sel, axis=1)
+
+    for s, e in _window_blocks(width[narrow], dim):
+        rows = narrow[s:e]
+        emit(rows, *windows.distances(x[rows], lo[rows], hi[rows], self_pos[rows]))
+    wide = np.flatnonzero(2 * width > n_ref)
+    if len(wide):
+        rn_max = (ref * ref).sum(axis=1).max()  # as _distances computes it
+        block = max(1, _BLOCK_CELLS // n_ref)
+        for s in range(0, len(wide), block):
+            rows = wide[s : s + block]
+            emit(rows, *_exact_candidates(x[rows], ref, rn_max, self_pos[rows], l_eff))
     return out_pos, out_d
 
 
@@ -309,10 +324,21 @@ PAIRS_SCHEMA = StructType(
 MAX_EXACT_KNN_ROWS = 200_000
 
 
+def _unique_ids(sorted_ids: np.ndarray) -> np.ndarray:
+    """``sorted_ids``, or a ValueError naming an id that occurs twice: a
+    kNN table finds a row's own column by its id, so a duplicated id
+    would keep the row as its own nearest neighbour."""
+    dup = np.flatnonzero(sorted_ids[1:] == sorted_ids[:-1])
+    if len(dup):
+        raise ValueError(f"duplicate id {sorted_ids[dup[0]]} in the kNN input: point ids must be unique")
+    return sorted_ids
+
+
 def _broadcast_ref(points: DataFrame, n_rows: int | None):
     """The broadcast id-sorted (ids, features) of an exact-scope kNN
     table: all rows collected once, refused above ``MAX_EXACT_KNN_ROWS``
-    (``n_rows``, or a count) before the collect."""
+    (``n_rows``, or a count) before the collect, and refused with a
+    duplicate id."""
     n = n_rows if n_rows is not None else points.count()
     if n > MAX_EXACT_KNN_ROWS:
         raise ValueError(
@@ -324,7 +350,7 @@ def _broadcast_ref(points: DataFrame, n_rows: int | None):
     ids = np.array([r["id"] for r in rows], dtype=np.int64)
     feats = np.array([r["features"] for r in rows], dtype=np.float64)
     order = np.argsort(ids)
-    return points.sparkSession.sparkContext.broadcast((ids[order], feats[order]))
+    return points.sparkSession.sparkContext.broadcast((_unique_ids(ids[order]), feats[order]))
 
 
 def _pair_rows(ids: np.ndarray, ref_ids: np.ndarray, nbr_pos: np.ndarray, nbr_d: np.ndarray) -> pd.DataFrame:
@@ -349,8 +375,10 @@ def _knn_map(
     n_rows: int | None = None,
     collect_from: DataFrame | None = None,
 ) -> DataFrame:
-    """The one kernel-built gemm kNN table: ONE map stage, no shuffle, each
-    scored block against an id-sorted reference set via ``_topl_blocked``.
+    """The fit's kNN table and the partition-local pair table: ONE map
+    stage, no shuffle, each scored block ranked against an id-sorted
+    reference set by ``_topl_blocked`` (exact-math distances, so the
+    neighbours follow no block or layout within the scope).
     ``scope='exact'`` collects + broadcasts all (id, features) once, from
     ``collect_from`` when given (the same rows as ``points`` in another
     layout: the fit collects its input, not the re-laid-out table, so the
@@ -361,7 +389,8 @@ def _knn_map(
     ``PAIRS_SCHEMA`` rows — both from the same neighbor positions, so the
     same neighbors at the same ranks. A row with no neighbor (1-row
     partition) packs as 1+L self-copies with ``nbr_n = 0`` and emits no
-    pair."""
+    pair. A duplicated id raises a ValueError naming it (at the collect
+    when exact, in the partition's task when partition-local)."""
     if scope == "exact":
         bc = _broadcast_ref(collect_from if collect_from is not None else points, n_rows)
 
@@ -378,7 +407,7 @@ def _knn_map(
             pdf = pd.concat(chunks, ignore_index=True)
             x = np.stack(pdf["features"].to_numpy()).astype(np.float64)
             order = np.argsort(pdf["id"].to_numpy())
-            yield pdf, x, x[order], pdf["id"].to_numpy()[order]
+            yield pdf, x, x[order], _unique_ids(pdf["id"].to_numpy()[order])
 
     def kernel(batches: Iterable[pd.DataFrame]):
         prepare()
@@ -419,25 +448,18 @@ def _release_knn(table: DataFrame) -> None:
         table._knn_broadcast = None
 
 
-def knn_pairs_exact(
-    points: DataFrame, l_nbrs: int, *, n_rows: int | None = None, exact_math: bool = False
-) -> DataFrame:
+def knn_pairs_exact(points: DataFrame, l_nbrs: int, *, n_rows: int | None = None) -> DataFrame:
     """Exact top-L neighbor pairs via broadcast block-distance.
 
     All (id, features) are collected once into a numpy block that ships to
     executors via Spark broadcast, and each row's L nearest others are
-    kept — O(N²/P) vectorized work, no shuffle. Ties break by (dist,
-    nbr_id) for determinism (the reference relied on sort stability,
-    Spark_MOPSO_Avg.scala:1050-1052).
-
-    By default the distances are the gemm form and the table is the
-    fit's: the same kernel as ``with_neighbors(mode='exact')``, over
-    ``points``' own Arrow batches (the gemm's rounding follows the row
-    blocks). ``exact_math=True`` ranks by ``assign._distances_exact``'s
-    Σ(x−y)² (a SQL oracle's bits) by filter and refine
-    (:func:`_exact_candidates`); those bytes follow no blocking, so the
-    table scores fixed row blocks of the id-sorted broadcast over
-    ``spark.range(n_blocks)``, as ``metrics.silhouette_exact`` does, and
+    kept — O(N²/P) vectorized work, no shuffle. Ranks are by
+    (``assign._distances_exact``'s Σ(x−y)², nbr_id), the kernel of
+    ``with_neighbors(mode='exact')``, so the pairs are the fit's
+    neighbours with the distances a SQL oracle reproduces (the reference
+    relied on sort stability at ties, Spark_MOPSO_Avg.scala:1050-1052).
+    The table scores fixed row blocks of the id-sorted broadcast over
+    ``spark.range(n_blocks)``, as ``metrics.silhouette_exact`` does, so
     the input is read only by the collect.
 
     Guarded by ``MAX_EXACT_KNN_ROWS``, before the collect: the
@@ -446,11 +468,9 @@ def knn_pairs_exact(
     'partition_local'. Pass ``n_rows`` when already known to skip the
     extra count job. Release the broadcast with :func:`_release_knn`.
     """
-    if not exact_math:
-        return _knn_map(points, l_nbrs, "exact", packed=False, n_rows=n_rows)
     bc = _broadcast_ref(points, n_rows)
     n = len(bc.value[0])
-    block = max(1, _BLOCK_CELLS // max(1, n))  # one _topl_blocked block per range row
+    block = max(1, _BLOCK_CELLS // max(1, n))  # query rows per range row
     n_blocks = -(-n // block)
 
     def kernel(batches: Iterable[pd.DataFrame]):
@@ -459,7 +479,7 @@ def knn_pairs_exact(
         for pdf in batches:
             for b in pdf["id"].to_numpy():
                 lo, hi = int(b) * block, min(n, (int(b) + 1) * block)
-                nbr_pos, nbr_d = _topl_blocked(ref[lo:hi], ref, ref_ids, ref_ids[lo:hi], l_nbrs, exact_math=True)
+                nbr_pos, nbr_d = _topl_blocked(ref[lo:hi], ref, ref_ids, ref_ids[lo:hi], l_nbrs)
                 yield _pair_rows(ref_ids[lo:hi], ref_ids, nbr_pos, nbr_d)
 
     spark = points.sparkSession
@@ -525,6 +545,8 @@ def with_neighbors(
     per-neighbor lists, and the fitness kernel gets the whole batch with
     a single reshape.
 
+    The neighbours are ranked by (exact-math distance, id), as
+    :func:`knn_pairs_exact` and :func:`knn_pairs_crossjoin` rank them.
     Modes (the fit passes ``MopsoConfig.fitness_mode``), the two scopes
     of :func:`_knn_map`, each ONE map stage with zero shuffles:
     * 'exact' — global kNN via a broadcast of all features (to

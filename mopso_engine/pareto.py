@@ -165,22 +165,6 @@ class Archive:
         pool = [i for i in order if crowd[i] == max_c]
         return self.entries[pool[int(rng.integers(0, len(pool)))]]
 
-    def global_best_new(self, rng: np.random.Generator) -> ArchiveEntry:
-        """getGlobalBestNew — the reference's UNUSED alternative (kept for
-        surface parity, flagged as dead code there): sort by crowding asc
-        and pick uniformly among the first ~10%+1 (least-crowded) rows
-        (Spark_MOPSO_Avg.scala:943-962)."""
-        if not self.entries:
-            raise ValueError("empty archive")
-        fits = self.fitness_matrix()
-        prev = np.array([e.crowding for e in self.entries])
-        _, crowd = crowding_distance(
-            fits, prev, formula=self.crowding_formula, endpoint_bug=self.endpoint_bug
-        )
-        order = np.argsort(crowd, kind="stable")
-        top = int(len(order) * 0.1) + 1
-        return self.entries[order[int(rng.integers(0, top))]]
-
 
 def pbest_update(
     new_position: np.ndarray,
@@ -223,76 +207,3 @@ def normalize_fitness(fitnesses: np.ndarray) -> np.ndarray:
     lo, hi = f.min(axis=0), f.max(axis=0)
     span = np.where(hi > lo, hi - lo, 1.0)
     return (f - lo) / span
-
-
-def partition_crowding_distance(
-    fitnesses: np.ndarray, *, faithful: bool = True
-) -> tuple[np.ndarray, np.ndarray]:
-    """calculatePartitionCrowdingDistance — the reference's UNUSED
-    partition-fitness crowding variant, identical in both engines
-    (Spark_MOPSO_Avg.scala:811-840, MOPSO_Single.scala:842-871); ported
-    for literal surface parity (SURVEY §2.6 O6 note).
-
-    Sort by f2 asc (stable, f2 ONLY — ties keep input order, matching
-    Scala's sortBy), endpoints get +inf, interior rows get the PRODUCT
-    of neighbor spans ``|f1(prev)-f1(next)| · |f2(prev)-f2(next)|``.
-    ``faithful=True`` keeps the reference's literal bugs:
-
-    * n==2 assigns index 0 twice — index 1 keeps 0.0
-      (MOPSO_Single.scala:854-856);
-    * n>2 COMPARES (``==``) the first endpoint against +inf instead of
-      assigning (``=``) — it keeps 0.0; only the LAST endpoint becomes
-      +inf (MOPSO_Single.scala:860-861).
-
-    Returns ``(sorted_fitness (n,2), distances (n,))`` aligned to the
-    sorted order — the pairing the reference's consumer indexes into.
-    """
-    f = np.asarray(fitnesses, dtype=np.float64)
-    n = len(f)
-    if n == 0:
-        return f.reshape(0, 2), np.zeros(0)
-    order = np.argsort(f[:, 1], kind="stable")
-    fs = f[order]
-    dist = np.zeros(n)
-    if n == 1:
-        dist[0] = np.inf
-        return fs, dist
-    if n == 2:
-        dist[0] = np.inf
-        if not faithful:
-            dist[1] = np.inf
-        return fs, dist
-    if not faithful:
-        dist[0] = np.inf
-    dist[-1] = np.inf
-    dist[1:-1] = np.abs(fs[:-2, 0] - fs[2:, 0]) * np.abs(fs[:-2, 1] - fs[2:, 1])
-    return fs, dist
-
-
-def select_partition_best_fitness(
-    fitnesses: np.ndarray, rng: np.random.Generator, *, faithful: bool = True
-) -> np.ndarray:
-    """selectPartitionBestFitness — the reference's UNUSED partition-best
-    selector (MOPSO_Single.scala:807-839, Spark_MOPSO_Avg.scala by the
-    same shape); ported for literal surface parity.
-
-    Pick one fitness row among per-partition fitnesses by partition
-    crowding: n==1 → the row; n==2 → uniformly random of the two; else
-    the max distance over the INTERIOR of the sorted list, then a
-    uniformly random row among ALL sorted rows attaining it — the +inf
-    last endpoint can never match, but under the faithful endpoint bug
-    the stale-0.0 FIRST endpoint joins the pool whenever every interior
-    distance is 0 (the reference's literal full-array scan,
-    MOPSO_Single.scala:826-833).
-    """
-    fs, dist = partition_crowding_distance(fitnesses, faithful=faithful)
-    n = len(fs)
-    if n == 0:
-        raise ValueError("select_partition_best_fitness: empty fitness set")
-    if n == 1:
-        return fs[0].copy()
-    if n == 2:
-        return fs[int(rng.integers(0, 2))].copy()
-    max_c = dist[1:-1].max()
-    pool = [i for i in range(n) if dist[i] == max_c]
-    return fs[pool[int(rng.integers(0, len(pool)))]].copy()

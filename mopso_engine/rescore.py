@@ -42,16 +42,18 @@ def rescore_archive(
     top-``knn_l`` neighbors. ``knn_mode`` must be the fit's scope
     (``MopsoResult.knn_mode_used``, which is its ``fitness_mode``):
 
-    * ``'exact'`` — global neighbors from :func:`knn_pairs_exact`'s
-      exact-math pair table (valid to ``MAX_EXACT_KNN_ROWS``, the same
+    * ``'exact'`` — global neighbors from :func:`knn_pairs_exact`'s pair
+      table, the fit's neighbours (valid to ``MAX_EXACT_KNN_ROWS``, the same
       cap an exact fit is held to, checked before its collect);
     * ``'partition_local'`` — neighbors from
       :func:`knn_pairs_partition_local` over the layout
       ``repartition(layout_partitions, "id").sortWithinPartitions("id")``,
-      rebuilt here: no collect, no broadcast. It is the relational oracle
-      of the partition-local neighbor sets on that layout (an exact
-      global rescore of a partition-local fit would disagree by
-      construction).
+      rebuilt here, or over ``pts``' own layout when ``layout_partitions``
+      is None (the fit's, ``MopsoResult.layout_partitions``, when it
+      scored the caller's layout): no collect, no broadcast. It is the
+      relational oracle of the partition-local neighbor sets on that
+      layout (an exact global rescore of a partition-local fit would
+      disagree by construction).
 
     Plan: the exact-math multi-solution assignment is joined to both
     ends of each neighbor pair; its Dev rows and the pairs' Conn terms
@@ -64,19 +66,14 @@ def rescore_archive(
     """
     stack = np.stack(positions)
     if knn_mode == "partition_local":
-        if layout_partitions is None:
-            raise ValueError(
-                "partition_local rescore needs the fit's layout_partitions "
-                "(MopsoResult.layout_partitions) — neighbor sets are a "
-                "function of the layout"
-            )
-        # rebuild the fit's layout bit-for-bit: hash-partition on id +
-        # in-partition sort is a pure function of (data, partition count)
-        pts = pts.repartition(layout_partitions, "id").sortWithinPartitions("id")
+        if layout_partitions is not None:
+            # rebuild the fit's layout bit-for-bit: hash-partition on id +
+            # in-partition sort is a pure function of (data, partition count)
+            pts = pts.repartition(layout_partitions, "id").sortWithinPartitions("id")
         pairs = knn_pairs_partition_local(pts, knn_l)
         asg = assign_all_solutions(pts, stack, exact_math=True)
     elif knn_mode == "exact":
-        pairs = knn_pairs_exact(pts, knn_l, n_rows=n_rows, exact_math=True)
+        pairs = knn_pairs_exact(pts, knn_l, n_rows=n_rows)
         # S·N rows of (id, solution, cluster, dist): small enough to ship
         # to every task, so neither join shuffles the pair table
         asg = F.broadcast(assign_all_solutions(pts, stack, exact_math=True))

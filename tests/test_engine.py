@@ -158,7 +158,9 @@ def test_avg_label_engine_affordance_replays_identically(blobs_df):
 def test_rescore_partition_local_agrees_with_kernel(blobs_df, blobs):
     """The partition_local rescore is the relational oracle of the
     partition-local neighbor sets: on the hash layout it rebuilds from
-    ``layout_partitions``, its Dev/Conn agree with the fitness kernel's
+    ``layout_partitions``, and on a layout it is given with
+    ``layout_partitions=None`` (how a fit that scored the caller's layout
+    reports it), its Dev/Conn agree with the fitness kernel's
     (unweighted) over the same layout."""
     import math
 
@@ -171,11 +173,26 @@ def test_rescore_partition_local_agrees_with_kernel(blobs_df, blobs):
     m = 3
     layout = blobs_df.repartition(m, "id").sortWithinPartitions("id")
     kernel = evaluate_solutions(with_neighbors(layout, 5, mode="partition_local"), stack)
-    rows = rescore_archive(blobs_df, list(stack), knn_l=5, knn_mode="partition_local", layout_partitions=m)
-    assert [s for s, _, _ in rows] == [0, 1, 2]
-    for s, dev, conn in rows:
-        assert math.isclose(kernel[s, 0], dev, rel_tol=1e-6)
-        assert math.isclose(kernel[s, 1], conn, rel_tol=1e-6)
+    rebuilt = rescore_archive(blobs_df, list(stack), knn_l=5, knn_mode="partition_local", layout_partitions=m)
+    given = rescore_archive(layout, list(stack), knn_l=5, knn_mode="partition_local", layout_partitions=None)
+    for rows in (rebuilt, given):
+        assert [s for s, _, _ in rows] == [0, 1, 2]
+        for s, dev, conn in rows:
+            assert math.isclose(kernel[s, 0], dev, rel_tol=1e-6)
+            assert math.isclose(kernel[s, 1], conn, rel_tol=1e-6)
+
+
+@pytest.mark.parametrize("knn_mode", ["exact", "partition_local"])
+def test_rescore_rejects_duplicate_ids(spark, knn_mode):
+    """A duplicated id fails the rescore with an error naming it, rather
+    than counting the row as its own nearest neighbour."""
+    from mopso_engine.rescore import rescore_archive
+
+    pts = spark.createDataFrame(
+        [(1, [0.0], 0), (2, [5.0], 0), (2, [1.0], 0), (3, [9.0], 0)], "id long, features array<double>, label int"
+    ).coalesce(1)
+    with pytest.raises(Exception, match="duplicate id 2"):
+        rescore_archive(pts, [np.array([[0.0], [9.0]])], knn_l=2, knn_mode=knn_mode)
 
 
 def test_rescore_exact_runs_five_jobs_and_persists_nothing(spark, blobs_df, blobs):

@@ -1,16 +1,16 @@
 """The exact kNN kernel (``objectives._topl_blocked``) against a brute-force
 oracle, byte for byte — no Spark needed, so this is the quick kernel check.
 
-The oracle is the full distance matrix plus a full (dist, id) sort. For
-the gemm path it is ``_distances`` over the kernel's own row blocks: the
-block rule must be the same on both sides because it is part of the
-bytes (see ``objectives._BLOCK_CELLS``). For the exact-math path it is
-``_distances_exact`` over all rows at once, since those bytes follow no
-block. The generated tables hold what breaks a pruned build: duplicates
-and exact distance ties, constant columns (a constant projection column
-among them), values near 1e5 where ‖x‖² − 2x·y + ‖y‖² cancels, tables of
-at most L+1 rows, query rows foreign to the reference set, and 1-row
-trailing blocks (numpy routes those through gemv).
+The oracle is the full ``_distances_exact`` matrix over all rows at once
+plus a full (dist, id) sort: the kernel's exact-math ranks follow no row
+block, so any block rule must give the oracle's bytes. The kernel takes
+each row's projection window or, where that window would cover over half
+of ref, the gemm filter and exact refine; the cases below reach both.
+The generated tables hold what breaks a pruned build: duplicates and
+exact distance ties, constant columns (a constant projection column
+among them), values near 1e5 where ‖x‖² − 2x·y + ‖y‖² cancels, values
+of very different magnitudes whose differences round, differences whose
+squares are subnormal, tables of at most L+1 rows, query rows foreign to the reference set, and 1-row blocks.
 """
 
 import os
@@ -22,20 +22,17 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from mopso_engine import objectives
-from mopso_engine.assign import _distances, _distances_exact
+from mopso_engine.assign import _distances_exact
 
 
-def brute_topl(x, ref, ref_ids, x_ids, l_nbrs, exact_math):
-    n_ref = ref.shape[0]
-    l_eff = min(l_nbrs, n_ref - 1)
-    if exact_math:
-        dist_fn, block = _distances_exact, max(1, len(x))
-    else:
-        dist_fn, block = _distances, max(1, objectives._BLOCK_CELLS // n_ref)
+def brute_topl(x, ref, ref_ids, x_ids, l_nbrs):
+    """Every row's full ``_distances_exact`` row, self excluded, sorted by
+    (dist, id); 256 rows at a time, to bound the (rows, |ref|, d) tensor."""
+    l_eff = min(l_nbrs, ref.shape[0] - 1)
     pos, dist = [], []
-    for s in range(0, len(x), block):
-        d = dist_fn(x[s : s + block], ref)
-        d[ref_ids[None, :] == x_ids[s : s + block, None]] = np.inf
+    for s in range(0, max(1, len(x)), 256):
+        d = _distances_exact(x[s : s + 256], ref)
+        d[ref_ids[None, :] == x_ids[s : s + 256, None]] = np.inf
         order = np.lexsort((np.broadcast_to(ref_ids, d.shape), d), axis=1)[:, :l_eff]
         pos.append(order)
         dist.append(np.take_along_axis(d, order, axis=1))
@@ -48,14 +45,18 @@ def knn_inputs(draw):
     dim = draw(st.sampled_from([1, 2, 4, 8, 64]))
     l_nbrs = draw(st.integers(1, 8))
     n_ref = draw(st.one_of(st.integers(1, l_nbrs + 1), st.integers(1, 300)))
-    kind = draw(st.sampled_from(["grid", "normal", "near_1e5"]))
+    kind = draw(st.sampled_from(["grid", "normal", "near_1e5", "magnitudes_apart", "subnormal_squares"]))
     if kind == "grid":  # duplicate points and exact distance ties
         ref = rng.integers(0, draw(st.integers(2, 12)), size=(n_ref, dim)).astype(np.float64)
     elif kind == "normal":  # anisotropic, as real tables often are, so windows prune
         scale = 10.0 ** (draw(st.integers(-3, 3)) - 2.0 * rng.random(dim))
         ref = rng.normal(size=(n_ref, dim)) * scale
-    else:  # ‖x‖² ~ 1e10 against squared gaps of 1e-4..1
+    elif kind == "near_1e5":  # ‖x‖² ~ 1e10 against squared gaps of 1e-4..1
         ref = 1e5 + rng.integers(0, 5, size=(n_ref, dim)) * draw(st.sampled_from([1e-2, 0.5]))
+    elif kind == "magnitudes_apart":  # rows near 0 and near ±1e5: their differences round
+        ref = _magnitudes_apart(rng, n_ref, dim)
+    else:  # squared differences below the normal range lose their precision
+        ref = rng.integers(0, 50, size=(n_ref, dim)) * 1e-160
     ref[:, 0] *= draw(st.sampled_from([1.0, 100.0, 1e4]))  # a dominant column prunes best
     const = draw(st.sampled_from(["none", "none", "some", "all"]))
     if const == "all":  # the projection column is constant too
@@ -72,16 +73,30 @@ def knn_inputs(draw):
     foreign = rng.random(n_x) < draw(st.sampled_from([0.0, 0.3]))
     x_ids[foreign] = -1 - np.arange(foreign.sum())  # not in ref; same point or a jittered one
     x[foreign] += rng.integers(0, 2, size=(foreign.sum(), dim))
-    return x, ref, ref_ids, x_ids, l_nbrs, block_rows, draw(st.booleans())
+    cells = draw(st.sampled_from([1, block_rows * n_ref]))  # 1: one row per block on every path
+    return x, ref, ref_ids, x_ids, l_nbrs, cells
+
+
+def _magnitudes_apart(rng, n, dim):
+    """Rows far apart on column 0: three at −1e5, two at +1e5, ~10% within
+    3e-12 of 0 and the rest at 1..999; the other columns are within
+    3e-12 of 0. From −1e5 the near-0 rows are at distances that round to
+    1e5 (its ulp is ~1.5e-11) and tie, so a window must reach past the
+    rounding of those differences to hold the tied rows of lower id."""
+    ref = rng.integers(0, 4, size=(n, dim)) * 1e-12
+    ref[:, 0] += rng.integers(1, 1000, n) * (rng.random(n) < 0.9)
+    ref[:3, 0] = -1e5
+    ref[3:5, 0] = 1e5
+    return ref
 
 
 @given(knn_inputs())
 @settings(max_examples=400, deadline=None)
 def test_topl_blocked_equals_brute_force_bytes(case):
-    x, ref, ref_ids, x_ids, l_nbrs, block_rows, exact_math = case
-    with mock.patch.object(objectives, "_BLOCK_CELLS", block_rows * ref.shape[0]):
-        got_pos, got_d = objectives._topl_blocked(x, ref, ref_ids, x_ids, l_nbrs, exact_math=exact_math)
-        want_pos, want_d = brute_topl(x, ref, ref_ids, x_ids, l_nbrs, exact_math)
+    x, ref, ref_ids, x_ids, l_nbrs, cells = case
+    with mock.patch.object(objectives, "_BLOCK_CELLS", cells):
+        got_pos, got_d = objectives._topl_blocked(x, ref, ref_ids, x_ids, l_nbrs)
+    want_pos, want_d = brute_topl(x, ref, ref_ids, x_ids, l_nbrs)
     assert np.array_equal(got_pos, want_pos)
     assert got_d.tobytes() == want_d.tobytes()
 
@@ -102,6 +117,10 @@ def _exact_case(kind: str, dim: int):
         ref[:, 0] = 7.0
     elif kind == "near_1e5":  # gemm error ~1e-3 against gaps of 1e-2: the filter's margin decides
         ref = 1e5 + rng.integers(0, 5, size=(150, dim)) * 1e-2
+    elif kind == "magnitudes_apart":
+        ref = _magnitudes_apart(rng, 150, dim)
+    elif kind == "subnormal_squares":  # (1e-160)² is subnormal: ~4 significant digits
+        ref = rng.integers(0, 50, size=(150, dim)) * 1e-160
     elif kind == "l_at_least_n_minus_1":
         ref, l_nbrs = rng.integers(0, 3, size=(6, dim)).astype(np.float64), 9
     else:
@@ -115,16 +134,20 @@ def _exact_case(kind: str, dim: int):
 
 @pytest.mark.parametrize("block_rows", [1, 37, None])
 @pytest.mark.parametrize("dim", [1, 4, 64])
-@pytest.mark.parametrize("kind", ["grid_ties", "duplicates", "constant_columns", "near_1e5", "l_at_least_n_minus_1"])
+@pytest.mark.parametrize(
+    "kind",
+    ["grid_ties", "duplicates", "constant_columns", "near_1e5", "magnitudes_apart", "subnormal_squares", "l_at_least_n_minus_1"],
+)
 def test_exact_math_ranks_equal_brute_force(kind, dim, block_rows):
-    """The exact-math path (gemm filter, exact refine) returns the
-    brute-force ``_distances_exact`` ranks and distances byte for byte,
-    at any row block (None: the default ``_BLOCK_CELLS``)."""
+    """The kernel returns the brute-force ``_distances_exact`` ranks and
+    distances byte for byte at any row block: 1 (one row per block on
+    every path), 37 (37-row gemm filter blocks) or None (the default
+    ``_BLOCK_CELLS``)."""
     x, ref, ref_ids, x_ids, l_nbrs = _exact_case(kind, dim)
-    cells = objectives._BLOCK_CELLS if block_rows is None else block_rows * len(ref)
+    cells = {1: 1, 37: 37 * len(ref), None: objectives._BLOCK_CELLS}[block_rows]
     with mock.patch.object(objectives, "_BLOCK_CELLS", cells):
-        got_pos, got_d = objectives._topl_blocked(x, ref, ref_ids, x_ids, l_nbrs, exact_math=True)
-    want_pos, want_d = brute_topl(x, ref, ref_ids, x_ids, l_nbrs, exact_math=True)
+        got_pos, got_d = objectives._topl_blocked(x, ref, ref_ids, x_ids, l_nbrs)
+    want_pos, want_d = brute_topl(x, ref, ref_ids, x_ids, l_nbrs)
     assert got_pos.shape == (len(x), min(l_nbrs, len(ref) - 1))
     assert np.array_equal(got_pos, want_pos)
     assert got_d.tobytes() == want_d.tobytes()
@@ -133,47 +156,78 @@ def test_exact_math_ranks_equal_brute_force(kind, dim, block_rows):
 LINEITEM = os.path.join(os.path.dirname(__file__), "..", "perfbench", "data", "sf0.1", "lineitem_slice.parquet")
 
 
+def _slice(path, cols, n):
+    """The first n rows of ``cols`` of a parquet file as an (n, d) float64
+    array (a list column is one column of d values)."""
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(path, columns=cols).slice(0, n)
+    if len(cols) == 1:
+        return np.stack(t.column(0).to_numpy(zero_copy_only=False)).astype(np.float64)
+    return np.stack([t.column(c).to_numpy() for c in cols], axis=1).astype(np.float64)
+
+
 @pytest.mark.parametrize("block_rows", [37, None])
 def test_exact_math_ranks_on_the_lineitem_slice(block_rows):
     """The first 3000 rows of the lineitem slice (quantity, extended
     price, discount, tax; d=4, columns 5 orders of magnitude apart):
-    byte-identical to brute force. The refine must reduce the same
-    (rows, width, d) shape as ``_distances_exact``; a reduction of
-    another shape (e.g. ``(diff * diff).sum(-1)``) moves the last ulp of
-    thousands of these distances."""
-    import pyarrow.parquet as pq
-
-    cols = ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
-    t = pq.read_table(LINEITEM, columns=cols).slice(0, 3000)
-    ref = np.stack([t.column(c).to_numpy() for c in cols], axis=1).astype(np.float64)
+    byte-identical to brute force, and every row takes its projection
+    window, not the gemm filter (a fall to the slow path fails here). The
+    refine must reduce the same (rows, width, d) shape as
+    ``_distances_exact``; a reduction of another shape (e.g.
+    ``(diff * diff).sum(-1)``) moves the last ulp of thousands of these
+    distances."""
+    ref = _slice(LINEITEM, ["l_quantity", "l_extendedprice", "l_discount", "l_tax"], 3000)
     ids = np.arange(len(ref), dtype=np.int64)
     cells = objectives._BLOCK_CELLS if block_rows is None else block_rows * len(ref)
-    with mock.patch.object(objectives, "_BLOCK_CELLS", cells):
-        got_pos, got_d = objectives._topl_blocked(ref, ref, ids, ids, 10, exact_math=True)
-    want_pos, want_d = brute_topl(ref, ref, ids, ids, 10, exact_math=True)
+    with (
+        mock.patch.object(objectives, "_BLOCK_CELLS", cells),
+        mock.patch.object(objectives, "_exact_candidates", wraps=objectives._exact_candidates) as filt,
+    ):
+        got_pos, got_d = objectives._topl_blocked(ref, ref, ids, ids, 10)
+    assert filt.call_count == 0
+    want_pos, want_d = brute_topl(ref, ref, ids, ids, 10)
+    assert np.array_equal(got_pos, want_pos)
+    assert got_d.tobytes() == want_d.tobytes()
+
+
+EMBEDDINGS = os.path.join(os.path.dirname(__file__), "..", "perfbench", "data", "sf0.1", "embeddings.parquet")
+
+
+def test_exact_math_ranks_on_the_report_embeddings():
+    """The first 600 report embeddings (d=64, L=10): no projection
+    separates them, so every row goes through the gemm filter and exact
+    refine, byte-identical to brute force."""
+    ref = _slice(EMBEDDINGS, ["embedding"], 600)
+    ids = np.arange(len(ref), dtype=np.int64)
+    with mock.patch.object(objectives, "_exact_candidates", wraps=objectives._exact_candidates) as filt:
+        got_pos, got_d = objectives._topl_blocked(ref, ref, ids, ids, 10)
+    assert sum(len(c.args[0]) for c in filt.call_args_list) == len(ref)
+    want_pos, want_d = brute_topl(ref, ref, ids, ids, 10)
     assert np.array_equal(got_pos, want_pos)
     assert got_d.tobytes() == want_d.tobytes()
 
 
 def test_projection_windows_gather_the_full_width_distances():
-    """Where the projection separates points the pruned path is taken, and
-    its window distances are the very bytes of the full-width
-    ``_distances`` matrix (a product over the window's columns alone would
-    round differently). A block whose windows cover most of ref falls
-    back to the full-width matrix."""
+    """Where the projection separates points every row's window covers at
+    most half of ref, and its window distances are the very bytes of the
+    same cells of the full-width ``_distances_exact`` matrix, whatever
+    the window's width. Where it does not (d=64, no dominant column) the
+    windows cover over half of ref, so those rows go to the gemm filter."""
     rng = np.random.default_rng(0)
     for dim, spread in ((2, 100.0), (4, 100.0), (8, 100.0), (64, 1.0)):
         ref = rng.normal(size=(2000, dim))
         ref[:, 0] *= spread
-        pruned = spread > 1.0
-        xb = ref[:100]
-        d, cols = objectives._ProjectionWindows(ref, 5).distances(xb, np.arange(100))
-        full = _distances(xb, ref)
+        xb, self_pos = ref[:100], np.arange(100)
+        windows = objectives._ProjectionWindows(ref, 5)
+        lo, hi = windows.bounds(xb, self_pos)
+        if spread == 1.0:
+            assert (2 * (hi - lo) > len(ref)).all()
+            continue
+        assert (2 * (hi - lo) <= len(ref)).all()
+        d, cols = windows.distances(xb, lo, hi, self_pos)
+        assert d.shape[1] < 100
+        full = _distances_exact(xb, ref)
         full[np.arange(100), np.arange(100)] = np.inf
-        assert (cols is not None) == pruned
-        if pruned:
-            assert d.shape[1] < 100
-            live = np.isfinite(d)
-            assert d[live].tobytes() == np.take_along_axis(full, cols, axis=1)[live].tobytes()
-        else:
-            assert d.tobytes() == full.tobytes()
+        live = np.isfinite(d)
+        assert d[live].tobytes() == np.take_along_axis(full, cols, axis=1)[live].tobytes()

@@ -28,7 +28,7 @@ def test_knn_exact_matches_crossjoin_on_boundary_ties(spark):
     (L+1)-th distances tie; the kernel must pick the neighbor SET the
     crossjoin's row_number over (dist, nbr_id) picks, not whichever tied
     point argpartition happens to leave in front. Integer coordinates
-    make the gemm distances exact, so the doubles must match too."""
+    make the distances exact, so the doubles must match too."""
     rng = np.random.default_rng(3)
     grid = rng.integers(0, 6, size=(200, 2)).astype(np.float64)
     ids = rng.choice(10_000, size=200, replace=False)
@@ -194,14 +194,14 @@ def test_knn_pairs_exact_refuses_oversized_collect(blobs_df):
 
 
 def test_knn_pairs_exact_math_refuses_before_the_collect(spark, blobs_df):
-    """The exact-math pair table checks MAX_EXACT_KNN_ROWS before its
-    collect: no Spark job runs."""
+    """The pair table checks MAX_EXACT_KNN_ROWS before its collect: no
+    Spark job runs."""
     sc = spark.sparkContext
     group = "exact-math-above-cap"
     sc.setJobGroup(group, "oversized exact-math pair table")
     try:
         with pytest.raises(ValueError, match="partition_local"):
-            knn_pairs_exact(blobs_df, 5, n_rows=10**9, exact_math=True)
+            knn_pairs_exact(blobs_df, 5, n_rows=10**9)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
@@ -209,10 +209,12 @@ def test_knn_pairs_exact_math_refuses_before_the_collect(spark, blobs_df):
 
 @pytest.mark.parametrize("partitions", [1, 7])
 def test_exact_math_pairs_equal_brute_force(spark, partitions):
-    """The exact-math pair table is brute-force ``_distances_exact``
-    ranking by (dist, id), distances byte for byte, on an integer grid
-    with duplicates and ties, whatever the input's layout; its neighbour
-    sets and ranks are the crossjoin oracle's."""
+    """The pair table is brute-force ``_distances_exact`` ranking by
+    (dist, id), distances byte for byte, on an integer grid with
+    duplicates and ties, whatever the input's layout; its neighbour sets
+    and ranks are the crossjoin oracle's. So are the fit's: the packed
+    neighbour vectors of ``with_neighbors(mode='exact')`` are, rank by
+    rank, the vectors of the crossjoin's neighbour ids."""
     from mopso_engine.assign import _distances_exact
     from mopso_engine.objectives import _release_knn
 
@@ -231,12 +233,34 @@ def test_exact_math_pairs_equal_brute_force(spark, partitions):
         for i in range(len(ids))
         for rank, j in enumerate(order[i])
     }
-    pairs = knn_pairs_exact(df, 5, n_rows=120, exact_math=True)
+    pairs = knn_pairs_exact(df, 5, n_rows=120)
     got = {(r["id"], r["rank"]): (r["nbr_id"], np.float64(r["nbr_dist"]).tobytes()) for r in pairs.collect()}
     _release_knn(pairs)
     assert got == want
     cross = {(r["id"], r["rank"]): r["nbr_id"] for r in knn_pairs_crossjoin(df, 5).collect()}
     assert {k: v[0] for k, v in got.items()} == cross
+    vec = dict(zip(ids.tolist(), grid))
+    nbr = with_neighbors(df, 5, mode="exact", n_rows=120)
+    packed = {}
+    for r in nbr.collect():
+        assert r["nbr_n"] == 5
+        v = np.frombuffer(r["self_nbr_flat"], dtype=np.float64).reshape(6, 3)
+        assert v[0].tobytes() == vec[r["id"]].tobytes()
+        packed.update({(r["id"], rank): v[rank].tobytes() for rank in range(1, 6)})
+    _release_knn(nbr)
+    assert packed == {k: vec[i].tobytes() for k, i in cross.items()}
+
+
+@pytest.mark.parametrize("scope", ["exact", "partition_local"])
+def test_duplicate_ids_fail_with_a_clear_error(spark, scope):
+    """A kNN table finds a row's own column by id: a duplicated id would
+    keep a row as its own nearest neighbour at distance 0 and Conn would
+    count a self-pair. Both scopes refuse it, naming the id."""
+    df = spark.createDataFrame(
+        [(1, [0.0], 0), (2, [5.0], 0), (2, [1.0], 0), (3, [9.0], 0)], "id long, features array<double>, label int"
+    ).coalesce(1)
+    with pytest.raises(Exception, match="duplicate id 2"):
+        with_neighbors(df, 2, mode=scope).collect()
 
 
 def test_exact_knn_collected_from_the_input_keeps_the_bytes(blobs_df):

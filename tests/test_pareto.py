@@ -151,78 +151,3 @@ def test_normalize_constant_column_is_zero():
     f = np.array([[1.0, 5.0], [2.0, 5.0]])
     n = normalize_fitness(f)
     assert n[:, 1].tolist() == [0.0, 0.0]
-
-
-class TestPartitionVariants:
-    """Literal-transcription oracles for the reference's two DEAD-CODE
-    partition-fitness helpers (VERDICT r5 #6): values hand-walked from
-    MOPSO_Single.scala:807-871."""
-
-    def test_partition_crowding_interior_product_and_endpoint_bug(self):
-        from mopso_engine.pareto import partition_crowding_distance
-
-        f = np.array([[5.0, 1.0], [3.0, 2.0], [1.0, 4.0], [0.5, 8.0]])
-        fs, dist = partition_crowding_distance(f, faithful=True)
-        # sorted by f2 asc (already sorted)
-        assert (fs == f).all()
-        # interior i=1: |f1(0)-f1(2)|*|f2(0)-f2(2)| = 4*3 = 12
-        # interior i=2: |f1(1)-f1(3)|*|f2(1)-f2(3)| = 2.5*6 = 15
-        assert dist[1] == 12.0 and dist[2] == 15.0
-        # faithful endpoint bug: first stays 0.0 (== not =), last is inf
-        assert dist[0] == 0.0 and dist[3] == np.inf
-        _, fixed = partition_crowding_distance(f, faithful=False)
-        assert fixed[0] == np.inf and fixed[3] == np.inf
-
-    def test_partition_crowding_small_sizes(self):
-        from mopso_engine.pareto import partition_crowding_distance
-
-        _, d1 = partition_crowding_distance(np.array([[1.0, 2.0]]))
-        assert d1.tolist() == [np.inf]
-        # n==2 faithful: the reference assigns index 0 TWICE — index 1
-        # keeps its 0.0 (MOPSO_Single.scala:854-856)
-        _, d2 = partition_crowding_distance(np.array([[1.0, 2.0], [0.5, 3.0]]), faithful=True)
-        assert d2[0] == np.inf and d2[1] == 0.0
-        _, d2f = partition_crowding_distance(np.array([[1.0, 2.0], [0.5, 3.0]]), faithful=False)
-        assert d2f[0] == np.inf and d2f[1] == np.inf
-
-    def test_partition_crowding_sorts_by_f2_stable(self):
-        from mopso_engine.pareto import partition_crowding_distance
-
-        # Scala sortBy(_(1)) is stable and keys on f2 ONLY: the two rows
-        # tied on f2 keep their input order (f1 must NOT tiebreak)
-        f = np.array([[9.0, 2.0], [1.0, 2.0], [5.0, 1.0]])
-        fs, _ = partition_crowding_distance(f)
-        assert fs.tolist() == [[5.0, 1.0], [9.0, 2.0], [1.0, 2.0]]
-
-    def test_select_partition_best_max_interior(self):
-        from mopso_engine.pareto import select_partition_best_fitness
-
-        rng = np.random.default_rng(0)
-        f = np.array([[5.0, 1.0], [3.0, 2.0], [1.0, 4.0], [0.5, 8.0]])
-        # interior max is dist=15 at sorted index 2 = [1,4]; unique -> no
-        # randomness in WHICH row, any rng works
-        got = select_partition_best_fitness(f, rng)
-        assert got.tolist() == [1.0, 4.0]
-
-    def test_select_partition_best_stale_endpoint_joins_pool(self):
-        from mopso_engine.pareto import select_partition_best_fitness
-
-        # all interior distances 0 (identical f1 spans of 0): pool =
-        # {first endpoint (stale 0.0), interiors}; faithful bug makes the
-        # first row eligible — assert the pick is from that pool and the
-        # +inf last endpoint is NEVER returned
-        f = np.array([[2.0, 1.0], [2.0, 2.0], [2.0, 3.0], [2.0, 4.0]])
-        rng = np.random.default_rng(1)
-        for _ in range(20):
-            got = select_partition_best_fitness(f, rng)
-            assert got[1] != 4.0  # last endpoint excluded (inf != 0)
-
-    def test_select_partition_best_small_sizes(self):
-        from mopso_engine.pareto import select_partition_best_fitness
-
-        rng = np.random.default_rng(2)
-        one = select_partition_best_fitness(np.array([[3.0, 7.0]]), rng)
-        assert one.tolist() == [3.0, 7.0]
-        two = np.array([[1.0, 2.0], [9.0, 9.0]])
-        picks = {tuple(select_partition_best_fitness(two, rng)) for _ in range(30)}
-        assert picks == {(1.0, 2.0), (9.0, 9.0)}

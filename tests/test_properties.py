@@ -6,7 +6,6 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from mopso_engine.functions import euclidean, weight_vector, weighted_euclidean
 from mopso_engine.pareto import (
     Archive,
     ArchiveEntry,
@@ -93,21 +92,6 @@ def test_velocity_resample_respects_bounds(seed):
     np.testing.assert_allclose(new_pos, pos + new_vel)
 
 
-@given(
-    st.lists(st.floats(0.125, 100, allow_nan=False, width=32), min_size=2, max_size=16),
-    st.lists(st.floats(-100, 100, allow_nan=False, width=32), min_size=2, max_size=16),
-)
-@settings(max_examples=100, deadline=None)
-def test_weighted_euclidean_properties(x, y):
-    n = min(len(x), len(y))
-    x, y = np.array(x[:n]), np.array(y[:n])
-    assert weighted_euclidean(x, x) == pytest.approx(0.0, abs=1e-9)
-    assert weighted_euclidean(x, y, variant="sum") >= 0
-    w = weight_vector(x, variant="sum")
-    assert w.sum() == pytest.approx(1.0)
-    assert euclidean(x, y) == pytest.approx(float(np.linalg.norm(x - y)), rel=1e-9)
-
-
 @given(st.integers(0, 1000))
 @settings(max_examples=50, deadline=None)
 def test_canonicalize_sorts_by_first_coord(seed):
@@ -116,17 +100,6 @@ def test_canonicalize_sorts_by_first_coord(seed):
     cc = canonicalize_centers(c)
     assert (np.diff(cc[:, 0]) >= 0).all()
     assert sorted(map(tuple, c.tolist())) == sorted(map(tuple, cc.tolist()))
-
-
-def test_global_best_new_least_crowded():
-    rng = np.random.default_rng(0)
-    a = Archive(capacity=15)
-    a.update(
-        [ArchiveEntry(np.zeros((1, 1)), np.array(f, dtype=float)) for f in [(1, 10), (2, 8), (3, 7), (9, 1)]]
-    )
-    # 10%+1 of 4 = 1 → always the least-crowded (smallest crowding) row
-    picks = {tuple(a.global_best_new(rng).fitness) for _ in range(10)}
-    assert len(picks) == 1
 
 
 @given(st.integers(0, 10_000), st.integers(3, 8), st.integers(1, 3))

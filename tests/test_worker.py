@@ -122,7 +122,7 @@ def _knn(df, scope, packed):
 
 
 def _exact_math_pairs(df):
-    table = O.knn_pairs_exact(df, 5, exact_math=True)
+    table = O.knn_pairs_exact(df, 5)
     table.collect()
     O._release_knn(table)
 
